@@ -60,8 +60,8 @@ def _current_version(state_dir: str) -> int | None:
 
 
 def _read_manifest(state_dir: str, version: int | None) -> dict | None:
-    """Bucket manifest of a state version, or None for an unbucketed
-    (monolithic-snapshot) version.  Shape:
+    """Bucket manifest of a state version, or None when there is no
+    state or the version is a legacy manifest-less snapshot.  Shape:
     ``{"n_buckets": N, "buckets": {"<bucket>": <version holding it>}}``."""
     if version is None:
         return None
@@ -126,6 +126,37 @@ def prune_state_versions(state_dir: str, keep: int = 3) -> list[int]:
     return sorted(removed)
 
 
+def _publish_version(
+    state_dir: str,
+    version: int,
+    n_buckets: int,
+    held: dict[str, int],
+    retain_versions: int = 3,
+) -> None:
+    """Commit the fully written ``v{version}`` — the one publish step
+    every state writer shares.  The manifest maps each bucket to the
+    version holding it: ``held`` (buckets kept from older versions)
+    updated with the ``bkt=`` partition directories just written, a
+    local listing instead of a Spark collect.  Then the ``_CURRENT``
+    swap, the commit point (write-new-part-then-swap, as ClickHouse
+    merges do: a crash before it leaves readable state untouched), then
+    the retention prune, which runs only after the swap."""
+    import json
+
+    vdir = os.path.join(state_dir, f"v{version}")
+    buckets = dict(held)
+    for d in os.listdir(vdir):
+        if d.startswith("bkt="):
+            buckets[d.split("=", 1)[1]] = version
+    with open(os.path.join(vdir, "_MANIFEST.json"), "w") as f:
+        json.dump({"n_buckets": n_buckets, "buckets": buckets}, f)
+    tmp = _current_marker(state_dir) + ".tmp"
+    with open(tmp, "w") as f:
+        f.write(str(version))
+    os.replace(tmp, _current_marker(state_dir))
+    prune_state_versions(state_dir, keep=retain_versions)
+
+
 def read_state(
     spark: SparkSession, state_dir: str, include_tombstones: bool = False
 ) -> DataFrame | None:
@@ -141,6 +172,8 @@ def read_state(
         return None
     manifest = _read_manifest(state_dir, v)
     if manifest is None:
+        # legacy layout: parquet straight in v{N}, no manifest; the next
+        # one-bucket merge republishes it with a manifest
         df = spark.read.parquet(os.path.join(state_dir, f"v{v}"))
     else:
         bucketed = _read_buckets(
@@ -185,6 +218,19 @@ def _read_buckets(
     return df
 
 
+def _run_available_now(stream: DataFrame, checkpoint_dir: str, fn) -> None:
+    """Drain everything available now through ``fn(batch, batch_id)``
+    (``foreachBatch`` under Trigger.AvailableNow), with checkpointing
+    standing in for Kafka Connect offset storage."""
+    (
+        stream.writeStream.foreachBatch(fn)
+        .option("checkpointLocation", checkpoint_dir)
+        .trigger(availableNow=True)
+        .start()
+        .awaitTermination()
+    )
+
+
 def run_cdc_pipeline(
     stream: DataFrame,
     payload_schema: T.StructType,
@@ -195,115 +241,91 @@ def run_cdc_pipeline(
     apply_deletes: bool = False,
     dlq_dir: str | None = None,
     retain_versions: int = 3,
-    n_buckets: int | None = None,
+    n_buckets: int = 1,
 ) -> None:
-    """Run the full pipeline until no more input (Trigger.AvailableNow).
+    """Run the full pipeline until no more input (Trigger.AvailableNow):
+    every record, whatever its topic, merges into the one table at
+    ``state_dir`` — the one-table case of ``run_multi_table_pipeline``.
 
-    ``n_buckets`` switches the state layout to bucket-level
-    copy-on-write (``_merge_batch_bucketed``): per-batch merge work
-    becomes O(batch + touched buckets) instead of O(state) — the
-    setting for state that dwarfs its micro-batches.  Default keeps
-    the monolithic snapshot (simplest, fine while state is
-    batch-sized).
+    Per micro-batch (``_merge_batch``): parse envelope (PERMISSIVE —
+    corrupt rows dropped, mirroring errors.tolerance=all), drop
+    tombstones (null value, setup.sh:94,107), drop deletes (default,
+    SURVEY.md section 0), then merge batch with existing state under
+    LWW and publish a new state version.
 
-    Per micro-batch: parse envelope (PERMISSIVE — corrupt rows dropped,
-    mirroring errors.tolerance=all), drop tombstones (null value,
-    setup.sh:94,107), drop deletes (default, SURVEY.md section 0),
-    then merge batch with existing state under LWW and publish a new
-    state snapshot.
+    State is hash-bucketed by key into ``n_buckets`` buckets behind a
+    per-version manifest; a commit rewrites only the buckets its keys
+    touch.  The default single bucket rewrites the whole (batch-sized)
+    state each commit without computing the touched set; more buckets
+    pay off once state dwarfs its micro-batches.  ``n_buckets`` is
+    fixed when the state is created and checked on every commit.
 
-    ``dlq_dir`` routes corrupt wire records (parse failures) to an
-    append-only dead-letter parquet — raw bytes preserved untouched
-    with their offset and micro-batch id, so the DLQ is REPLAYABLE
-    after a parser fix (the errors.deadletterqueue.* half of the
-    reference's errors.tolerance=all story, setup.sh:145-147; without
-    it tolerated rows vanish silently).  The q_dlq_stats classifier
-    runs over exactly this output.
+    ``dlq_dir`` routes corrupt wire records (parse failures) to a
+    dead-letter parquet at ``dlq_dir/batch_id=N`` — raw bytes preserved
+    untouched with their offset, so the DLQ is REPLAYABLE after a
+    parser fix (the errors.deadletterqueue.* half of the reference's
+    errors.tolerance=all story, setup.sh:145-147; without it tolerated
+    rows vanish silently).  The q_dlq_stats classifier runs over
+    exactly this output.
 
     State is a versioned directory (v0, v1, ...) with a ``_CURRENT``
-    pointer flipped after the new snapshot is fully written — the same
-    write-new-part-then-swap discipline ClickHouse merges use, so a
+    pointer flipped after the new version is fully written, so a
     mid-write crash never corrupts readable state, the merge never
     overwrites its own input, and nothing round-trips through the
     driver.  Re-running a batch after failure converges (LWW is
     idempotent); with a lakehouse table format the body becomes a
     single MERGE INTO keyed on ``keys``.
     """
-    spark = stream.sparkSession
-
-    def upsert(batch: DataFrame, batch_id: int) -> None:
-        parsed = None
-        if dlq_dir is not None:
-            # parse ONCE: this parsed frame feeds both the corrupt DLQ
-            # slice and (minus the raw bytes) the merge below — without
-            # the share, every micro-batch paid two full envelope-parse
-            # scans of the wire batch
-            wire = batch.filter(F.col("value").isNotNull())
-            parsed = parse_envelope(
-                wire.withColumn("_raw", F.col("value")), payload_schema
-            ).persist()
-            corrupt = parsed.filter(F.col("_corrupt")).select(
-                "_seq", F.col("_raw").alias("value")
-            )
-            # deterministic per-batch Hive-style subpath + overwrite,
-            # NOT a flat append: foreachBatch is at-least-once, so a
-            # micro-batch replayed after a crash (e.g. _merge_batch
-            # throws after the DLQ write, or the crash lands before
-            # the checkpoint commit) re-runs this write — overwriting
-            # the same batch_id=N directory replaces its own previous
-            # output instead of appending duplicates, which keeps the
-            # DLQ directly replayable without consumer-side dedup.
-            # Readers of dlq_dir recover the micro-batch id as the
-            # `batch_id` partition column.
-            corrupt.write.mode("overwrite").parquet(
-                os.path.join(dlq_dir, f"batch_id={batch_id}")
-            )
-        try:
-            pre = parsed.drop("_raw") if parsed is not None else None
-            if n_buckets is not None:
-                _merge_batch_bucketed(
-                    spark, batch, payload_schema, state_dir, keys, version_cols,
-                    apply_deletes, n_buckets, retain_versions, parsed=pre,
-                )
-            else:
-                _merge_batch(
-                    spark, batch, payload_schema, state_dir, keys, version_cols,
-                    apply_deletes, retain_versions, parsed=pre,
-                )
-        finally:
-            if parsed is not None:
-                parsed.unpersist()
-
-    (
-        stream.writeStream.foreachBatch(upsert)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
+    _run_tables(
+        stream, checkpoint_dir, {None: (payload_schema, keys, state_dir, dlq_dir)},
+        version_cols, apply_deletes, retain_versions, n_buckets,
     )
 
 
-def _parse_clean(
-    batch: DataFrame,
-    payload_schema: T.StructType,
+def _run_tables(
+    stream: DataFrame,
+    checkpoint_dir: str,
+    tables: dict[str | None, tuple],
+    version_cols: Sequence[str],
     apply_deletes: bool,
-    parsed: DataFrame | None = None,
-) -> DataFrame:
-    """Wire micro-batch -> clean payload rows: tombstone drop, envelope
-    parse (PERMISSIVE), corrupt drop, delete drop (default mode).
-    NULL-safe on op: a source without an op column (e.g. the Kafka
-    wrapper emits op=NULL) must pass everything through, not drop every
-    row on a NULL predicate.  ``parsed`` accepts an already-parsed
-    frame (the DLQ path shares one envelope parse between the corrupt
-    slice and the merge) — the tombstone/corrupt/delete filters still
-    apply."""
-    if parsed is None:
-        clean = batch.filter(F.col("value").isNotNull())
-        parsed = parse_envelope(clean, payload_schema)
-    rows = parsed.filter(~F.col("_corrupt")).drop("_corrupt")
-    if not apply_deletes:
-        rows = rows.filter((F.col("op") != "d") | F.col("op").isNull())
-    return rows
+    retain_versions: int,
+    n_buckets: int,
+    topic_re: str | None = None,
+) -> None:
+    """The loop both CDC pipelines run: ``tables`` maps a table name to
+    its (payload schema, keys, state dir, DLQ dir).  With ``topic_re`` each
+    micro-batch is routed by topic into per-table slices; without it
+    the one table takes every record."""
+    spark = stream.sparkSession
+
+    def merge(table: str | None, batch: DataFrame, batch_id: int) -> None:
+        schema, keys, state_dir, dlq_dir = tables[table]
+        _merge_batch(
+            spark, batch, schema, state_dir, keys, version_cols, apply_deletes,
+            n_buckets, retain_versions, dlq_dir, batch_id,
+        )
+
+    def commit(batch: DataFrame, batch_id: int) -> None:
+        if topic_re is None:
+            (table,) = tables
+            merge(table, batch, batch_id)
+            return
+        # persisted because 1 + |tables| jobs consume the routed batch
+        # (the distinct-table collect plus one filtered slice per
+        # table): without it every table's merge re-reads and
+        # re-routes the SOURCE micro-batch
+        routed = batch.withColumn(
+            "_table", F.regexp_extract("topic", topic_re, 1)
+        ).persist()
+        try:
+            for r in routed.select("_table").distinct().collect():
+                if r._table in tables:
+                    slice_df = routed.filter(F.col("_table") == r._table)
+                    merge(r._table, slice_df.drop("_table"), batch_id)
+        finally:
+            routed.unpersist()
+
+    _run_available_now(stream, checkpoint_dir, commit)
 
 
 def _merge_batch(
@@ -314,130 +336,106 @@ def _merge_batch(
     keys: Sequence[str],
     version_cols: Sequence[str],
     apply_deletes: bool,
+    n_buckets: int = 1,
     retain_versions: int = 3,
-    parsed: DataFrame | None = None,
+    dlq_dir: str | None = None,
+    batch_id: int = 0,
 ) -> None:
-    """One micro-batch of one table: parse, filter, LWW-merge, publish."""
-    # symmetric twin of the bucketed path's guard: a monolithic merge
-    # on bucketed state would silently read the whole state through the
-    # manifest, rewrite it as a manifest-less snapshot (an O(|state|)
-    # rewrite the bucket layout exists to avoid), and destroy the
-    # copy-on-write layout — refuse instead of converting
-    prev = _current_version(state_dir)
-    if prev is not None and _read_manifest(state_dir, prev) is not None:
-        raise ValueError(
-            f"{state_dir} holds bucketed state; run with the same n_buckets "
-            "instead of the monolithic merge (rebucketing requires an "
-            "explicit rewrite)"
-        )
-    rows = _parse_clean(batch, payload_schema, apply_deletes, parsed=parsed)
-    existing = read_state(spark, state_dir, include_tombstones=True)
-    if existing is not None:
-        rows = existing.unionByName(rows, allowMissingColumns=True)
-    merged = lww_dedup(rows, keys, version_cols)
-    # Deletes are KEPT in the persisted state as tombstone rows
-    # (op='d' version winners).  Filtering them out here would let
-    # a re-delivered older event in a later micro-batch win LWW
-    # against an absent key and resurrect it; the tombstone must
-    # stay to outrank re-deliveries.  read_state() hides them.
-    prev = _current_version(state_dir)
-    nxt = 0 if prev is None else prev + 1
-    merged.write.mode("overwrite").parquet(os.path.join(state_dir, f"v{nxt}"))
-    os.makedirs(state_dir, exist_ok=True)
-    tmp = _current_marker(state_dir) + ".tmp"
-    with open(tmp, "w") as f:
-        f.write(str(nxt))
-    os.replace(tmp, _current_marker(state_dir))
-    # after the swap: old snapshots beyond the retention window go —
-    # without this, state disk grows linearly with micro-batch count
-    prune_state_versions(state_dir, keep=retain_versions)
-
-
-def _merge_batch_bucketed(
-    spark: SparkSession,
-    batch: DataFrame,
-    payload_schema: T.StructType,
-    state_dir: str,
-    keys: Sequence[str],
-    version_cols: Sequence[str],
-    apply_deletes: bool,
-    n_buckets: int,
-    retain_versions: int = 3,
-    parsed: DataFrame | None = None,
-) -> None:
-    """Incremental keyed merge with bucket-level copy-on-write — the
-    scale path ``_merge_batch`` cannot be: the monolithic merge unions
-    the WHOLE existing state into every micro-batch and rewrites all of
-    it, O(|state|) work per batch, untenable once state dwarfs batches
-    (a 100 TB mirror absorbing MB-sized batches).
+    """One micro-batch of one table: layout check, envelope parse, DLQ,
+    LWW merge with bucket-level copy-on-write, publish.
 
     Layout: state rows are hash-bucketed by key
     (``pmod(xxhash64(keys), n_buckets)``, engine-stable), each version
     directory holds only the buckets ITS batch touched
     (``vN/bkt=i/``), and an underscore-hidden ``_MANIFEST.json`` maps
     every bucket to the version that currently holds it.  A micro-batch
-    therefore: computes its touched buckets (bounded driver list,
-    <= n_buckets), reads exactly those buckets through the manifest,
-    LWW-merges them with the batch, writes only them into the new
-    version, and publishes manifest+_CURRENT with the same
-    write-then-swap discipline — per-batch work is
-    O(|batch| + |touched buckets|), never O(|state|).  This is the
-    parts-plus-manifest scheme of ReplacingMergeTree / lakehouse MERGE
-    re-expressed on plain parquet; with Delta/Iceberg the manifest is
-    the table format's job.  Schema evolution rides free: only touched
-    buckets rewrite with the widened schema and the manifest read
-    unionByName-fills the rest.
+    reads exactly its touched buckets through the manifest, LWW-merges
+    them with the batch, writes only them into the new version, and
+    publishes manifest+_CURRENT (``_publish_version``) — per-batch work
+    is O(|batch| + |touched buckets|).  This is the parts-plus-manifest
+    scheme of ReplacingMergeTree / lakehouse MERGE re-expressed on
+    plain parquet.  Schema evolution rides free: only touched buckets
+    rewrite with the widened schema and the manifest read
+    unionByName-fills the rest.  With one bucket (the default) the
+    touched set is the whole state, so it is not computed.
 
-    Tombstone and replay semantics are identical to ``_merge_batch``
-    (LWW is idempotent; re-delivered batches converge).  ``n_buckets``
-    is fixed at state creation and enforced against the manifest —
-    changing it requires a rebucketing rewrite, exactly like changing
-    a table's bucket count."""
-    rows = _parse_clean(batch, payload_schema, apply_deletes, parsed=parsed)
+    ``n_buckets`` is fixed at state creation and checked against the
+    manifest before anything is written — changing it requires a
+    rebucketing rewrite, exactly like changing a table's bucket count.
+    LWW is idempotent, so a re-delivered batch converges."""
     prev = _current_version(state_dir)
     manifest = _read_manifest(state_dir, prev)
-    if prev is not None and manifest is None:
+    # a manifest-less (legacy monolithic) snapshot is one bucket
+    have = 1 if manifest is None else manifest["n_buckets"]
+    if prev is not None and have != n_buckets:
         raise ValueError(
-            f"{state_dir} holds unbucketed state; bucketed merge would corrupt it"
+            f"{state_dir} holds bucketed state with n_buckets={have}, commit asked "
+            f"n_buckets={n_buckets}; rebucketing requires an explicit rewrite"
         )
-    if manifest is not None and manifest["n_buckets"] != n_buckets:
-        raise ValueError(
-            f"state has n_buckets={manifest['n_buckets']}, merge asked {n_buckets}; "
-            "rebucketing requires a full rewrite"
-        )
-    # persisted because TWO jobs consume the parsed batch: the touched-
-    # bucket collect below and the merge write — without it the
-    # envelope parse runs twice per micro-batch
-    batch_rows = rows.withColumn("bkt", _bucket_col(keys, n_buckets)).persist()
+    nxt = 0 if prev is None else prev + 1
+    wire = batch.filter(F.col("value").isNotNull())
+    parsed = parse_envelope(wire.withColumn("_raw", F.col("value")), payload_schema)
+    cached = []
     try:
-        touched = sorted(r.bkt for r in batch_rows.select("bkt").distinct().collect())
-        if not touched:
-            return  # empty/corrupt-only batch: state and manifest stand
-        merge_input = batch_rows
-        if manifest is not None:
-            existing = _read_buckets(spark, state_dir, manifest, touched)
-            if existing is not None:
-                merge_input = existing.unionByName(
-                    batch_rows, allowMissingColumns=True
-                )
-        merged = lww_dedup(merge_input, keys, version_cols)
-        nxt = 0 if prev is None else prev + 1
-        vdir = os.path.join(state_dir, f"v{nxt}")
-        merged.write.mode("overwrite").partitionBy("bkt").parquet(vdir)
+        if dlq_dir is not None:
+            # parse ONCE: this parsed frame feeds both the corrupt DLQ
+            # slice and (minus the raw bytes) the merge below
+            parsed = parsed.persist()
+            cached.append(parsed)
+            # deterministic per-batch Hive-style subpath + overwrite,
+            # NOT a flat append: foreachBatch is at-least-once, so a
+            # micro-batch replayed after a crash re-runs this write —
+            # overwriting the same batch_id=N directory replaces its own
+            # previous output instead of appending duplicates, which
+            # keeps the DLQ directly replayable without consumer-side
+            # dedup.  Readers of dlq_dir recover the micro-batch id as
+            # the `batch_id` partition column.
+            parsed.filter(F.col("_corrupt")).select(
+                "_seq", F.col("_raw").alias("value")
+            ).write.mode("overwrite").parquet(
+                os.path.join(dlq_dir, f"batch_id={batch_id}")
+            )
+        rows = parsed.filter(~F.col("_corrupt")).drop("_corrupt", "_raw")
+        if not apply_deletes:
+            # NULL-safe on op: a source without an op column (e.g. the
+            # Kafka wrapper emits op=NULL) must pass everything through
+            rows = rows.filter((F.col("op") != "d") | F.col("op").isNull())
+        if n_buckets == 1:
+            existing = read_state(spark, state_dir, include_tombstones=True)
+        else:
+            # persisted because TWO jobs consume the parsed batch: the
+            # touched-bucket collect below and the merge write
+            rows = rows.persist()
+            cached.append(rows)
+            touched = sorted(
+                r.bkt
+                for r in rows.select(_bucket_col(keys, n_buckets).alias("bkt"))
+                .distinct()
+                .collect()
+            )
+            if not touched:
+                return  # empty/corrupt-only batch: state and manifest stand
+            existing = (
+                _read_buckets(spark, state_dir, manifest, touched) if manifest else None
+            )
+        if existing is not None:
+            rows = existing.drop("bkt").unionByName(rows, allowMissingColumns=True)
+        # Deletes are KEPT in the persisted state as tombstone rows
+        # (op='d' version winners).  Filtering them out here would let
+        # a re-delivered older event in a later micro-batch win LWW
+        # against an absent key and resurrect it; the tombstone must
+        # stay to outrank re-deliveries.  read_state() hides them.
+        merged = lww_dedup(rows, keys, version_cols)
+        merged.withColumn("bkt", _bucket_col(keys, n_buckets)).write.mode(
+            "overwrite"
+        ).partitionBy("bkt").parquet(os.path.join(state_dir, f"v{nxt}"))
     finally:
-        batch_rows.unpersist()
-    new_buckets = dict(manifest["buckets"]) if manifest is not None else {}
-    new_buckets.update({str(b): nxt for b in touched})
-    import json
-
-    with open(os.path.join(vdir, "_MANIFEST.json"), "w") as f:
-        json.dump({"n_buckets": n_buckets, "buckets": new_buckets}, f)
-    os.makedirs(state_dir, exist_ok=True)
-    tmp = _current_marker(state_dir) + ".tmp"
-    with open(tmp, "w") as f:
-        f.write(str(nxt))
-    os.replace(tmp, _current_marker(state_dir))
-    prune_state_versions(state_dir, keep=retain_versions)
+        for df in cached:
+            df.unpersist()
+    _publish_version(
+        state_dir, nxt, n_buckets, manifest["buckets"] if manifest else {},
+        retain_versions,
+    )
 
 
 def _bucket_col(keys: Sequence[str], n_buckets: int) -> F.Column:
@@ -453,7 +451,7 @@ def seed_state(
     state_dir: str,
     keys: Sequence[str],
     version_cols: Sequence[str],
-    n_buckets: int | None = None,
+    n_buckets: int = 1,
 ) -> None:
     """``snapshot.mode=initial`` twin (reference setup.sh:92): publish
     a consistent initial table snapshot as the FIRST state version so
@@ -464,8 +462,8 @@ def seed_state(
     ``_seq=0`` when absent, so any changelog event (``_seq >= 1``)
     with an equal-or-newer version tuple outranks them — the handoff
     needs no coordination beyond per-key LWW (the q_snapshot_handoff
-    registry query proves exactly this algebra in batch).  Passing
-    ``n_buckets`` seeds the bucketed copy-on-write layout instead.
+    registry query proves exactly this algebra in batch).  ``n_buckets``
+    fixes the state's bucket count for every later merge.
     Refuses a non-empty state dir: seeding is bootstrap, not merge."""
     if _current_version(state_dir) is not None:
         raise ValueError(f"{state_dir} already holds state; refusing to seed")
@@ -476,37 +474,17 @@ def seed_state(
         rows = rows.withColumn("_seq", F.lit(0).cast("long"))
     # a snapshot re-read under load may carry per-key duplicates
     rows = lww_dedup(rows, keys, version_cols)
-    vdir = os.path.join(state_dir, "v0")
-    if n_buckets is not None:
-        rows = rows.withColumn("bkt", _bucket_col(keys, n_buckets))
-        rows.write.mode("overwrite").partitionBy("bkt").parquet(vdir)
-        # the written partition dirs ARE the bucket list — a local
-        # listing instead of recomputing the snapshot for a collect
-        buckets = sorted(
-            int(d.split("=", 1)[1])
-            for d in os.listdir(vdir)
-            if d.startswith("bkt=")
-        )
-        import json
-
-        with open(os.path.join(vdir, "_MANIFEST.json"), "w") as f:
-            json.dump(
-                {"n_buckets": n_buckets, "buckets": {str(b): 0 for b in buckets}}, f
-            )
-    else:
-        rows.write.mode("overwrite").parquet(vdir)
-    os.makedirs(state_dir, exist_ok=True)
-    tmp = _current_marker(state_dir) + ".tmp"
-    with open(tmp, "w") as f:
-        f.write("0")
-    os.replace(tmp, _current_marker(state_dir))
+    rows.withColumn("bkt", _bucket_col(keys, n_buckets)).write.mode(
+        "overwrite"
+    ).partitionBy("bkt").parquet(os.path.join(state_dir, "v0"))
+    _publish_version(state_dir, 0, n_buckets, {})
 
 
 def compact_state(
     spark: SparkSession, state_dir: str, retain_versions: int = 3
 ) -> int | None:
     """Rewrite every live bucket into ONE fresh version — the
-    ``OPTIMIZE TABLE ... FINAL`` analog for the bucketed layout.
+    ``OPTIMIZE TABLE ... FINAL`` analog.
 
     ``retain_versions`` defaults to the merge paths' keep window (3) so
     a reader that resolved ``_CURRENT`` just before the swap can still
@@ -519,38 +497,26 @@ def compact_state(
     case ~2x state after every bucket of a full initial version has
     been rewritten once elsewhere).  Compaction reads the current state
     through the manifest, writes all buckets into a single new version
-    with a self-contained manifest, swaps ``_CURRENT``, and lets the
+    with a self-contained manifest, publishes it, and lets the
     now-unreferenced old versions age out through the normal retention
     prune.  Same crash discipline as the merge: the swap is the commit
-    point, a crash before it changes nothing.  No-op (returns None) on
-    empty or unbucketed state; otherwise returns the new version."""
+    point, a crash before it changes nothing.  No-op (returns None)
+    when every bucket already lives in the current version — nothing
+    to gather (empty state, one bucket, a commit that touched every
+    bucket, a legacy manifest-less snapshot); otherwise returns the new
+    version."""
     prev = _current_version(state_dir)
     manifest = _read_manifest(state_dir, prev)
-    if manifest is None:
+    if manifest is None or all(v == prev for v in manifest["buckets"].values()):
         return None
     df = _read_buckets(
         spark, state_dir, manifest, [int(b) for b in manifest["buckets"]]
     )
-    if df is None:
-        return None
     nxt = prev + 1
-    vdir = os.path.join(state_dir, f"v{nxt}")
-    df.write.mode("overwrite").partitionBy("bkt").parquet(vdir)
-    import json
-
-    with open(os.path.join(vdir, "_MANIFEST.json"), "w") as f:
-        json.dump(
-            {
-                "n_buckets": manifest["n_buckets"],
-                "buckets": {b: nxt for b in manifest["buckets"]},
-            },
-            f,
-        )
-    tmp = _current_marker(state_dir) + ".tmp"
-    with open(tmp, "w") as f:
-        f.write(str(nxt))
-    os.replace(tmp, _current_marker(state_dir))
-    prune_state_versions(state_dir, keep=retain_versions)
+    df.write.mode("overwrite").partitionBy("bkt").parquet(
+        os.path.join(state_dir, f"v{nxt}")
+    )
+    _publish_version(state_dir, nxt, manifest["n_buckets"], {}, retain_versions)
     return nxt
 
 
@@ -567,7 +533,8 @@ def run_multi_table_pipeline(
     apply_deletes: bool = False,
     topic_re: str = TOPIC_TABLE_RE,
     retain_versions: int = 3,
-    n_buckets: int | None = None,
+    n_buckets: int = 1,
+    dlq_dir: str | None = None,
 ) -> None:
     """N mirrored tables on ONE changelog stream — the reference's
     actual shape (all tables of the ``iman`` schema flow through the
@@ -575,51 +542,23 @@ def run_multi_table_pipeline(
     dynamic discovery from the catalog, setup.sh:29-32).
 
     Each micro-batch is routed by topic into per-table slices, each
-    LWW-merged into its own versioned state directory under
-    ``state_root/<table>``.  The driver-side loop is over the handful
-    of DISTINCT TABLES in the batch (not rows), so at 100 TB the only
-    growth is one merge job per table — each internally parallel.
+    committed exactly as ``run_cdc_pipeline`` commits its one table,
+    into its own versioned state directory under ``state_root/<table>``
+    with corrupt records in ``dlq_dir/<table>/batch_id=N``.  The
+    driver-side loop is over the handful of DISTINCT TABLES in the
+    batch (not rows), so at 100 TB the only growth is one merge job per
+    table — each internally parallel.
     """
-    spark = stream.sparkSession
-
-    def upsert(batch: DataFrame, batch_id: int) -> None:
-        # persisted because 1 + |tables| jobs consume the routed batch
-        # (the distinct-table collect plus one filtered slice per
-        # table): without it every table's merge re-reads and
-        # re-routes the SOURCE micro-batch — per-batch cost linear in
-        # table count times batch scan cost (same reason the bucketed
-        # merge persists its parsed batch)
-        routed = batch.withColumn(
-            "_table", F.regexp_extract("topic", topic_re, 1)
-        ).persist()
-        try:
-            present = [
-                r._table
-                for r in routed.select("_table").distinct().collect()
-                if r._table in schemas
-            ]
-            for t in present:
-                slice_df = routed.filter(F.col("_table") == t).drop("_table")
-                table_state = os.path.join(state_root, t)
-                if n_buckets is not None:
-                    _merge_batch_bucketed(
-                        spark, slice_df, schemas[t], table_state, keys[t],
-                        version_cols, apply_deletes, n_buckets, retain_versions,
-                    )
-                else:
-                    _merge_batch(
-                        spark, slice_df, schemas[t], table_state, keys[t],
-                        version_cols, apply_deletes, retain_versions,
-                    )
-        finally:
-            routed.unpersist()
-
-    (
-        stream.writeStream.foreachBatch(upsert)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
+    tables = {
+        t: (
+            schema, keys[t], os.path.join(state_root, t),
+            None if dlq_dir is None else os.path.join(dlq_dir, t),
+        )
+        for t, schema in schemas.items()
+    }
+    _run_tables(
+        stream, checkpoint_dir, tables, version_cols, apply_deletes,
+        retain_versions, n_buckets, topic_re,
     )
 
 
@@ -841,7 +780,7 @@ def bootstrap_pipeline(
     version_cols: Sequence[str],
     schema: str = "iman",
     apply_deletes: bool = False,
-    n_buckets: int | None = None,
+    n_buckets: int = 1,
 ) -> dict[str, T.StructType]:
     """The reference's entry point A (setup.sh bootstrap) end-to-end:
     catalog discovery -> per-table Spark schemas -> keyed multi-table
@@ -1058,20 +997,12 @@ def run_slot_lag_monitor(
             )
         nxt = 0 if prev is None else prev + 1
         vdir = os.path.join(state_dir, f"v{nxt}")
-        agg.write.mode("overwrite").parquet(vdir)
+        # topic-cardinality state: one bucket, rewritten whole
+        agg.withColumn("bkt", F.lit(0)).write.mode("overwrite").partitionBy(
+            "bkt"
+        ).parquet(vdir)
         with open(os.path.join(vdir, "_BATCH_ID"), "w") as f:
             f.write(str(batch_id))
-        os.makedirs(state_dir, exist_ok=True)
-        tmp = _current_marker(state_dir) + ".tmp"
-        with open(tmp, "w") as f:
-            f.write(str(nxt))
-        os.replace(tmp, _current_marker(state_dir))
-        prune_state_versions(state_dir)
+        _publish_version(state_dir, nxt, 1, {})
 
-    (
-        stream.writeStream.foreachBatch(update)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+    _run_available_now(stream, checkpoint_dir, update)

@@ -310,7 +310,7 @@ def test_bucketed_state_copy_on_write(spark, tmp_path, users_schema):
     the first version keeps serving the untouched buckets through the
     manifest; manifest-aware retention must NOT prune the old version
     while its buckets are live, even at keep=1.  Final state equals the
-    monolithic pipeline's on the same wire."""
+    default one-bucket pipeline's on the same wire."""
     import os
     import re
 
@@ -349,7 +349,7 @@ def test_bucketed_state_copy_on_write(spark, tmp_path, users_schema):
     }
     assert _state_map(read_state(spark, state_dir)) == golden
 
-    # equivalence: the monolithic pipeline over the same wire files
+    # equivalence: the default one-bucket pipeline over the same wire files
     mono_state, mono_ckpt = str(tmp_path / "mstate"), str(tmp_path / "mckpt")
     run_cdc_pipeline(
         changelog_file_stream(spark, str(src)), users_schema, mono_state, mono_ckpt,
@@ -359,7 +359,7 @@ def test_bucketed_state_copy_on_write(spark, tmp_path, users_schema):
 
     # the bucket-count contract is enforced against the manifest
     from kafka_connect_postgres_to_clickhouse_spark.streaming.pipeline import (
-        _merge_batch_bucketed,
+        _merge_batch,
     )
 
     one = spark.createDataFrame(
@@ -367,7 +367,7 @@ def test_bucketed_state_copy_on_write(spark, tmp_path, users_schema):
         "_seq long, topic string, op string, value string",
     )
     with pytest.raises(ValueError, match="n_buckets"):
-        _merge_batch_bucketed(
+        _merge_batch(
             spark, one, users_schema, state_dir, KEYS, VERSION, False, n_buckets=4
         )
 
@@ -381,7 +381,7 @@ def test_bucketed_state_copy_on_write(spark, tmp_path, users_schema):
     versions = {d for d in os.listdir(state_dir) if re.fullmatch(r"v\d+", d)}
     assert versions == {"v2"}, f"compaction left {versions}"
     assert _state_map(read_state(spark, state_dir)) == golden
-    # unbucketed state: explicit no-op
+    # one bucket: every bucket already lives in the current version
     assert compact_state(spark, str(tmp_path / "mstate")) is None
 
 
@@ -901,7 +901,9 @@ def test_apply_deletes_tombstone_survives_redelivery(spark, tmp_path, users_sche
 def test_multi_table_pipeline_routes_by_topic(spark, tmp_path):
     """Two tables on one changelog stream: RegexRouter-style topic ->
     table routing, independent schemas and key columns, one state
-    directory per table (the reference's N-mirrored-tables shape)."""
+    directory per table (the reference's N-mirrored-tables shape), and
+    one DLQ per table: a truncated envelope lands in its own table's
+    dead-letter directory with its raw bytes intact."""
     from pyspark.sql import types as T
 
     from kafka_connect_postgres_to_clickhouse_spark.streaming.pipeline import (
@@ -939,6 +941,17 @@ def test_multi_table_pipeline_routes_by_topic(spark, tmp_path):
         wire(users_schema, "postgres_cdc.iman.users", [(1, "alice", t0), (1, "alice2", t1)], 1)
         + wire(items_schema, "postgres_cdc.iman.items", [(7, 9.99, t0)], 100)
     )
+    bad = {
+        "users": json.loads(
+            wire(users_schema, "postgres_cdc.iman.users", [(2, "bob", t0)], 50)[0]
+        ),
+        "items": json.loads(
+            wire(items_schema, "postgres_cdc.iman.items", [(8, 1.5, t0)], 150)[0]
+        ),
+    }
+    for rec in bad.values():
+        rec["value"] = rec["value"][:20]
+    lines += [json.dumps(rec) for rec in bad.values()]
     src = tmp_path / "multi"
     src.mkdir()
     (src / "all.json").write_text("\n".join(lines))
@@ -950,6 +963,7 @@ def test_multi_table_pipeline_routes_by_topic(spark, tmp_path):
         state_root=str(tmp_path / "state"),
         checkpoint_dir=str(tmp_path / "ckpt"),
         version_cols=["updated_at", "_seq"],
+        dlq_dir=str(tmp_path / "dlq"),
     )
     users = read_state(spark, str(tmp_path / "state" / "users"))
     items = read_state(spark, str(tmp_path / "state" / "items"))
@@ -965,11 +979,19 @@ def test_multi_table_pipeline_routes_by_topic(spark, tmp_path):
         checkpoint_dir=str(tmp_path / "bckpt"),
         version_cols=["updated_at", "_seq"],
         n_buckets=4,
+        dlq_dir=str(tmp_path / "bdlq"),
     )
     busers = read_state(spark, str(tmp_path / "bstate" / "users"))
     bitems = read_state(spark, str(tmp_path / "bstate" / "items"))
     assert {(r.user_id, r.username) for r in busers.collect()} == {(1, "alice2")}
     assert {(r.item_id, r.price) for r in bitems.collect()} == {(7, 9.99)}
+
+    for dlq in ("dlq", "bdlq"):
+        for t, rec in bad.items():
+            dead = spark.read.parquet(str(tmp_path / dlq / t)).collect()
+            assert [(r._seq, r.value, r.batch_id) for r in dead] == [
+                (rec["_seq"], rec["value"], 0)
+            ]
 
 
 def test_multimodal_resize_and_frame_sample(spark):
@@ -1649,9 +1671,10 @@ def test_pysource_stream_reader_durable_progress(tmp_path):
 
 
 def test_monolithic_merge_refuses_bucketed_state(spark, tmp_path, users_schema):
-    """Symmetric layout guard: running the pipeline WITHOUT n_buckets
-    over state that was created bucketed must raise, not silently
-    rewrite the copy-on-write layout into a monolithic snapshot."""
+    """Layout guard: running the pipeline at the default one bucket
+    over state that was created with n_buckets=8 must raise before
+    anything is written (no DLQ partition either), not silently
+    rewrite the copy-on-write layout into a one-bucket snapshot."""
     wire = _wire_rows(spark)
     src = tmp_path / "wire"
     src.mkdir()
@@ -1666,8 +1689,96 @@ def test_monolithic_merge_refuses_bucketed_state(spark, tmp_path, users_schema):
     with pytest.raises(Exception, match="bucketed state"):
         run_cdc_pipeline(
             changelog_file_stream(spark, str(src)), users_schema, state_dir,
-            str(tmp_path / "ck2"), KEYS, VERSION,
+            str(tmp_path / "ck2"), KEYS, VERSION, dlq_dir=str(tmp_path / "dlq"),
         )
+    assert not (tmp_path / "dlq").exists()
+
+
+def test_legacy_monolithic_state_stays_readable(spark, tmp_path, users_schema):
+    """States written before the manifest existed (parquet straight in
+    v0/, ``_CURRENT`` = 0, no ``_MANIFEST.json``) read through
+    ``read_state``, refuse a commit at another bucket count, and take a
+    default one-bucket commit on top that lands the golden fold and
+    publishes a manifest."""
+    from kafka_connect_postgres_to_clickhouse_spark.streaming.pipeline import (
+        _current_version,
+        _read_manifest,
+    )
+
+    state = tmp_path / "state"
+    inserts = (
+        reference_scenario_changelog(spark)
+        .filter(F.col("_seq") <= 3)
+        .select("_seq", "topic", "op", "user_id", "username", "account_type", "updated_at")
+    )
+    inserts.write.parquet(str(state / "v0"))
+    (state / "_CURRENT").write_text("0")
+    assert _state_map(read_state(spark, str(state))) == _state_map(inserts)
+
+    wire = _wire_rows(spark)
+    src = tmp_path / "wire"
+    src.mkdir()
+    _write_batch_file(src, "tail.json", [r for r in wire if r._seq >= 4])
+    with pytest.raises(Exception, match="n_buckets"):
+        run_cdc_pipeline(
+            changelog_file_stream(spark, str(src)), users_schema, str(state),
+            str(tmp_path / "ck8"), KEYS, VERSION, n_buckets=8,
+        )
+    assert _current_version(str(state)) == 0
+
+    run_cdc_pipeline(
+        changelog_file_stream(spark, str(src)), users_schema, str(state),
+        str(tmp_path / "ckpt"), KEYS, VERSION,
+    )
+    assert _state_map(read_state(spark, str(state))) == {
+        1: ("user1", "Bronze"),
+        2: ("user2", "Silver"),
+        3: ("user3", "Gold"),
+        999: ("updated_user", "Test"),
+    }
+    assert _read_manifest(str(state), _current_version(str(state))) == {
+        "n_buckets": 1,
+        "buckets": {"0": 1},
+    }
+
+
+def test_one_bucket_merge_runs_fewer_jobs(spark, tmp_path, users_schema):
+    """With one bucket the read set is the whole state, so the merge
+    skips the touched-bucket persist + collect: the same non-empty
+    batch on the same seeded state runs fewer Spark jobs at
+    n_buckets=1 than at n_buckets=8, with the same result."""
+    from kafka_connect_postgres_to_clickhouse_spark.streaming.pipeline import (
+        _merge_batch,
+        seed_state,
+    )
+
+    snap = (
+        reference_scenario_changelog(spark)
+        .filter(F.col("_seq") <= 3)
+        .select("user_id", "username", "account_type", "updated_at")
+    )
+    batch = spark.createDataFrame(
+        [(r._seq, r.topic, r.op, r.value) for r in _wire_rows(spark) if r._seq >= 4],
+        "_seq long, topic string, op string, value string",
+    )
+    sc = spark.sparkContext
+    jobs, states = {}, {}
+    for n in (1, 8):
+        state_dir = str(tmp_path / f"state{n}")
+        seed_state(spark, snap, state_dir, KEYS, VERSION, n_buckets=n)
+        group = f"one-merge-{n}"
+        sc.setJobGroup(group, f"merge at n_buckets={n}")
+        try:
+            _merge_batch(
+                spark, batch, users_schema, state_dir, KEYS, VERSION, False, n_buckets=n
+            )
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        jobs[n] = len(sc.statusTracker().getJobIdsForGroup(group))
+        states[n] = _state_map(read_state(spark, state_dir))
+    assert 0 < jobs[1] < jobs[8], jobs
+    assert states[1] == states[8]
 
 
 def test_multimodal_real_png_decode_and_resize(spark):
