@@ -21,7 +21,7 @@ from __future__ import annotations
 import os
 from collections.abc import Sequence
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -62,7 +62,9 @@ def _current_version(state_dir: str) -> int | None:
 def _read_manifest(state_dir: str, version: int | None) -> dict | None:
     """Bucket manifest of a state version, or None when there is no
     state or the version is a legacy manifest-less snapshot.  Shape:
-    ``{"n_buckets": N, "buckets": {"<bucket>": <version holding it>}}``."""
+    ``{"n_buckets": N, "buckets": {"<bucket>": <version holding it>},
+    "schema": <StructType JSON of the rows this version wrote>}``;
+    manifests written before the schema was recorded lack ``"schema"``."""
     if version is None:
         return None
     import json
@@ -131,16 +133,20 @@ def _publish_version(
     version: int,
     n_buckets: int,
     held: dict[str, int],
+    schema: T.StructType,
     retain_versions: int = 3,
 ) -> None:
     """Commit the fully written ``v{version}`` — the one publish step
     every state writer shares.  The manifest maps each bucket to the
     version holding it: ``held`` (buckets kept from older versions)
     updated with the ``bkt=`` partition directories just written, a
-    local listing instead of a Spark collect.  Then the ``_CURRENT``
-    swap, the commit point (write-new-part-then-swap, as ClickHouse
-    merges do: a crash before it leaves readable state untouched), then
-    the retention prune, which runs only after the swap."""
+    local listing instead of a Spark collect.  It also records
+    ``schema``, the schema of the rows written (without ``bkt``), so
+    reads of this version plan with no schema-inference job, the way a
+    part knows its own columns.  Then the ``_CURRENT`` swap, the commit
+    point (write-new-part-then-swap, as ClickHouse merges do: a crash
+    before it leaves readable state untouched), then the retention
+    prune, which runs only after the swap."""
     import json
 
     vdir = os.path.join(state_dir, f"v{version}")
@@ -148,8 +154,9 @@ def _publish_version(
     for d in os.listdir(vdir):
         if d.startswith("bkt="):
             buckets[d.split("=", 1)[1]] = version
+    manifest = {"n_buckets": n_buckets, "buckets": buckets, "schema": schema.jsonValue()}
     with open(os.path.join(vdir, "_MANIFEST.json"), "w") as f:
-        json.dump({"n_buckets": n_buckets, "buckets": buckets}, f)
+        json.dump(manifest, f)
     tmp = _current_marker(state_dir) + ".tmp"
     with open(tmp, "w") as f:
         f.write(str(version))
@@ -195,10 +202,13 @@ def _read_buckets(
     (copy-on-write: untouched buckets still live in older version
     dirs).  Reads are per-bucket directory paths, so a merge that
     wants 3 of 64 buckets lists and scans exactly those 3 — the
-    partition-pruning this layout exists for.  Schema differences
-    across versions (evolution rewrote touched buckets only) merge
-    via unionByName(allowMissingColumns=True).  Returns None when no
-    requested bucket has any state yet."""
+    partition-pruning this layout exists for.  Each version reads with
+    the schema its own manifest records, so planning the read runs no
+    Spark job; a manifest without one (written before schemas were
+    recorded) falls back to parquet schema inference.  Schema
+    differences across versions (evolution rewrote touched buckets
+    only) merge via unionByName(allowMissingColumns=True).  Returns
+    None when no requested bucket has any state yet."""
     held = manifest["buckets"]
     by_version: dict[int, list[int]] = {}
     for b in want:
@@ -209,7 +219,11 @@ def _read_buckets(
     for ver, buckets in sorted(by_version.items()):
         vdir = os.path.join(state_dir, f"v{ver}")
         paths = [os.path.join(vdir, f"bkt={b}") for b in sorted(buckets)]
-        parts.append(spark.read.option("basePath", vdir).parquet(*paths))
+        reader = spark.read.option("basePath", vdir)
+        schema = (_read_manifest(state_dir, ver) or {}).get("schema")
+        if schema is not None:
+            reader = reader.schema(T.StructType.fromJson(schema))
+        parts.append(reader.parquet(*paths))
     if not parts:
         return None
     df = parts[0]
@@ -291,11 +305,14 @@ def _run_tables(
     retain_versions: int,
     n_buckets: int,
     topic_re: str | None = None,
+    unrouted_dir: str | None = None,
 ) -> None:
     """The loop both CDC pipelines run: ``tables`` maps a table name to
     its (payload schema, keys, state dir, DLQ dir).  With ``topic_re`` each
-    micro-batch is routed by topic into per-table slices; without it
-    the one table takes every record."""
+    micro-batch is routed by topic into per-table slices, and records
+    whose topic names no table in ``tables`` go raw to
+    ``unrouted_dir/batch_id=N`` when it is set; without ``topic_re`` the
+    one table takes every record."""
     spark = stream.sparkSession
 
     def merge(table: str | None, batch: DataFrame, batch_id: int) -> None:
@@ -312,16 +329,25 @@ def _run_tables(
             return
         # persisted because 1 + |tables| jobs consume the routed batch
         # (the distinct-table collect plus one filtered slice per
-        # table): without it every table's merge re-reads and
-        # re-routes the SOURCE micro-batch
+        # table, and the unrouted slice when there is one): without it
+        # every table's merge re-reads and re-routes the SOURCE
+        # micro-batch
         routed = batch.withColumn(
             "_table", F.regexp_extract("topic", topic_re, 1)
         ).persist()
         try:
-            for r in routed.select("_table").distinct().collect():
-                if r._table in tables:
-                    slice_df = routed.filter(F.col("_table") == r._table)
-                    merge(r._table, slice_df.drop("_table"), batch_id)
+            names = [r._table for r in routed.select("_table").distinct().collect()]
+            if unrouted_dir is not None and not set(names) <= tables.keys():
+                # same per-batch overwrite as the corrupt-record DLQ
+                routed.filter(
+                    F.col("_table").isNull() | ~F.col("_table").isin(*tables)
+                ).select("_seq", "topic", "value").write.mode("overwrite").parquet(
+                    os.path.join(unrouted_dir, f"batch_id={batch_id}")
+                )
+            for name in names:
+                if name in tables:
+                    slice_df = routed.filter(F.col("_table") == name)
+                    merge(name, slice_df.drop("_table"), batch_id)
         finally:
             routed.unpersist()
 
@@ -348,16 +374,23 @@ def _merge_batch(
     (``pmod(xxhash64(keys), n_buckets)``, engine-stable), each version
     directory holds only the buckets ITS batch touched
     (``vN/bkt=i/``), and an underscore-hidden ``_MANIFEST.json`` maps
-    every bucket to the version that currently holds it.  A micro-batch
-    reads exactly its touched buckets through the manifest, LWW-merges
-    them with the batch, writes only them into the new version, and
-    publishes manifest+_CURRENT (``_publish_version``) — per-batch work
-    is O(|batch| + |touched buckets|).  This is the parts-plus-manifest
-    scheme of ReplacingMergeTree / lakehouse MERGE re-expressed on
-    plain parquet.  Schema evolution rides free: only touched buckets
-    rewrite with the widened schema and the manifest read
-    unionByName-fills the rest.  With one bucket (the default) the
-    touched set is the whole state, so it is not computed.
+    every bucket to the version that currently holds it and records the
+    version's schema.  A micro-batch reads exactly its touched buckets
+    through the manifest, LWW-merges them with the batch, writes only
+    them into the new version, and publishes manifest+_CURRENT
+    (``_publish_version``) — per-batch work is O(|batch| + |touched
+    buckets|).  This is the parts-plus-manifest scheme of
+    ReplacingMergeTree / lakehouse MERGE re-expressed on plain parquet.
+    Schema evolution rides free: only touched buckets rewrite with the
+    widened schema and the manifest read unionByName-fills the rest.
+
+    Spark work is one pass over the parsed batch plus the merge write;
+    the state read plans from the manifest with no job.  With more than
+    one bucket the parsed batch is persisted and the pass — the DLQ
+    write, or a ``noop`` write that fills the cache when there is no
+    DLQ — also collects the touched buckets through an ``Observation``,
+    so finding them costs no job of its own.  With one bucket (the
+    default) the touched set is the whole state, so it is not computed.
 
     ``n_buckets`` is fixed at state creation and checked against the
     manifest before anything is written — changing it requires a
@@ -375,13 +408,25 @@ def _merge_batch(
     nxt = 0 if prev is None else prev + 1
     wire = batch.filter(F.col("value").isNotNull())
     parsed = parse_envelope(wire.withColumn("_raw", F.col("value")), payload_schema)
-    cached = []
+    survives = ~F.col("_corrupt")
+    if not apply_deletes:
+        # NULL-safe on op: a source without an op column (e.g. the
+        # Kafka wrapper emits op=NULL) must pass everything through
+        survives = survives & ((F.col("op") != "d") | F.col("op").isNull())
+    touched = None
+    if n_buckets > 1:
+        touched = Observation()
+        parsed = parsed.observe(
+            touched,
+            F.collect_set(F.when(survives, _bucket_col(keys, n_buckets))).alias("bkt"),
+        )
+    # parse ONCE: the persisted frame feeds the batch pass below and
+    # (minus the raw bytes) the merge write
+    cached = dlq_dir is not None or touched is not None
+    if cached:
+        parsed = parsed.persist()
     try:
         if dlq_dir is not None:
-            # parse ONCE: this parsed frame feeds both the corrupt DLQ
-            # slice and (minus the raw bytes) the merge below
-            parsed = parsed.persist()
-            cached.append(parsed)
             # deterministic per-batch Hive-style subpath + overwrite,
             # NOT a flat append: foreachBatch is at-least-once, so a
             # micro-batch replayed after a crash re-runs this write —
@@ -395,29 +440,18 @@ def _merge_batch(
             ).write.mode("overwrite").parquet(
                 os.path.join(dlq_dir, f"batch_id={batch_id}")
             )
-        rows = parsed.filter(~F.col("_corrupt")).drop("_corrupt", "_raw")
-        if not apply_deletes:
-            # NULL-safe on op: a source without an op column (e.g. the
-            # Kafka wrapper emits op=NULL) must pass everything through
-            rows = rows.filter((F.col("op") != "d") | F.col("op").isNull())
-        if n_buckets == 1:
+        elif touched is not None:
+            parsed.write.format("noop").mode("overwrite").save()
+        if touched is None:
             existing = read_state(spark, state_dir, include_tombstones=True)
         else:
-            # persisted because TWO jobs consume the parsed batch: the
-            # touched-bucket collect below and the merge write
-            rows = rows.persist()
-            cached.append(rows)
-            touched = sorted(
-                r.bkt
-                for r in rows.select(_bucket_col(keys, n_buckets).alias("bkt"))
-                .distinct()
-                .collect()
-            )
-            if not touched:
+            want = sorted(touched.get["bkt"])
+            if not want:
                 return  # empty/corrupt-only batch: state and manifest stand
             existing = (
-                _read_buckets(spark, state_dir, manifest, touched) if manifest else None
+                _read_buckets(spark, state_dir, manifest, want) if manifest else None
             )
+        rows = parsed.filter(survives).drop("_corrupt", "_raw")
         if existing is not None:
             rows = existing.drop("bkt").unionByName(rows, allowMissingColumns=True)
         # Deletes are KEPT in the persisted state as tombstone rows
@@ -430,11 +464,11 @@ def _merge_batch(
             "overwrite"
         ).partitionBy("bkt").parquet(os.path.join(state_dir, f"v{nxt}"))
     finally:
-        for df in cached:
-            df.unpersist()
+        if cached:
+            parsed.unpersist()
     _publish_version(
         state_dir, nxt, n_buckets, manifest["buckets"] if manifest else {},
-        retain_versions,
+        merged.schema, retain_versions,
     )
 
 
@@ -477,7 +511,7 @@ def seed_state(
     rows.withColumn("bkt", _bucket_col(keys, n_buckets)).write.mode(
         "overwrite"
     ).partitionBy("bkt").parquet(os.path.join(state_dir, "v0"))
-    _publish_version(state_dir, 0, n_buckets, {})
+    _publish_version(state_dir, 0, n_buckets, {}, rows.schema)
 
 
 def compact_state(
@@ -516,11 +550,15 @@ def compact_state(
     df.write.mode("overwrite").partitionBy("bkt").parquet(
         os.path.join(state_dir, f"v{nxt}")
     )
-    _publish_version(state_dir, nxt, manifest["n_buckets"], {}, retain_versions)
+    _publish_version(
+        state_dir, nxt, manifest["n_buckets"], {}, df.drop("bkt").schema,
+        retain_versions,
+    )
     return nxt
 
 
 TOPIC_TABLE_RE = r"^postgres_cdc\.iman\.(.*)$"  # RegexRouter, setup.sh:119-126
+UNROUTED = "_unrouted"  # DLQ subdirectory of records no table takes
 
 
 def run_multi_table_pipeline(
@@ -544,11 +582,15 @@ def run_multi_table_pipeline(
     Each micro-batch is routed by topic into per-table slices, each
     committed exactly as ``run_cdc_pipeline`` commits its one table,
     into its own versioned state directory under ``state_root/<table>``
-    with corrupt records in ``dlq_dir/<table>/batch_id=N``.  The
-    driver-side loop is over the handful of DISTINCT TABLES in the
-    batch (not rows), so at 100 TB the only growth is one merge job per
-    table — each internally parallel.
+    with corrupt records in ``dlq_dir/<table>/batch_id=N``.  Records
+    whose topic does not match ``topic_re`` or names a table outside
+    ``schemas`` land raw in ``dlq_dir/_unrouted/batch_id=N``, so a table
+    may not be named ``_unrouted``.  The driver-side loop is over the
+    handful of DISTINCT TABLES in the batch (not rows), so at 100 TB the
+    only growth is one merge job per table — each internally parallel.
     """
+    if UNROUTED in schemas:
+        raise ValueError(f"table name {UNROUTED!r} is reserved for unrouted records")
     tables = {
         t: (
             schema, keys[t], os.path.join(state_root, t),
@@ -559,6 +601,7 @@ def run_multi_table_pipeline(
     _run_tables(
         stream, checkpoint_dir, tables, version_cols, apply_deletes,
         retain_versions, n_buckets, topic_re,
+        None if dlq_dir is None else os.path.join(dlq_dir, UNROUTED),
     )
 
 
@@ -1003,6 +1046,6 @@ def run_slot_lag_monitor(
         ).parquet(vdir)
         with open(os.path.join(vdir, "_BATCH_ID"), "w") as f:
             f.write(str(batch_id))
-        _publish_version(state_dir, nxt, 1, {})
+        _publish_version(state_dir, nxt, 1, {}, agg.schema)
 
     _run_available_now(stream, checkpoint_dir, update)

@@ -10,7 +10,7 @@ from __future__ import annotations
 import os
 import sys
 
-from hypothesis import HealthCheck, given, settings
+from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
@@ -205,9 +205,19 @@ def test_lww_fold_is_order_and_partition_invariant(spark_session, rows, seed):
     _events,
     st.lists(st.integers(min_value=1, max_value=29), max_size=2),
     st.sampled_from([2, 8]),
+    st.sets(st.integers(min_value=0, max_value=29), max_size=8),
+    st.booleans(),
+)
+# pinned: a corrupt-only segment, a delete-only segment, then a live one
+@example(
+    rows=[(0, "u", 0, 0), (1, "d", 0, 1), (2, "u", 1, 2)],
+    cuts=[1, 2],
+    n_buckets=8,
+    truncated={0},
+    with_dlq=True,
 )
 def test_bucketed_fold_matches_monolithic_and_reference(
-    spark_session, rows, cuts, n_buckets
+    spark_session, rows, cuts, n_buckets, truncated, with_dlq
 ):
     """The copy-on-write merge must produce the SAME state at the
     default one bucket, at n_buckets in {2, 8}, and in the pure-Python
@@ -215,7 +225,11 @@ def test_bucketed_fold_matches_monolithic_and_reference(
     stressing manifest bookkeeping under touch patterns the example
     tests can't enumerate (same bucket rewritten every batch, key
     storms), and compact_state must be a read-level no-op on the
-    result (and nothing to do at one bucket)."""
+    result (and nothing to do at one bucket).  A sampled subset of
+    envelopes is truncated on the wire: those rows drop out of the
+    fold, land in the bucketed fold's DLQ when it has one, and a
+    segment left with no surviving row (corrupt or delete only)
+    publishes no bucketed version, because its touched set is empty."""
     import tempfile
 
     import pyspark.sql.functions as F
@@ -225,6 +239,7 @@ def test_bucketed_fold_matches_monolithic_and_reference(
         build_envelope_json,
     )
     from kafka_connect_postgres_to_clickhouse_spark.streaming.pipeline import (
+        _current_version,
         _merge_batch,
         compact_state,
         read_state,
@@ -233,6 +248,7 @@ def test_bucketed_fold_matches_monolithic_and_reference(
     spark = spark_session
     if not rows:
         return
+    truncated = sorted(t for t in truncated if t < len(rows))
     payload_schema = T.StructType(
         [
             T.StructField("user_id", T.IntegerType()),
@@ -247,22 +263,34 @@ def test_bucketed_fold_matches_monolithic_and_reference(
         "_seq", "op", "user_id", "tag",
         F.timestamp_seconds(F.col("ts_i")).alias("updated_at"),
     )
+    value = build_envelope_json(payload_schema, "t.Value")
     wire = df.select(
-        "_seq", "op", build_envelope_json(payload_schema, "t.Value").alias("value")
+        "_seq", "op",
+        F.when(F.col("_seq").isin(truncated), F.substring(value, 1, 20))
+        .otherwise(value)
+        .alias("value"),
     )
     bounds = sorted({c for c in cuts if c < len(rows)})
     edges = [0, *bounds, len(rows)]
     keys, version = ["user_id"], ["updated_at", "_seq"]
     root = tempfile.mkdtemp(prefix="kcptc_prop_")
     one, bucketed = f"{root}/one", f"{root}/bkt"
-    for lo, hi in zip(edges, edges[1:]):
+    dlq = f"{root}/dlq" if with_dlq else None
+    for batch_id, (lo, hi) in enumerate(zip(edges, edges[1:])):
         if lo == hi:
             continue
         seg = wire.filter((F.col("_seq") >= lo) & (F.col("_seq") < hi))
         _merge_batch(spark, seg, payload_schema, one, keys, version, False)
+        before = _current_version(bucketed)
         _merge_batch(
-            spark, seg, payload_schema, bucketed, keys, version, False, n_buckets
+            spark, seg, payload_schema, bucketed, keys, version, False, n_buckets,
+            dlq_dir=dlq, batch_id=batch_id,
         )
+        survivors = any(
+            i not in truncated and rows[i][1] != "d" for i in range(lo, hi)
+        )
+        nxt = 0 if before is None else before + 1
+        assert _current_version(bucketed) == (nxt if survivors else before)
 
     def state_map(state_dir):
         df = read_state(spark, state_dir)
@@ -273,9 +301,21 @@ def test_bucketed_fold_matches_monolithic_and_reference(
             for r in df.collect()
         }
 
-    expected = _reference_lww(rows)
+    # a truncated row drops out of the fold exactly like a dropped delete
+    expected = _reference_lww(
+        [
+            (key, "d" if seq in truncated else op, ts, tag)
+            for seq, (key, op, ts, tag) in enumerate(rows)
+        ]
+    )
     assert state_map(one) == expected
     assert state_map(bucketed) == expected
+    if dlq is not None:
+        dead = {(r._seq, r.value) for r in spark.read.parquet(dlq).collect()}
+        assert dead == {
+            (r._seq, r.value)
+            for r in wire.filter(F.col("_seq").isin(truncated)).collect()
+        }
     assert compact_state(spark, one) is None
     compact_state(spark, bucketed)
     assert state_map(bucketed) == expected

@@ -903,7 +903,10 @@ def test_multi_table_pipeline_routes_by_topic(spark, tmp_path):
     table routing, independent schemas and key columns, one state
     directory per table (the reference's N-mirrored-tables shape), and
     one DLQ per table: a truncated envelope lands in its own table's
-    dead-letter directory with its raw bytes intact."""
+    dead-letter directory with its raw bytes intact.  Records for a
+    table outside the schema map or a topic the router does not match
+    land raw in ``dlq_dir/_unrouted`` and leave both mirrors alone; a
+    table may not be named ``_unrouted``."""
     from pyspark.sql import types as T
 
     from kafka_connect_postgres_to_clickhouse_spark.streaming.pipeline import (
@@ -952,6 +955,11 @@ def test_multi_table_pipeline_routes_by_topic(spark, tmp_path):
     for rec in bad.values():
         rec["value"] = rec["value"][:20]
     lines += [json.dumps(rec) for rec in bad.values()]
+    unrouted = [
+        json.loads(wire(users_schema, topic, [(3, "ghost", t1)], seq)[0])
+        for topic, seq in (("postgres_cdc.iman.ghosts", 200), ("other.topic", 201))
+    ]
+    lines += [json.dumps(rec) for rec in unrouted]
     src = tmp_path / "multi"
     src.mkdir()
     (src / "all.json").write_text("\n".join(lines))
@@ -992,6 +1000,20 @@ def test_multi_table_pipeline_routes_by_topic(spark, tmp_path):
             assert [(r._seq, r.value, r.batch_id) for r in dead] == [
                 (rec["_seq"], rec["value"], 0)
             ]
+        lost = spark.read.parquet(str(tmp_path / dlq / "_unrouted")).collect()
+        assert sorted((r._seq, r.topic, r.value, r.batch_id) for r in lost) == [
+            (rec["_seq"], rec["topic"], rec["value"], 0) for rec in unrouted
+        ]
+
+    with pytest.raises(ValueError, match="_unrouted"):
+        run_multi_table_pipeline(
+            changelog_file_stream(spark, str(src)),
+            schemas={"users": users_schema, "_unrouted": items_schema},
+            keys={"users": ["user_id"], "_unrouted": ["item_id"]},
+            state_root=str(tmp_path / "rstate"),
+            checkpoint_dir=str(tmp_path / "rckpt"),
+            version_cols=["updated_at", "_seq"],
+        )
 
 
 def test_multimodal_resize_and_frame_sample(spark):
@@ -1699,7 +1721,9 @@ def test_legacy_monolithic_state_stays_readable(spark, tmp_path, users_schema):
     v0/, ``_CURRENT`` = 0, no ``_MANIFEST.json``) read through
     ``read_state``, refuse a commit at another bucket count, and take a
     default one-bucket commit on top that lands the golden fold and
-    publishes a manifest."""
+    publishes a manifest with the schema it wrote."""
+    from pyspark.sql import types as T
+
     from kafka_connect_postgres_to_clickhouse_spark.streaming.pipeline import (
         _current_version,
         _read_manifest,
@@ -1736,17 +1760,46 @@ def test_legacy_monolithic_state_stays_readable(spark, tmp_path, users_schema):
         3: ("user3", "Gold"),
         999: ("updated_user", "Test"),
     }
+    written = T.StructType(
+        [
+            T.StructField("_seq", T.LongType()),
+            T.StructField("topic", T.StringType()),
+            T.StructField("op", T.StringType()),
+            T.StructField("user_id", T.IntegerType()),
+            T.StructField("username", T.StringType()),
+            T.StructField("account_type", T.StringType()),
+            T.StructField("updated_at", T.TimestampType()),
+        ]
+    )
     assert _read_manifest(str(state), _current_version(str(state))) == {
         "n_buckets": 1,
         "buckets": {"0": 1},
+        "schema": written.jsonValue(),
     }
 
 
+def _jobs_in_group(spark, group: str, fn):
+    """Run ``fn()`` under Spark job group ``group``; return its result
+    and the number of Spark jobs it ran."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
 def test_one_bucket_merge_runs_fewer_jobs(spark, tmp_path, users_schema):
-    """With one bucket the read set is the whole state, so the merge
-    skips the touched-bucket persist + collect: the same non-empty
-    batch on the same seeded state runs fewer Spark jobs at
-    n_buckets=1 than at n_buckets=8, with the same result."""
+    """Pinned Spark job counts of a commit and a read.  With one bucket
+    the read set is the whole state, so the merge skips the
+    touched-bucket pass: the same non-empty batch on the same seeded
+    state runs fewer Spark jobs at n_buckets=1 than at n_buckets=8, with
+    the same result.  At n_buckets=8 with a DLQ the touched buckets come
+    from the DLQ pass, so the commit is that pass plus the merge write
+    (at most 3 jobs), and ``read_state`` on manifested state plans from
+    the manifest's schema without running a job."""
     from kafka_connect_postgres_to_clickhouse_spark.streaming.pipeline import (
         _merge_batch,
         seed_state,
@@ -1757,28 +1810,187 @@ def test_one_bucket_merge_runs_fewer_jobs(spark, tmp_path, users_schema):
         .filter(F.col("_seq") <= 3)
         .select("user_id", "username", "account_type", "updated_at")
     )
+    tail = [r for r in _wire_rows(spark) if r._seq >= 4]
     batch = spark.createDataFrame(
-        [(r._seq, r.topic, r.op, r.value) for r in _wire_rows(spark) if r._seq >= 4],
+        [(r._seq, r.topic, r.op, r.value) for r in tail]
+        + [(7, tail[-1].topic, "u", tail[-1].value[:20])],
         "_seq long, topic string, op string, value string",
     )
-    sc = spark.sparkContext
     jobs, states = {}, {}
+    for n, dlq in ((1, None), (8, None), (8, str(tmp_path / "dlq"))):
+        state_dir = str(tmp_path / f"state{n}{'dlq' if dlq else ''}")
+        seed_state(spark, snap, state_dir, KEYS, VERSION, n_buckets=n)
+        _, jobs[n, dlq is not None] = _jobs_in_group(
+            spark, f"one-merge-{n}-{dlq is not None}",
+            lambda: _merge_batch(
+                spark, batch, users_schema, state_dir, KEYS, VERSION, False,
+                n_buckets=n, dlq_dir=dlq,
+            ),
+        )
+        df, jobs["read", n, dlq is not None] = _jobs_in_group(
+            spark, f"read-{n}-{dlq is not None}", lambda: read_state(spark, state_dir)
+        )
+        states[n, dlq is not None] = _state_map(df)
+    assert 0 < jobs[1, False] < jobs[8, False], jobs
+    assert jobs[8, True] <= 3, jobs
+    assert jobs["read", 1, False] == jobs["read", 8, False] == jobs["read", 8, True] == 0
+    assert states[1, False] == states[8, False] == states[8, True]
+    dead = spark.read.parquet(str(tmp_path / "dlq")).collect()
+    assert [(r._seq, r.value) for r in dead] == [(7, tail[-1].value[:20])]
+
+
+def _inferred_schema(spark, state_dir):
+    """Schema of the current state as parquet schema inference sees the
+    same files: every version's buckets inferred from their footers,
+    unioned by name in version order, ``bkt`` dropped."""
+    from kafka_connect_postgres_to_clickhouse_spark.streaming.pipeline import (
+        _current_version,
+        _read_manifest,
+    )
+
+    manifest = _read_manifest(state_dir, _current_version(state_dir))
+    by_version = {}
+    for b, v in manifest["buckets"].items():
+        by_version.setdefault(v, []).append(b)
+    df = None
+    for v, buckets in sorted(by_version.items()):
+        vdir = os.path.join(state_dir, f"v{v}")
+        part = spark.read.option("basePath", vdir).parquet(
+            *[os.path.join(vdir, f"bkt={b}") for b in sorted(buckets, key=int)]
+        )
+        df = part if df is None else df.unionByName(part, allowMissingColumns=True)
+    return df.drop("bkt").schema
+
+
+def test_manifest_schema_read_matches_inference(spark, tmp_path, users_schema):
+    """Every state writer records the schema it wrote in its manifest,
+    and ``read_state`` with that schema returns exactly what parquet
+    schema inference over the same files returns: ``seed_state``, a
+    one-bucket merge, an 8-bucket merge, ``compact_state`` and the
+    slot-lag monitor.  A widened commit at n_buckets=8 records the wide
+    schema while the older version keeps the narrow one."""
+    from kafka_connect_postgres_to_clickhouse_spark.sources.tables import load_table
+    from kafka_connect_postgres_to_clickhouse_spark.streaming.pipeline import (
+        _current_version,
+        _read_manifest,
+        compact_state,
+        run_slot_lag_monitor,
+        seed_state,
+    )
+
+    def check(state_dir):
+        manifest = _read_manifest(state_dir, _current_version(state_dir))
+        assert "schema" in manifest
+        assert read_state(spark, state_dir).schema == _inferred_schema(spark, state_dir)
+
+    snap = (
+        reference_scenario_changelog(spark)
+        .filter(F.col("_seq") <= 3)
+        .select("user_id", "username", "account_type", "updated_at")
+    )
+    wire = _wire_rows(spark)
+    src = tmp_path / "wire"
+    src.mkdir()
+    _write_batch_file(src, "tail.json", [r for r in wire if r._seq >= 4])
     for n in (1, 8):
         state_dir = str(tmp_path / f"state{n}")
         seed_state(spark, snap, state_dir, KEYS, VERSION, n_buckets=n)
-        group = f"one-merge-{n}"
-        sc.setJobGroup(group, f"merge at n_buckets={n}")
-        try:
-            _merge_batch(
-                spark, batch, users_schema, state_dir, KEYS, VERSION, False, n_buckets=n
-            )
-        finally:
-            sc.setLocalProperty("spark.jobGroup.id", None)
-            sc.setLocalProperty("spark.job.description", None)
-        jobs[n] = len(sc.statusTracker().getJobIdsForGroup(group))
-        states[n] = _state_map(read_state(spark, state_dir))
-    assert 0 < jobs[1] < jobs[8], jobs
-    assert states[1] == states[8]
+        check(state_dir)
+        run_cdc_pipeline(
+            changelog_file_stream(spark, str(src)), users_schema, state_dir,
+            str(tmp_path / f"ck{n}"), KEYS, VERSION, n_buckets=n,
+        )
+        check(state_dir)
+
+    # widened commit at 8 buckets: touched buckets carry the new column,
+    # the seeded version's manifest keeps the narrow schema
+    state_dir = str(tmp_path / "state8")
+    log = reference_scenario_changelog(spark).withColumn(
+        "email", F.concat(F.col("username"), F.lit("@example.com"))
+    )
+    payload = log.select("user_id", "username", "account_type", "email", "updated_at")
+    widened = log.select(
+        "_seq", "topic", "op", build_envelope_json(payload.schema, "x").alias("value")
+    ).collect()
+    _write_batch_file(src, "widened.json", [r for r in widened if r._seq == 6])
+    run_cdc_pipeline(
+        changelog_file_stream(spark, str(src)), payload.schema, state_dir,
+        str(tmp_path / "ck8"), KEYS, VERSION, n_buckets=8,
+    )
+    wide = _current_version(state_dir)
+    manifest = _read_manifest(state_dir, wide)
+    assert "email" in {f["name"] for f in manifest["schema"]["fields"]}
+    assert "email" not in {f["name"] for f in _read_manifest(state_dir, 0)["schema"]["fields"]}
+    assert 0 in manifest["buckets"].values() and wide in manifest["buckets"].values()
+    check(state_dir)
+
+    assert compact_state(spark, state_dir) == wide + 1
+    check(state_dir)
+
+    events = load_table(spark, "/root/testdata/sf0.001", "events").select(
+        "event_id", "ts", "event_type"
+    )
+    esrc = tmp_path / "events_json"
+    events.select(
+        "event_id", F.unix_micros("ts").alias("ts_us"), "event_type"
+    ).coalesce(1).write.json(str(esrc))
+    monitor = str(tmp_path / "monitor")
+    run_slot_lag_monitor(
+        spark.readStream.schema("event_id long, ts_us long, event_type string")
+        .json(str(esrc))
+        .withColumn("ts", F.timestamp_micros(F.col("ts_us")))
+        .drop("ts_us"),
+        monitor, str(tmp_path / "mck"),
+    )
+    check(monitor)
+
+
+def test_manifest_without_schema_reads_through_inference(spark, tmp_path, users_schema):
+    """State whose manifest predates recorded schemas (no ``"schema"``
+    key) reads the same rows and schema through parquet inference, and
+    the next commit publishes a manifest that records its schema."""
+    import json
+
+    from kafka_connect_postgres_to_clickhouse_spark.streaming.pipeline import (
+        _current_version,
+        _read_manifest,
+    )
+
+    wire = _wire_rows(spark)
+    src = tmp_path / "wire"
+    src.mkdir()
+    state_dir, ckpt = str(tmp_path / "state"), str(tmp_path / "ckpt")
+    _write_batch_file(src, "batch_a.json", [r for r in wire if r._seq <= 3])
+    run_cdc_pipeline(
+        changelog_file_stream(spark, str(src)), users_schema, state_dir, ckpt,
+        KEYS, VERSION, n_buckets=8,
+    )
+    before = read_state(spark, state_dir)
+    schema, rows = before.schema, sorted(before.collect())
+    v = _current_version(state_dir)
+    path = os.path.join(state_dir, f"v{v}", "_MANIFEST.json")
+    manifest = _read_manifest(state_dir, v)
+    del manifest["schema"]
+    with open(path, "w") as f:
+        json.dump(manifest, f)
+
+    after = read_state(spark, state_dir)
+    assert after.schema == schema
+    assert sorted(after.collect()) == rows
+
+    _write_batch_file(src, "batch_b.json", [r for r in wire if r._seq >= 4])
+    run_cdc_pipeline(
+        changelog_file_stream(spark, str(src)), users_schema, state_dir, ckpt,
+        KEYS, VERSION, n_buckets=8,
+    )
+    assert _current_version(state_dir) == v + 1
+    assert "schema" in _read_manifest(state_dir, v + 1)
+    assert _state_map(read_state(spark, state_dir)) == {
+        1: ("user1", "Bronze"),
+        2: ("user2", "Silver"),
+        3: ("user3", "Gold"),
+        999: ("updated_user", "Test"),
+    }
 
 
 def test_multimodal_real_png_decode_and_resize(spark):
