@@ -19,8 +19,11 @@ format (Delta/Iceberg MERGE) is the drop-in production upgrade.
 from __future__ import annotations
 
 import os
-from collections.abc import Sequence
+from collections.abc import Callable, Sequence
+from concurrent.futures import ThreadPoolExecutor
+from functools import partial
 
+from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -245,6 +248,27 @@ def _run_available_now(stream: DataFrame, checkpoint_dir: str, fn) -> None:
     )
 
 
+def _run_concurrently(spark: SparkSession, work: Sequence[Callable[[], None]]) -> None:
+    """Run every callable of ``work`` on its own thread, at most
+    ``defaultParallelism`` at a time, and return once all of them have
+    finished; then re-raise the first failure (in ``work`` order)
+    unchanged.  Each target is wrapped here, on the calling thread, so
+    its Spark jobs carry the caller's local properties: inside
+    ``foreachBatch`` they stay in the streaming query's job group, and
+    stopping the query cancels them.  Each target gets its own copy of
+    those properties (one wrapper per target), so what one thread sets,
+    such as a job description or a SQL execution id, does not leak into
+    another."""
+    if not work:
+        return
+    workers = min(len(work), spark.sparkContext.defaultParallelism)
+    with ThreadPoolExecutor(max_workers=workers) as pool:
+        futures = [pool.submit(inheritable_thread_target(spark)(fn)) for fn in work]
+    failures = [e for e in (fut.exception() for fut in futures) if e is not None]
+    if failures:
+        raise failures[0]
+
+
 def run_cdc_pipeline(
     stream: DataFrame,
     payload_schema: T.StructType,
@@ -311,8 +335,10 @@ def _run_tables(
     its (payload schema, keys, state dir, DLQ dir).  With ``topic_re`` each
     micro-batch is routed by topic into per-table slices, and records
     whose topic names no table in ``tables`` go raw to
-    ``unrouted_dir/batch_id=N`` when it is set; without ``topic_re`` the
-    one table takes every record."""
+    ``unrouted_dir/batch_id=N`` when it is set; the slices and that
+    write commit concurrently (``_run_concurrently``).  Without
+    ``topic_re`` the one table takes every record, on the stream
+    thread."""
     spark = stream.sparkSession
 
     def merge(table: str | None, batch: DataFrame, batch_id: int) -> None:
@@ -337,17 +363,28 @@ def _run_tables(
         ).persist()
         try:
             names = [r._table for r in routed.select("_table").distinct().collect()]
+            work = [
+                partial(
+                    merge, name,
+                    routed.filter(F.col("_table") == name).drop("_table"), batch_id,
+                )
+                for name in names
+                if name in tables
+            ]
             if unrouted_dir is not None and not set(names) <= tables.keys():
                 # same per-batch overwrite as the corrupt-record DLQ
-                routed.filter(
+                lost = routed.filter(
                     F.col("_table").isNull() | ~F.col("_table").isin(*tables)
-                ).select("_seq", "topic", "value").write.mode("overwrite").parquet(
-                    os.path.join(unrouted_dir, f"batch_id={batch_id}")
+                ).select("_seq", "topic", "value")
+                work.append(
+                    partial(
+                        lost.write.mode("overwrite").parquet,
+                        os.path.join(unrouted_dir, f"batch_id={batch_id}"),
+                    )
                 )
-            for name in names:
-                if name in tables:
-                    slice_df = routed.filter(F.col("_table") == name)
-                    merge(name, slice_df.drop("_table"), batch_id)
+            # the tables of one batch are independent mirrors (ordering
+            # is per key), so their commits overlap instead of queueing
+            _run_concurrently(spark, work)
         finally:
             routed.unpersist()
 
@@ -585,9 +622,19 @@ def run_multi_table_pipeline(
     with corrupt records in ``dlq_dir/<table>/batch_id=N``.  Records
     whose topic does not match ``topic_re`` or names a table outside
     ``schemas`` land raw in ``dlq_dir/_unrouted/batch_id=N``, so a table
-    may not be named ``_unrouted``.  The driver-side loop is over the
-    handful of DISTINCT TABLES in the batch (not rows), so at 100 TB the
-    only growth is one merge job per table — each internally parallel.
+    may not be named ``_unrouted``.
+
+    Ordering is promised per key only, so the tables of one micro-batch
+    are independent mirrors: their commits (and the unrouted write) run
+    concurrently, up to ``defaultParallelism`` at a time, with every
+    Spark job in the streaming query's job group.  A failing table is
+    raised (the first failure, unchanged) only after every other table
+    of the batch has finished, and the batch replays on restart; LWW
+    makes the tables that already published converge to the same
+    mirror.  The loop on the Spark application's main process is over
+    the handful of DISTINCT TABLES in the batch (not rows), so at 100 TB
+    the only growth is one commit per table — each internally parallel,
+    and overlapping the others.
     """
     if UNROUTED in schemas:
         raise ValueError(f"table name {UNROUTED!r} is reserved for unrouted records")
@@ -824,6 +871,7 @@ def bootstrap_pipeline(
     schema: str = "iman",
     apply_deletes: bool = False,
     n_buckets: int = 1,
+    dlq_dir: str | None = None,
 ) -> dict[str, T.StructType]:
     """The reference's entry point A (setup.sh bootstrap) end-to-end:
     catalog discovery -> per-table Spark schemas -> keyed multi-table
@@ -834,7 +882,9 @@ def bootstrap_pipeline(
     3. primary key per the reference heuristic — a ``*_id`` column if
        present, else the first column (setup.sh:54-64's
        ``COALESCE(pk, first_column)``);
-    4. ``run_multi_table_pipeline`` with one state dir per table.
+    4. ``run_multi_table_pipeline`` with one state dir per table, and
+       with ``dlq_dir`` one dead-letter directory per table (plus
+       ``_unrouted``), so a tolerated corrupt envelope is kept, not lost.
 
     Returns the discovered ``{table: StructType}`` so callers can
     inspect or generate sink DDL (``plans.ddl``).
@@ -863,7 +913,7 @@ def bootstrap_pipeline(
         keys[t] = [id_cols[0] if id_cols else tcols[0].column_name]
     run_multi_table_pipeline(
         stream, schemas, keys, state_root, checkpoint_dir, version_cols,
-        apply_deletes, n_buckets=n_buckets,
+        apply_deletes, n_buckets=n_buckets, dlq_dir=dlq_dir,
     )
     return schemas
 
@@ -991,8 +1041,8 @@ def run_slot_lag_monitor(
     test asserts).  State publishes through the same
     write-new-version-then-swap-_CURRENT scheme as the CDC state
     (run_cdc_pipeline) — atomic visibility, never overwrites its
-    input — and each version records the batch_id it merged so an
-    at-least-once REPLAY of the trailing micro-batch (crash between
+    input — and each version records the query and batch_id it merged
+    so an at-least-once REPLAY of the trailing micro-batch (crash between
     swap and checkpoint commit) is detected and skipped instead of
     SUM-merging n_records twice.
 
@@ -1013,13 +1063,22 @@ def run_slot_lag_monitor(
         # the swap makes state + marker visible atomically, and a
         # replayed batch whose id already sits in the current version
         # is a no-op.  Only the latest id is needed: the engine replays
-        # at most the one uncommitted trailing batch.
+        # at most the one uncommitted trailing batch.  The marker names
+        # the query too ("<queryId>:<batch_id>", the id a checkpoint
+        # keeps across restarts): a fresh checkpoint over existing state
+        # counts from batch 0 again, and its batch 0 is new data.
+        # Markers written before the query id was recorded hold only
+        # the batch id and compare on it alone.
+        query_id = spark.sparkContext.getLocalProperty("sql.streaming.queryId")
         if prev is not None:
             marker = os.path.join(state_dir, f"v{prev}", "_BATCH_ID")
             try:
                 with open(marker) as f:
-                    if int(f.read().strip()) == batch_id:
-                        return
+                    seen = f.read().strip()
+                if seen == f"{query_id}:{batch_id}" or (
+                    ":" not in seen and int(seen) == batch_id
+                ):
+                    return
             except (OSError, ValueError):
                 pass
         agg = batch.groupBy("event_type").agg(
@@ -1045,7 +1104,7 @@ def run_slot_lag_monitor(
             "bkt"
         ).parquet(vdir)
         with open(os.path.join(vdir, "_BATCH_ID"), "w") as f:
-            f.write(str(batch_id))
+            f.write(f"{query_id}:{batch_id}")
         _publish_version(state_dir, nxt, 1, {}, agg.schema)
 
     _run_available_now(stream, checkpoint_dir, update)

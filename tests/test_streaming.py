@@ -10,6 +10,7 @@ import os
 
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from kafka_connect_postgres_to_clickhouse_spark.operators.envelope import (
     build_envelope_json,
@@ -1016,6 +1017,240 @@ def test_multi_table_pipeline_routes_by_topic(spark, tmp_path):
         )
 
 
+_ABC_SCHEMA = T.StructType(
+    [
+        T.StructField("k", T.LongType()),
+        T.StructField("v", T.StringType()),
+        T.StructField("updated_at", T.TimestampType()),
+    ]
+)
+
+
+def _abc_wire(spark, tmp_path):
+    """Three tables (``a``, ``b``, ``c``) on one wire in two files, one
+    micro-batch each under ``maxFilesPerTrigger=1``: every table has
+    rows in both files, one truncated envelope, and file 1 carries one
+    record for a table outside the schema map.  Returns the wire dir,
+    each table's surviving rows (k, v, updated_at, _seq), each table's
+    truncated records as (_seq, value, batch_id) and the unrouted
+    record as (_seq, topic, value, batch_id)."""
+    import datetime
+
+    t0 = datetime.datetime(2024, 1, 1)
+    src = tmp_path / "abc"
+    src.mkdir()
+    rows = {t: [] for t in "abc"}
+    dead = {t: set() for t in "abc"}
+    lost = set()
+    seq = 0
+    for f in range(2):
+        lines = []
+        for ti, t in enumerate("abc"):
+            topic = f"postgres_cdc.iman.{t}"
+            batch = [
+                # keys repeat across files; out-of-order versions too
+                (k, f"{t}{f}-{k}", t0 + datetime.timedelta(hours=(k * 7 + f * 5 + ti) % 4))
+                for k in range(6 + 2 * f)
+            ]
+            vals = spark.createDataFrame(batch, _ABC_SCHEMA).select(
+                build_envelope_json(_ABC_SCHEMA, f"{topic}.Value").alias("v")
+            ).collect()
+            for row, env in zip(batch, vals):
+                seq += 1
+                rows[t].append((*row, seq))
+                lines.append({"_seq": seq, "topic": topic, "op": "u", "value": env.v})
+            if f == ti % 2:  # a and c truncate in file 0, b in file 1
+                seq += 1
+                lines.append(
+                    {"_seq": seq, "topic": topic, "op": "u", "value": vals[0].v[:20]}
+                )
+                dead[t].add((seq, vals[0].v[:20], f))
+        if f == 1:
+            seq += 1
+            ghost = lines[0]["value"]
+            lines.append(
+                {"_seq": seq, "topic": "postgres_cdc.iman.ghosts", "op": "u", "value": ghost}
+            )
+            lost.add((seq, "postgres_cdc.iman.ghosts", ghost, f))
+        path = src / f"part{f}.json"
+        path.write_text("\n".join(json.dumps(r) for r in lines))
+        os.utime(path, (1_700_000_000 + 100 * f,) * 2)
+    return str(src), rows, dead, lost
+
+
+def _abc_stream(spark, src):
+    from kafka_connect_postgres_to_clickhouse_spark.streaming.pipeline import (
+        WIRE_SCHEMA,
+    )
+
+    return spark.readStream.schema(WIRE_SCHEMA).option("maxFilesPerTrigger", 1).json(src)
+
+
+def _lww_fold(rows):
+    """Pure-Python LWW: per key the row with the largest
+    (updated_at, _seq)."""
+    best = {}
+    for k, v, ts, seq in rows:
+        if k not in best or (ts, seq) > best[k][1:]:
+            best[k] = (v, ts, seq)
+    return {k: (v, ts) for k, (v, ts, _) in best.items()}
+
+
+def _run_abc(spark, src, root, n_buckets):
+    from kafka_connect_postgres_to_clickhouse_spark.streaming.pipeline import (
+        run_multi_table_pipeline,
+    )
+
+    run_multi_table_pipeline(
+        _abc_stream(spark, src),
+        schemas={t: _ABC_SCHEMA for t in "abc"},
+        keys={t: ["k"] for t in "abc"},
+        state_root=str(root / "state"),
+        checkpoint_dir=str(root / "ckpt"),
+        version_cols=VERSION,
+        n_buckets=n_buckets,
+        dlq_dir=str(root / "dlq"),
+    )
+
+
+def test_multi_table_pipeline_commits_tables_concurrently(spark, tmp_path):
+    """The tables of one routed micro-batch commit concurrently: every
+    mirror still equals a pure-Python LWW fold of its table's rows and
+    every DLQ holds exactly its injected records, at 1 and 4 buckets.
+    A table that fails (bucket-count mismatch) is raised only after the
+    other tables have finished: it gets no new version and no DLQ
+    partition, and no state dir keeps a version newer than its
+    ``_CURRENT``.  Rerunning on the same checkpoint replays the batch
+    and every mirror, including those that had published, equals the
+    fold."""
+    import datetime
+    import shutil
+
+    from kafka_connect_postgres_to_clickhouse_spark.streaming.pipeline import (
+        _current_version,
+        seed_state,
+    )
+
+    src, rows, dead, lost = _abc_wire(spark, tmp_path)
+
+    def check(root):
+        for t in "abc":
+            got = read_state(spark, str(root / "state" / t))
+            assert {r.k: (r.v, r.updated_at) for r in got.collect()} == _lww_fold(rows[t]), t
+            dlq = spark.read.parquet(str(root / "dlq" / t)).collect()
+            assert {(r._seq, r.value, r.batch_id) for r in dlq} == dead[t], t
+        unrouted = spark.read.parquet(str(root / "dlq" / "_unrouted")).collect()
+        assert {(r._seq, r.topic, r.value, r.batch_id) for r in unrouted} == lost
+
+    for n in (1, 4):
+        _run_abc(spark, src, tmp_path / f"ok{n}", n)
+        check(tmp_path / f"ok{n}")
+
+    root = tmp_path / "fail"
+    seed = spark.createDataFrame([(0, "seed", datetime.datetime(2023, 1, 1))], _ABC_SCHEMA)
+    seed_state(spark, seed, str(root / "state" / "c"), ["k"], VERSION, n_buckets=8)
+    with pytest.raises(Exception, match="bucketed state"):
+        _run_abc(spark, src, root, 1)
+    assert _current_version(str(root / "state" / "c")) == 0
+    assert not (root / "dlq" / "c" / "batch_id=0").exists()
+    for t in "abc":
+        state_dir = root / "state" / t
+        cur = _current_version(str(state_dir))
+        assert cur is not None, t
+        assert [
+            p.name for p in state_dir.iterdir()
+            if p.name.startswith("v") and int(p.name[1:]) > cur
+        ] == [], t
+    # a and b published batch 0 before the raise; the replay re-merges them
+    for t in "ab":
+        assert _current_version(str(root / "state" / t)) == 0
+
+    shutil.rmtree(root / "state" / "c")
+    _run_abc(spark, src, root, 1)
+    check(root)
+
+
+def test_multi_table_commit_jobs_stay_in_query_job_group(spark, tmp_path):
+    """Per-table commits run on pool threads, but their Spark jobs stay
+    in the streaming query's job group (its ``runId``), so stopping the
+    query cancels them: every job of a three-table commit is in the
+    group, at least one per table, and none runs without a group."""
+    from pyspark.sql.streaming import StreamingQueryListener
+
+    src, _, _, _ = _abc_wire(spark, tmp_path)
+    run_ids = []
+
+    class Started(StreamingQueryListener):
+        def onQueryStarted(self, event):
+            run_ids.append(str(event.runId))
+
+        def onQueryProgress(self, event):
+            pass
+
+        def onQueryTerminated(self, event):
+            pass
+
+    tracker = spark.sparkContext.statusTracker()
+    ungrouped = set(tracker.getJobIdsForGroup(None))
+    listener = Started()
+    spark.streams.addListener(listener)
+    try:
+        _run_abc(spark, src, tmp_path / "run", 1)
+    finally:
+        spark.streams.removeListener(listener)
+    (run_id,) = run_ids
+    # two batches: the routing collect plus at least one job per table
+    assert len(tracker.getJobIdsForGroup(run_id)) >= 2 * (1 + 3)
+    assert not set(tracker.getJobIdsForGroup(None)) - ungrouped
+
+
+def test_run_concurrently_waits_for_all_and_isolates_local_properties(spark):
+    """The thread pool behind concurrent table commits: every target
+    sees the caller's local properties but sets its own without
+    leaking into another running target, a failure is re-raised
+    unchanged only after every target has finished, and the caller's
+    own properties are untouched."""
+    import threading
+    import time
+
+    from kafka_connect_postgres_to_clickhouse_spark.streaming.pipeline import (
+        _run_concurrently,
+    )
+
+    sc = spark.sparkContext
+    sc.setLocalProperty("test.caller", "stream")
+    seen = {}
+    both_set = threading.Barrier(2)
+
+    def tagged(name):
+        def fn():
+            sc.setLocalProperty("test.mine", name)
+            both_set.wait(timeout=30)
+            seen[name] = (sc.getLocalProperty("test.caller"), sc.getLocalProperty("test.mine"))
+
+        return fn
+
+    boom = ValueError("table c: boom")
+    done = threading.Event()
+
+    def fail():
+        raise boom
+
+    def slow():
+        time.sleep(0.5)
+        done.set()
+
+    try:
+        _run_concurrently(spark, [tagged("a"), tagged("b")])
+        assert seen == {"a": ("stream", "a"), "b": ("stream", "b")}
+        with pytest.raises(ValueError, match="^table c: boom$") as err:
+            _run_concurrently(spark, [fail, slow])
+        assert err.value is boom and done.is_set()
+        assert sc.getLocalProperty("test.mine") is None
+    finally:
+        sc.setLocalProperty("test.caller", None)
+
+
 def test_multimodal_resize_and_frame_sample(spark):
     """Resize keeps one row per image at the target dims; frame
     sampling expands one video row into every-Nth-frame rows — both
@@ -1057,7 +1292,8 @@ def test_multimodal_resize_and_frame_sample(spark):
 
 def test_bootstrap_pipeline_from_catalog(spark, tmp_path):
     """Reference entry point A end-to-end: catalog discovery -> type
-    map -> PK heuristic -> multi-table pipeline -> golden state."""
+    map -> PK heuristic -> multi-table pipeline -> golden state, with a
+    truncated envelope kept in the table's dead-letter directory."""
     from kafka_connect_postgres_to_clickhouse_spark.sources.catalog import (
         catalog_columns_df,
         catalog_tables_df,
@@ -1067,6 +1303,10 @@ def test_bootstrap_pipeline_from_catalog(spark, tmp_path):
     )
 
     src = _write_wire_files(spark, tmp_path, [(1, 6)])
+    last = _wire_rows(spark)[-1]
+    bad = {"_seq": 7, "topic": last.topic, "op": "u", "value": last.value[:20]}
+    with open(os.path.join(src, "batch_0.json"), "a") as f:
+        f.write("\n" + json.dumps(bad))
     schemas = bootstrap_pipeline(
         catalog_tables_df(spark),
         catalog_columns_df(spark),
@@ -1074,6 +1314,7 @@ def test_bootstrap_pipeline_from_catalog(spark, tmp_path):
         str(tmp_path / "state"),
         str(tmp_path / "ckpt"),
         VERSION,
+        dlq_dir=str(tmp_path / "dlq"),
     )
     # discovery: only the BASE TABLE, typed per the PG map, PK=user_id
     assert list(schemas) == ["users"]
@@ -1087,6 +1328,9 @@ def test_bootstrap_pipeline_from_catalog(spark, tmp_path):
         3: ("user3", "Gold"),
         999: ("updated_user", "Test"),
     }
+    # the truncated envelope is kept raw in the table's DLQ, not lost
+    dead = spark.read.parquet(str(tmp_path / "dlq" / "users" / "batch_id=0")).collect()
+    assert [(r._seq, r.value) for r in dead] == [(bad["_seq"], bad["value"])]
 
 
 def test_dedup_within_watermark_bounded_state(spark, tmp_path):
@@ -1481,6 +1725,47 @@ def test_slot_lag_monitor_replay_idempotent(spark, tmp_path):
         for r in read_state(spark, str(state)).collect()
     }
     assert after == before
+
+
+def test_slot_lag_monitor_fresh_checkpoint_not_skipped(spark, tmp_path):
+    """A monitor restarted on a NEW checkpoint over existing state counts
+    from batch 0 again; that batch is new data, not a replay of the
+    published batch 0 of the old checkpoint, so the replay guard must
+    not skip it.  A marker written before the query id was recorded
+    (the batch id alone) still stops a replay of that batch."""
+    from kafka_connect_postgres_to_clickhouse_spark.streaming.pipeline import (
+        _current_version,
+        run_slot_lag_monitor,
+    )
+
+    def source(name, ids):
+        src = tmp_path / name
+        spark.createDataFrame(
+            [(i, 1_700_000_000_000_000 + i, "page_view") for i in ids],
+            "event_id long, ts_us long, event_type string",
+        ).coalesce(1).write.json(str(src))
+        return (
+            spark.readStream.schema("event_id long, ts_us long, event_type string")
+            .json(str(src))
+            .withColumn("ts", F.timestamp_micros(F.col("ts_us")))
+            .drop("ts_us")
+        )
+
+    state = str(tmp_path / "monitor_state")
+    run_slot_lag_monitor(source("s1", range(10)), state, str(tmp_path / "ck1"))
+    s2 = source("s2", range(10, 25))
+    run_slot_lag_monitor(s2, state, str(tmp_path / "ck2"))
+    (row,) = read_state(spark, state).collect()
+    assert (row.event_type, row.n_records, row.confirmed_lsn) == ("page_view", 25, 24)
+
+    # legacy marker + replay of ck2's batch 0: skipped, nothing double-counted
+    with open(os.path.join(state, f"v{_current_version(state)}", "_BATCH_ID"), "w") as f:
+        f.write("0")
+    (tmp_path / "ck2" / "commits" / "0").unlink()
+    (tmp_path / "ck2" / "commits" / ".0.crc").unlink(missing_ok=True)
+    run_slot_lag_monitor(s2, state, str(tmp_path / "ck2"))
+    (row,) = read_state(spark, state).collect()
+    assert (row.n_records, row.confirmed_lsn) == (25, 24)
 
 
 def test_dlq_replay_overwrites_not_appends(spark, tmp_path, users_schema):
