@@ -18,14 +18,16 @@ from kafka_connect_postgres_to_clickhouse_spark.operators.envelope import (
 from kafka_connect_postgres_to_clickhouse_spark.sources.changelog import (
     reference_scenario_changelog,
 )
-from kafka_connect_postgres_to_clickhouse_spark.streaming.pipeline import (
-    changelog_file_stream,
+from kafka_connect_postgres_to_clickhouse_spark.streaming.operators import (
     deduped_stream,
-    read_state,
-    run_cdc_pipeline,
     sessionized_stream,
     stream_static_join,
     windowed_counts_stream,
+)
+from kafka_connect_postgres_to_clickhouse_spark.streaming.pipeline import (
+    changelog_file_stream,
+    read_state,
+    run_cdc_pipeline,
 )
 
 KEYS = ["user_id"]
@@ -1336,7 +1338,7 @@ def test_bootstrap_pipeline_from_catalog(spark, tmp_path):
 def test_dedup_within_watermark_bounded_state(spark, tmp_path):
     """dropDuplicatesWithinWatermark: duplicates inside the watermark
     interval are dropped, state is watermark-bounded."""
-    from kafka_connect_postgres_to_clickhouse_spark.streaming.pipeline import (
+    from kafka_connect_postgres_to_clickhouse_spark.streaming.operators import (
         deduped_stream_within_watermark,
     )
 
@@ -1363,7 +1365,7 @@ def test_dedup_within_watermark_bounded_state(spark, tmp_path):
 def test_stream_stream_interval_join(spark, tmp_path):
     """Watermarked interval join between two streams matches the batch
     join with the identical interval predicate."""
-    from kafka_connect_postgres_to_clickhouse_spark.streaming.pipeline import (
+    from kafka_connect_postgres_to_clickhouse_spark.streaming.operators import (
         stream_stream_interval_join,
     )
 
@@ -1404,7 +1406,7 @@ def test_stream_stream_interval_join(spark, tmp_path):
 def test_lww_compacted_stream_suppresses_stale(spark, tmp_path):
     """transformWithState LWW gate: one newest row per key per batch;
     a later batch's stale or duplicate update never re-emits."""
-    from kafka_connect_postgres_to_clickhouse_spark.streaming.pipeline import (
+    from kafka_connect_postgres_to_clickhouse_spark.streaming.operators import (
         lww_compacted_stream,
     )
 
@@ -1465,7 +1467,7 @@ def test_lww_tws_plan_and_fold_logic(spark, tmp_path):
     - r13 (2026-08-16): ModuleNotFoundError — still contract-only."""
     import pandas as pd
 
-    from kafka_connect_postgres_to_clickhouse_spark.streaming.pipeline import (
+    from kafka_connect_postgres_to_clickhouse_spark.streaming.operators import (
         lww_compacted_stream_tws,
     )
 
