@@ -1,6 +1,5 @@
 from .envelope import (
     debezium_value_schema,
-    envelope_schema,
     build_envelope_json,
     parse_envelope,
     unwrap,
@@ -9,7 +8,6 @@ from .upsert import lww_dedup, upsert_batch, apply_changelog
 
 __all__ = [
     "debezium_value_schema",
-    "envelope_schema",
     "build_envelope_json",
     "parse_envelope",
     "unwrap",

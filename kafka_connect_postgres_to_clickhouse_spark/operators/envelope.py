@@ -100,10 +100,6 @@ def debezium_value_schema(payload_schema: T.StructType) -> T.StructType:
     )
 
 
-def envelope_schema(payload_schema: T.StructType) -> T.StructType:
-    return debezium_value_schema(payload_schema)
-
-
 def build_envelope_json(
     payload_schema: T.StructType,
     schema_name: str,

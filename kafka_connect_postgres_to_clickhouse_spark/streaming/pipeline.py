@@ -18,6 +18,7 @@ format (Delta/Iceberg MERGE) is the drop-in production upgrade.
 
 from __future__ import annotations
 
+import json
 import os
 from collections.abc import Callable, Sequence
 from concurrent.futures import ThreadPoolExecutor
@@ -63,20 +64,46 @@ def _current_version(state_dir: str) -> int | None:
 
 
 def _read_manifest(state_dir: str, version: int | None) -> dict | None:
-    """Bucket manifest of a state version, or None when there is no
-    state or the version is a legacy manifest-less snapshot.  Shape:
-    ``{"n_buckets": N, "buckets": {"<bucket>": <version holding it>},
-    "schema": <StructType JSON of the rows this version wrote>}``;
-    manifests written before the schema was recorded lack ``"schema"``."""
+    """Manifest of state version ``version``, or None when there is no
+    state.  Shape: ``{"n_buckets": N, "buckets": {"<bucket>": <version
+    holding it>}, "schema": <StructType JSON of the rows this version
+    wrote>}``, plus ``"marker"`` when the writer recorded one (the
+    slot-lag monitor's replay marker).  This and ``_write_version`` are
+    the only code that knows the on-disk format; older formats come back
+    in this shape:
+
+    - a manifest without ``"schema"`` (written before schemas were
+      recorded) is returned as is, and readers infer the schema;
+    - a manifest-less ``v{N}`` with no ``bkt=`` directory (the
+      monolithic layout, parquet straight in the version directory) is
+      one flat bucket, ``{"n_buckets": 1, "buckets": {"0": N}, "flat":
+      True}``;
+    - a ``_BATCH_ID`` sidecar (where the monitor kept its marker) becomes
+      ``"marker"``.
+
+    A version that holds ``bkt=`` directories but no manifest, a
+    manifest that does not parse, and a missing version directory raise:
+    read as a flat snapshot, such a version would silently lose every
+    bucket it does not hold itself."""
     if version is None:
         return None
-    import json
-
+    vdir = os.path.join(state_dir, f"v{version}")
+    path = os.path.join(vdir, "_MANIFEST.json")
     try:
-        with open(os.path.join(state_dir, f"v{version}", "_MANIFEST.json")) as f:
-            return json.load(f)
-    except (OSError, ValueError):
-        return None
+        with open(path) as f:
+            manifest = json.load(f)
+    except FileNotFoundError:
+        if any(d.startswith("bkt=") for d in os.listdir(vdir)):
+            raise ValueError(f"{vdir} holds bucketed state but has no manifest") from None
+        manifest = {"n_buckets": 1, "buckets": {"0": version}, "flat": True}
+    except ValueError as e:
+        raise ValueError(f"{path} does not parse: {e}") from e
+    try:
+        with open(os.path.join(vdir, "_BATCH_ID")) as f:
+            manifest.setdefault("marker", f.read().strip())
+    except FileNotFoundError:
+        pass
+    return manifest
 
 
 def prune_state_versions(state_dir: str, keep: int = 3) -> list[int]:
@@ -100,6 +127,11 @@ def prune_state_versions(state_dir: str, keep: int = 3) -> list[int]:
     cur = _current_version(state_dir)
     if cur is None or keep < 1:
         return []
+    try:
+        names = os.listdir(state_dir)
+    except OSError:
+        return []
+    versions = sorted(int(n[1:]) for n in names if re.fullmatch(r"v\d+", n))
     # bucketed states reference buckets ACROSS versions (copy-on-write):
     # a version any RETAINED manifest points into is live regardless of
     # age — deleting it would tear holes in that snapshot.  The keep
@@ -108,56 +140,56 @@ def prune_state_versions(state_dir: str, keep: int = 3) -> list[int]:
     # version (cur-keep, cur], not just the current one: a bucket
     # untouched since v0 but rewritten by the newest batch drops out of
     # the current manifest while cur-1's manifest still needs v0.
-    live: set[int] = set()
-    for v in range(max(0, cur - keep + 1), cur + 1):
-        manifest = _read_manifest(state_dir, v)
-        if manifest:
-            live.update(manifest["buckets"].values())
+    live = {
+        held
+        for v in versions
+        if cur - keep < v <= cur
+        for held in _read_manifest(state_dir, v)["buckets"].values()
+    }
     removed = []
-    try:
-        names = os.listdir(state_dir)
-    except OSError:
-        return []
-    for name in names:
-        if not re.fullmatch(r"v\d+", name):
-            continue
-        v = int(name[1:])
+    for v in versions:
         if v <= cur - keep and v not in live:
-            path = os.path.join(state_dir, name)
+            path = os.path.join(state_dir, f"v{v}")
             shutil.rmtree(path, ignore_errors=True)
             # a failed/partial rmtree must not be reported as removed
             if not os.path.exists(path):
                 removed.append(v)
-    return sorted(removed)
+    return removed
 
 
-def _publish_version(
+def _write_version(
+    rows: DataFrame,
     state_dir: str,
     version: int,
     n_buckets: int,
     held: dict[str, int],
-    schema: T.StructType,
     retain_versions: int = 3,
+    marker: str | None = None,
 ) -> None:
-    """Commit the fully written ``v{version}`` — the one publish step
-    every state writer shares.  The manifest maps each bucket to the
-    version holding it: ``held`` (buckets kept from older versions)
-    updated with the ``bkt=`` partition directories just written, a
-    local listing instead of a Spark collect.  It also records
-    ``schema``, the schema of the rows written (without ``bkt``), so
+    """Write ``rows`` (which carry their ``bkt`` column) as state version
+    ``v{version}`` and commit it — the one write step every state writer
+    shares, and with ``_read_manifest`` the only code that knows the
+    on-disk format.  Rows land as ``v{version}/bkt=i/`` parquet.  The
+    manifest then maps each bucket to the version holding it: ``held``
+    (buckets kept from older versions) updated with the ``bkt=``
+    directories just written, a local listing instead of a Spark
+    collect.  It records the schema of ``rows`` without ``bkt``, so
     reads of this version plan with no schema-inference job, the way a
-    part knows its own columns.  Then the ``_CURRENT`` swap, the commit
-    point (write-new-part-then-swap, as ClickHouse merges do: a crash
-    before it leaves readable state untouched), then the retention
-    prune, which runs only after the swap."""
-    import json
-
+    part knows its own columns, and ``marker`` when one is given.  Then
+    the ``_CURRENT`` swap, the commit point (write-new-part-then-swap,
+    as ClickHouse merges do: a crash before it leaves readable state
+    untouched), then the retention prune, which runs only after the
+    swap."""
     vdir = os.path.join(state_dir, f"v{version}")
-    buckets = dict(held)
-    for d in os.listdir(vdir):
-        if d.startswith("bkt="):
-            buckets[d.split("=", 1)[1]] = version
-    manifest = {"n_buckets": n_buckets, "buckets": buckets, "schema": schema.jsonValue()}
+    rows.write.mode("overwrite").partitionBy("bkt").parquet(vdir)
+    written = {d[4:]: version for d in os.listdir(vdir) if d.startswith("bkt=")}
+    manifest = {
+        "n_buckets": n_buckets,
+        "buckets": {**held, **written},
+        "schema": T.StructType([f for f in rows.schema if f.name != "bkt"]).jsonValue(),
+    }
+    if marker is not None:
+        manifest["marker"] = marker
     with open(os.path.join(vdir, "_MANIFEST.json"), "w") as f:
         json.dump(manifest, f)
     tmp = _current_marker(state_dir) + ".tmp"
@@ -167,32 +199,23 @@ def _publish_version(
     prune_state_versions(state_dir, keep=retain_versions)
 
 
-def read_state(
-    spark: SparkSession, state_dir: str, include_tombstones: bool = False
-) -> DataFrame | None:
-    """Read the current state snapshot (versioned-directory scheme).
+def read_state(spark: SparkSession, state_dir: str) -> DataFrame | None:
+    """Read the current state snapshot (versioned-directory scheme)
+    through its manifest, in whatever format ``_read_manifest`` found it;
+    None when there is no state or no bucket holds rows yet.  The
+    manifest's bookkeeping (bucket map, schema, the slot-lag monitor's
+    replay marker) never shows up as rows.
 
     Delete tombstones (op='d' LWW winners, kept so re-delivered older
-    events cannot resurrect a deleted key) are hidden unless
-    ``include_tombstones`` — the merge path reads them back, consumers
-    don't see them.
+    events cannot resurrect a deleted key) are hidden: the merge reads
+    them back through ``_read_buckets``, consumers don't see them.
     """
-    v = _current_version(state_dir)
-    if v is None:
+    manifest = _read_manifest(state_dir, _current_version(state_dir)) or {"buckets": {}}
+    df = _read_buckets(spark, state_dir, manifest, [int(b) for b in manifest["buckets"]])
+    if df is None:  # no state, or seeded from an empty snapshot
         return None
-    manifest = _read_manifest(state_dir, v)
-    if manifest is None:
-        # legacy layout: parquet straight in v{N}, no manifest; the next
-        # one-bucket merge republishes it with a manifest
-        df = spark.read.parquet(os.path.join(state_dir, f"v{v}"))
-    else:
-        bucketed = _read_buckets(
-            spark, state_dir, manifest, [int(b) for b in manifest["buckets"]]
-        )
-        if bucketed is None:  # seeded from an empty snapshot: no buckets yet
-            return None
-        df = bucketed.drop("bkt")
-    if not include_tombstones and "op" in df.columns:
+    df = df.drop("bkt")
+    if "op" in df.columns:
         df = df.filter((F.col("op") != "d") | F.col("op").isNull())
     return df
 
@@ -200,18 +223,19 @@ def read_state(
 def _read_buckets(
     spark: SparkSession, state_dir: str, manifest: dict, want: Sequence[int]
 ) -> DataFrame | None:
-    """Read the requested buckets of a bucketed state through its
-    manifest — each bucket from the VERSION that currently holds it
-    (copy-on-write: untouched buckets still live in older version
-    dirs).  Reads are per-bucket directory paths, so a merge that
-    wants 3 of 64 buckets lists and scans exactly those 3 — the
-    partition-pruning this layout exists for.  Each version reads with
-    the schema its own manifest records, so planning the read runs no
-    Spark job; a manifest without one (written before schemas were
-    recorded) falls back to parquet schema inference.  Schema
-    differences across versions (evolution rewrote touched buckets
-    only) merge via unionByName(allowMissingColumns=True).  Returns
-    None when no requested bucket has any state yet."""
+    """Read the requested buckets of a state through its manifest — the
+    only parquet reader of state.  Each bucket comes from the VERSION
+    that currently holds it (copy-on-write: untouched buckets still
+    live in older version dirs).  Reads are per-bucket directory paths,
+    so a merge that wants 3 of 64 buckets lists and scans exactly those
+    3 — the partition-pruning this layout exists for; a flat version
+    (``_read_manifest``'s monolithic case) is read whole as bucket 0.
+    Each version reads with the schema its own manifest records, so
+    planning the read runs no Spark job; a manifest without one falls
+    back to parquet schema inference.  Schema differences across
+    versions (evolution rewrote touched buckets only) merge via
+    unionByName(allowMissingColumns=True).  Returns None when no
+    requested bucket has any state yet."""
     held = manifest["buckets"]
     by_version: dict[int, list[int]] = {}
     for b in want:
@@ -221,12 +245,12 @@ def _read_buckets(
     parts = []
     for ver, buckets in sorted(by_version.items()):
         vdir = os.path.join(state_dir, f"v{ver}")
-        paths = [os.path.join(vdir, f"bkt={b}") for b in sorted(buckets)]
+        own = _read_manifest(state_dir, ver)
         reader = spark.read.option("basePath", vdir)
-        schema = (_read_manifest(state_dir, ver) or {}).get("schema")
-        if schema is not None:
-            reader = reader.schema(T.StructType.fromJson(schema))
-        parts.append(reader.parquet(*paths))
+        if "schema" in own:
+            reader = reader.schema(T.StructType.fromJson(own["schema"]))
+        paths = [os.path.join(vdir, f"bkt={b}") for b in sorted(buckets)]
+        parts.append(reader.parquet(*([vdir] if own.get("flat") else paths)))
     if not parts:
         return None
     df = parts[0]
@@ -412,11 +436,15 @@ def _merge_batch(
     directory holds only the buckets ITS batch touched
     (``vN/bkt=i/``), and an underscore-hidden ``_MANIFEST.json`` maps
     every bucket to the version that currently holds it and records the
-    version's schema.  A micro-batch reads exactly its touched buckets
-    through the manifest, LWW-merges them with the batch, writes only
-    them into the new version, and publishes manifest+_CURRENT
-    (``_publish_version``) — per-batch work is O(|batch| + |touched
-    buckets|).  This is the parts-plus-manifest scheme of
+    version's schema (and, for the slot-lag monitor, its replay marker).
+    A micro-batch reads exactly its touched buckets through the manifest
+    (``_read_buckets``; all of them at one bucket), LWW-merges them with
+    the batch, and writes only them into the new version, which
+    ``_write_version`` commits with its manifest and the ``_CURRENT``
+    swap — per-batch work is O(|batch| + |touched buckets|).  The merge
+    itself holds no format logic: state from older layouts reaches it
+    through ``_read_manifest`` in today's shape.  This is the
+    parts-plus-manifest scheme of
     ReplacingMergeTree / lakehouse MERGE re-expressed on plain parquet.
     Schema evolution rides free: only touched buckets rewrite with the
     widened schema and the manifest read unionByName-fills the rest.
@@ -434,13 +462,11 @@ def _merge_batch(
     rebucketing rewrite, exactly like changing a table's bucket count.
     LWW is idempotent, so a re-delivered batch converges."""
     prev = _current_version(state_dir)
-    manifest = _read_manifest(state_dir, prev)
-    # a manifest-less (legacy monolithic) snapshot is one bucket
-    have = 1 if manifest is None else manifest["n_buckets"]
-    if prev is not None and have != n_buckets:
+    manifest = _read_manifest(state_dir, prev) or {"n_buckets": n_buckets, "buckets": {}}
+    if manifest["n_buckets"] != n_buckets:
         raise ValueError(
-            f"{state_dir} holds bucketed state with n_buckets={have}, commit asked "
-            f"n_buckets={n_buckets}; rebucketing requires an explicit rewrite"
+            f"{state_dir} holds bucketed state with n_buckets={manifest['n_buckets']}, "
+            f"commit asked n_buckets={n_buckets}; rebucketing requires an explicit rewrite"
         )
     nxt = 0 if prev is None else prev + 1
     wire = batch.filter(F.col("value").isNotNull())
@@ -479,15 +505,10 @@ def _merge_batch(
             )
         elif touched is not None:
             parsed.write.format("noop").mode("overwrite").save()
-        if touched is None:
-            existing = read_state(spark, state_dir, include_tombstones=True)
-        else:
-            want = sorted(touched.get["bkt"])
-            if not want:
-                return  # empty/corrupt-only batch: state and manifest stand
-            existing = (
-                _read_buckets(spark, state_dir, manifest, want) if manifest else None
-            )
+        want = [0] if touched is None else sorted(touched.get["bkt"])
+        if not want:
+            return  # empty/corrupt-only batch: state and manifest stand
+        existing = _read_buckets(spark, state_dir, manifest, want)
         rows = parsed.filter(survives).drop("_corrupt", "_raw")
         if existing is not None:
             rows = existing.drop("bkt").unionByName(rows, allowMissingColumns=True)
@@ -497,16 +518,13 @@ def _merge_batch(
         # against an absent key and resurrect it; the tombstone must
         # stay to outrank re-deliveries.  read_state() hides them.
         merged = lww_dedup(rows, keys, version_cols)
-        merged.withColumn("bkt", _bucket_col(keys, n_buckets)).write.mode(
-            "overwrite"
-        ).partitionBy("bkt").parquet(os.path.join(state_dir, f"v{nxt}"))
+        _write_version(
+            merged.withColumn("bkt", _bucket_col(keys, n_buckets)), state_dir, nxt,
+            n_buckets, manifest["buckets"], retain_versions,
+        )
     finally:
         if cached:
             parsed.unpersist()
-    _publish_version(
-        state_dir, nxt, n_buckets, manifest["buckets"] if manifest else {},
-        merged.schema, retain_versions,
-    )
 
 
 def _bucket_col(keys: Sequence[str], n_buckets: int) -> F.Column:
@@ -545,10 +563,9 @@ def seed_state(
         rows = rows.withColumn("_seq", F.lit(0).cast("long"))
     # a snapshot re-read under load may carry per-key duplicates
     rows = lww_dedup(rows, keys, version_cols)
-    rows.withColumn("bkt", _bucket_col(keys, n_buckets)).write.mode(
-        "overwrite"
-    ).partitionBy("bkt").parquet(os.path.join(state_dir, "v0"))
-    _publish_version(state_dir, 0, n_buckets, {}, rows.schema)
+    _write_version(
+        rows.withColumn("bkt", _bucket_col(keys, n_buckets)), state_dir, 0, n_buckets, {}
+    )
 
 
 def compact_state(
@@ -577,21 +594,14 @@ def compact_state(
     bucket, a legacy manifest-less snapshot); otherwise returns the new
     version."""
     prev = _current_version(state_dir)
-    manifest = _read_manifest(state_dir, prev)
-    if manifest is None or all(v == prev for v in manifest["buckets"].values()):
+    manifest = _read_manifest(state_dir, prev) or {"buckets": {}}
+    if all(v == prev for v in manifest["buckets"].values()):
         return None
     df = _read_buckets(
         spark, state_dir, manifest, [int(b) for b in manifest["buckets"]]
     )
-    nxt = prev + 1
-    df.write.mode("overwrite").partitionBy("bkt").parquet(
-        os.path.join(state_dir, f"v{nxt}")
-    )
-    _publish_version(
-        state_dir, nxt, manifest["n_buckets"], {}, df.drop("bkt").schema,
-        retain_versions,
-    )
-    return nxt
+    _write_version(df, state_dir, prev + 1, manifest["n_buckets"], {}, retain_versions)
+    return prev + 1
 
 
 TOPIC_TABLE_RE = r"^postgres_cdc\.iman\.(.*)$"  # RegexRouter, setup.sh:119-126
@@ -755,11 +765,11 @@ def run_slot_lag_monitor(
     micro-batch partitioning of the stream (the property the parity
     test asserts).  State publishes through the same
     write-new-version-then-swap-_CURRENT scheme as the CDC state
-    (run_cdc_pipeline) — atomic visibility, never overwrites its
-    input — and each version records the query and batch_id it merged
-    so an at-least-once REPLAY of the trailing micro-batch (crash between
-    swap and checkpoint commit) is detected and skipped instead of
-    SUM-merging n_records twice.
+    (``_write_version``) — atomic visibility, never overwrites its
+    input — and each version's manifest records the query and batch_id
+    it merged as its ``"marker"``, so an at-least-once REPLAY of the
+    trailing micro-batch (crash between swap and checkpoint commit) is
+    detected and skipped instead of SUM-merging n_records twice.
 
     100 TB plan: per-batch work is one topic-grain partial agg of the
     batch plus a merge against topic-cardinality state — independent
@@ -773,11 +783,10 @@ def run_slot_lag_monitor(
         # the engine re-deliver the SAME batch_id on restart.  The MAX
         # merges (confirmed_lsn, last_ts) are idempotent but the SUM of
         # n_records is not, so re-merging would double-count.  Each
-        # published version records the batch_id it merged (an
-        # underscore-prefixed sidecar, invisible to parquet readers);
-        # the swap makes state + marker visible atomically, and a
-        # replayed batch whose id already sits in the current version
-        # is a no-op.  Only the latest id is needed: the engine replays
+        # published version's manifest records the batch it merged; the
+        # swap makes state + marker visible atomically, and a replayed
+        # batch whose marker already sits in the current version is a
+        # no-op.  Only the latest marker is needed: the engine replays
         # at most the one uncommitted trailing batch.  The marker names
         # the query too ("<queryId>:<batch_id>", the id a checkpoint
         # keeps across restarts): a fresh checkpoint over existing state
@@ -785,17 +794,10 @@ def run_slot_lag_monitor(
         # Markers written before the query id was recorded hold only
         # the batch id and compare on it alone.
         query_id = spark.sparkContext.getLocalProperty("sql.streaming.queryId")
-        if prev is not None:
-            marker = os.path.join(state_dir, f"v{prev}", "_BATCH_ID")
-            try:
-                with open(marker) as f:
-                    seen = f.read().strip()
-                if seen == f"{query_id}:{batch_id}" or (
-                    ":" not in seen and int(seen) == batch_id
-                ):
-                    return
-            except (OSError, ValueError):
-                pass
+        marker = f"{query_id}:{batch_id}"
+        seen = (_read_manifest(state_dir, prev) or {}).get("marker")
+        if seen in (marker, str(batch_id)):
+            return
         agg = batch.groupBy("event_type").agg(
             F.max("event_id").cast("long").alias("confirmed_lsn"),
             F.count("*").cast("long").alias("n_records"),
@@ -812,14 +814,10 @@ def run_slot_lag_monitor(
                     F.max("last_ts").alias("last_ts"),
                 )
             )
-        nxt = 0 if prev is None else prev + 1
-        vdir = os.path.join(state_dir, f"v{nxt}")
         # topic-cardinality state: one bucket, rewritten whole
-        agg.withColumn("bkt", F.lit(0)).write.mode("overwrite").partitionBy(
-            "bkt"
-        ).parquet(vdir)
-        with open(os.path.join(vdir, "_BATCH_ID"), "w") as f:
-            f.write(f"{query_id}:{batch_id}")
-        _publish_version(state_dir, nxt, 1, {}, agg.schema)
+        _write_version(
+            agg.withColumn("bkt", F.lit(0)), state_dir, 0 if prev is None else prev + 1,
+            1, {}, marker=marker,
+        )
 
     _run_available_now(stream, checkpoint_dir, update)

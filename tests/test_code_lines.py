@@ -1,0 +1,82 @@
+"""tools/code_lines.py: code lines without blanks, comments and
+docstrings, per file and per named function (no Spark)."""
+
+from __future__ import annotations
+
+import ast
+import textwrap
+
+import pytest
+
+from tools.code_lines import code_lines, count, docstring_lines, main
+
+SOURCE = textwrap.dedent(
+    '''\
+    """Module docstring,
+    two lines."""
+
+    import os  # a trailing comment keeps the line
+
+    # a comment line
+
+
+    def f(a,
+          b):
+        """One-line docstring."""
+        return a + b
+
+
+    @staticmethod
+    def g():
+        """Docstring
+        over three
+        lines."""
+        sql = """
+        SELECT 1
+        """
+        return sql
+
+
+    class C:
+        """Class docstring."""
+
+        def m(self):
+            return os.sep
+    '''
+)
+
+
+def test_blanks_comments_and_docstrings_do_not_count():
+    lines = code_lines(SOURCE)
+    # import; def f (2 lines) + return; decorator, def g, the 3-line
+    # string assignment, return; class C, def m, return
+    assert sorted(lines) == [4, 9, 10, 12, 15, 16, 20, 21, 22, 23, 26, 29, 30]
+    assert docstring_lines(ast.parse(SOURCE)) == {1, 2, 11, 17, 18, 19, 27}
+
+
+def test_named_functions_and_rest():
+    out = count(SOURCE, ["f", "g"])
+    assert out["<file>"] == 13
+    assert out["f"] == 3
+    assert out["g"] == 6  # the decorator belongs to the function
+    assert out["<named>"] == 9
+    assert out["<rest>"] == 4
+    assert count(SOURCE, ["C"])["C"] == 3
+    assert count(SOURCE) == {"<file>": 13}
+
+
+def test_unknown_name_raises():
+    with pytest.raises(KeyError):
+        count(SOURCE, ["m"])  # a method, not a top-level definition
+
+
+def test_main_prints_counts(tmp_path, capsys):
+    path = tmp_path / "mod.py"
+    path.write_text(SOURCE)
+    assert main([str(path), "f,g"]) == 0
+    out = capsys.readouterr().out.splitlines()
+    assert [line.split() for line in out] == [
+        ["13", str(path)], ["3", "f"], ["6", "g"], ["9", "<named>"], ["4", "<rest>"],
+    ]
+    assert main([str(path), "nope"]) == 2
+    assert main([]) == 2

@@ -1733,8 +1733,10 @@ def test_slot_lag_monitor_fresh_checkpoint_not_skipped(spark, tmp_path):
     """A monitor restarted on a NEW checkpoint over existing state counts
     from batch 0 again; that batch is new data, not a replay of the
     published batch 0 of the old checkpoint, so the replay guard must
-    not skip it.  A marker written before the query id was recorded
-    (the batch id alone) still stops a replay of that batch."""
+    not skip it.  State whose marker sits in a ``_BATCH_ID`` sidecar
+    instead of the manifest, whether the batch id alone (written before
+    the query id was recorded) or ``"<queryId>:<batch_id>"``, still
+    stops a replay of that batch."""
     from kafka_connect_postgres_to_clickhouse_spark.streaming.pipeline import (
         _current_version,
         run_slot_lag_monitor,
@@ -1760,14 +1762,26 @@ def test_slot_lag_monitor_fresh_checkpoint_not_skipped(spark, tmp_path):
     (row,) = read_state(spark, state).collect()
     assert (row.event_type, row.n_records, row.confirmed_lsn) == ("page_view", 25, 24)
 
-    # legacy marker + replay of ck2's batch 0: skipped, nothing double-counted
-    with open(os.path.join(state, f"v{_current_version(state)}", "_BATCH_ID"), "w") as f:
-        f.write("0")
-    (tmp_path / "ck2" / "commits" / "0").unlink()
-    (tmp_path / "ck2" / "commits" / ".0.crc").unlink(missing_ok=True)
-    run_slot_lag_monitor(s2, state, str(tmp_path / "ck2"))
-    (row,) = read_state(spark, state).collect()
-    assert (row.n_records, row.confirmed_lsn) == (25, 24)
+    # state in the older format, with the marker in a _BATCH_ID sidecar
+    # and none in the manifest: either legacy marker form stops a replay
+    # of ck2's batch 0, so nothing is double-counted or published
+    query_id = json.loads((tmp_path / "ck2" / "metadata").read_text())["id"]
+    v = _current_version(state)
+    vdir = os.path.join(state, f"v{v}")
+    with open(os.path.join(vdir, "_MANIFEST.json")) as f:
+        manifest = json.load(f)
+    assert manifest.pop("marker") == f"{query_id}:0"
+    with open(os.path.join(vdir, "_MANIFEST.json"), "w") as f:
+        json.dump(manifest, f)
+    for legacy in ("0", f"{query_id}:0"):
+        with open(os.path.join(vdir, "_BATCH_ID"), "w") as f:
+            f.write(legacy)
+        (tmp_path / "ck2" / "commits" / "0").unlink()
+        (tmp_path / "ck2" / "commits" / ".0.crc").unlink(missing_ok=True)
+        run_slot_lag_monitor(s2, state, str(tmp_path / "ck2"))
+        (row,) = read_state(spark, state).collect()
+        assert (row.n_records, row.confirmed_lsn) == (25, 24)
+        assert _current_version(state) == v
 
 
 def test_dlq_replay_overwrites_not_appends(spark, tmp_path, users_schema):
@@ -2278,6 +2292,75 @@ def test_manifest_without_schema_reads_through_inference(spark, tmp_path, users_
         3: ("user3", "Gold"),
         999: ("updated_user", "Test"),
     }
+
+
+def test_bucketed_state_without_manifest_fails_loudly(spark, tmp_path, users_schema):
+    """A bucketed version whose manifest is missing or does not parse is
+    not a legacy flat snapshot: read as one it loses every bucket that
+    older versions hold, and a one-bucket commit would publish the loss.
+    ``read_state`` and commits at 1 and 8 buckets all raise, naming the
+    version, and leave ``_CURRENT``, every version directory and the
+    DLQ untouched."""
+    import re
+
+    from kafka_connect_postgres_to_clickhouse_spark.streaming.pipeline import (
+        _merge_batch,
+        seed_state,
+    )
+
+    snap = spark.range(1, 101).select(
+        F.col("id").cast("int").alias("user_id"),
+        F.concat(F.lit("user"), F.col("id")).alias("username"),
+        F.lit("Bronze").alias("account_type"),
+        F.timestamp_micros(F.lit(1_700_000_000_000_000)).alias("updated_at"),
+    )
+    batch = (
+        snap.filter(F.col("user_id") <= 3)
+        .withColumn("account_type", F.lit("Gold"))
+        .withColumn("updated_at", F.timestamp_micros(F.lit(1_800_000_000_000_000)))
+        .select(
+            F.col("user_id").cast("long").alias("_seq"),
+            F.lit("postgres_cdc.iman.users").alias("topic"),
+            F.lit("u").alias("op"),
+            build_envelope_json(users_schema, "postgres_cdc.iman.users.Value").alias(
+                "value"
+            ),
+        )
+    )
+
+    def listing(root):
+        return sorted(
+            os.path.relpath(os.path.join(d, n), root)
+            for d, _, names in os.walk(root)
+            for n in names
+        )
+
+    for damage in ("missing", "truncated"):
+        state_dir = str(tmp_path / damage)
+        dlq = tmp_path / f"dlq_{damage}"
+        seed_state(spark, snap, state_dir, KEYS, VERSION, n_buckets=8)
+        _merge_batch(spark, batch, users_schema, state_dir, KEYS, VERSION, False, 8)
+        assert read_state(spark, state_dir).count() == 100
+        manifest = os.path.join(state_dir, "v1", "_MANIFEST.json")
+        if damage == "missing":
+            os.remove(manifest)
+        else:
+            with open(manifest, "r+") as f:
+                f.truncate(10)
+        before = listing(state_dir)
+        named = re.escape(os.path.join(state_dir, "v1"))
+        with pytest.raises(ValueError, match=named):
+            read_state(spark, state_dir)
+        for n in (1, 8):
+            with pytest.raises(ValueError, match=named):
+                _merge_batch(
+                    spark, batch, users_schema, state_dir, KEYS, VERSION, False, n,
+                    dlq_dir=str(dlq),
+                )
+        assert listing(state_dir) == before
+        with open(os.path.join(state_dir, "_CURRENT")) as f:
+            assert f.read() == "1"
+        assert not dlq.exists()
 
 
 def test_multimodal_real_png_decode_and_resize(spark):
