@@ -20,6 +20,7 @@ from __future__ import annotations
 
 import json
 import os
+import re
 from collections.abc import Callable, Sequence
 from concurrent.futures import ThreadPoolExecutor
 from functools import partial
@@ -30,7 +31,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..operators.envelope import parse_envelope
-from ..operators.upsert import lww_dedup
+from ..operators.upsert import lww_dedup, upsert_batch
 
 WIRE_SCHEMA = T.StructType(
     [
@@ -56,11 +57,20 @@ def _current_marker(state_dir: str) -> str:
 
 
 def _current_version(state_dir: str) -> int | None:
+    """The version ``_CURRENT`` names, or None when there is no
+    ``_CURRENT`` (no state yet).  A ``_CURRENT`` that does not parse
+    raises: read as "no state", the next commit would take version 0
+    and publish only its own batch."""
+    path = _current_marker(state_dir)
     try:
-        with open(_current_marker(state_dir)) as f:
-            return int(f.read().strip())
-    except (OSError, ValueError):
+        with open(path) as f:
+            text = f.read()
+    except FileNotFoundError:
         return None
+    try:
+        return int(text.strip())
+    except ValueError:
+        raise ValueError(f"{path} does not parse: {text!r}") from None
 
 
 def _read_manifest(state_dir: str, version: int | None) -> dict | None:
@@ -106,7 +116,10 @@ def _read_manifest(state_dir: str, version: int | None) -> dict | None:
     return manifest
 
 
-def prune_state_versions(state_dir: str, keep: int = 3) -> list[int]:
+RETAIN_VERSIONS = 3  # committed versions every commit keeps on disk
+
+
+def prune_state_versions(state_dir: str, keep: int = RETAIN_VERSIONS) -> list[int]:
     """Bounded-disk retention for versioned state snapshots — the
     ClickHouse old-part cleanup analog (merged parts linger briefly for
     in-flight readers, then go).  Without it every micro-batch leaves a
@@ -121,7 +134,6 @@ def prune_state_versions(state_dir: str, keep: int = 3) -> list[int]:
     AFTER the ``_CURRENT`` swap; a crash mid-prune just leaves extra
     old dirs for the next batch's prune — correctness never depends on
     pruning having run.  Returns the removed version numbers."""
-    import re
     import shutil
 
     cur = _current_version(state_dir)
@@ -160,16 +172,17 @@ def prune_state_versions(state_dir: str, keep: int = 3) -> list[int]:
 def _write_version(
     rows: DataFrame,
     state_dir: str,
-    version: int,
+    prev: int | None,
     n_buckets: int,
     held: dict[str, int],
-    retain_versions: int = 3,
     marker: str | None = None,
-) -> None:
-    """Write ``rows`` (which carry their ``bkt`` column) as state version
-    ``v{version}`` and commit it — the one write step every state writer
-    shares, and with ``_read_manifest`` the only code that knows the
-    on-disk format.  Rows land as ``v{version}/bkt=i/`` parquet.  The
+) -> int:
+    """Write ``rows`` (which carry their ``bkt`` column) as the state
+    version after ``prev`` (``v0`` when ``prev`` is None) and commit it;
+    return the new version.  This is the one write step every state
+    writer shares, the only code that numbers versions, and with
+    ``_read_manifest`` the only code that knows the on-disk format.
+    Rows land as ``v{version}/bkt=i/`` parquet.  The
     manifest then maps each bucket to the version holding it: ``held``
     (buckets kept from older versions) updated with the ``bkt=``
     directories just written, a local listing instead of a Spark
@@ -179,7 +192,9 @@ def _write_version(
     the ``_CURRENT`` swap, the commit point (write-new-part-then-swap,
     as ClickHouse merges do: a crash before it leaves readable state
     untouched), then the retention prune, which runs only after the
-    swap."""
+    swap and keeps the newest ``RETAIN_VERSIONS`` committed versions
+    (plus every version they still read buckets from)."""
+    version = 0 if prev is None else prev + 1
     vdir = os.path.join(state_dir, f"v{version}")
     rows.write.mode("overwrite").partitionBy("bkt").parquet(vdir)
     written = {d[4:]: version for d in os.listdir(vdir) if d.startswith("bkt=")}
@@ -196,7 +211,8 @@ def _write_version(
     with open(tmp, "w") as f:
         f.write(str(version))
     os.replace(tmp, _current_marker(state_dir))
-    prune_state_versions(state_dir, keep=retain_versions)
+    prune_state_versions(state_dir, keep=RETAIN_VERSIONS)
+    return version
 
 
 def read_state(spark: SparkSession, state_dir: str) -> DataFrame | None:
@@ -302,18 +318,19 @@ def run_cdc_pipeline(
     version_cols: Sequence[str],
     apply_deletes: bool = False,
     dlq_dir: str | None = None,
-    retain_versions: int = 3,
     n_buckets: int = 1,
 ) -> None:
     """Run the full pipeline until no more input (Trigger.AvailableNow):
     every record, whatever its topic, merges into the one table at
     ``state_dir`` — the one-table case of ``run_multi_table_pipeline``.
 
-    Per micro-batch (``_merge_batch``): parse envelope (PERMISSIVE —
-    corrupt rows dropped, mirroring errors.tolerance=all), drop
-    tombstones (null value, setup.sh:94,107), drop deletes (default,
-    SURVEY.md section 0), then merge batch with existing state under
-    LWW and publish a new state version.
+    The table's settings are bound to ``_merge_batch`` once, here; each
+    micro-batch is then just ``merge(batch, batch_id)``, the
+    ``foreachBatch`` sink function.  Per micro-batch: parse envelope
+    (PERMISSIVE — corrupt rows dropped, mirroring errors.tolerance=all),
+    drop tombstones (null value, setup.sh:94,107), drop deletes
+    (default, SURVEY.md section 0), then merge batch with existing state
+    under LWW and publish a new state version.
 
     State is hash-bucketed by key into ``n_buckets`` buckets behind a
     per-version manifest; a commit rewrites only the buckets its keys
@@ -334,85 +351,19 @@ def run_cdc_pipeline(
     pointer flipped after the new version is fully written, so a
     mid-write crash never corrupts readable state, the merge never
     overwrites its own input, and nothing round-trips through the
-    driver.  Re-running a batch after failure converges (LWW is
-    idempotent); with a lakehouse table format the body becomes a
-    single MERGE INTO keyed on ``keys``.
+    driver.  The newest ``RETAIN_VERSIONS`` (3) committed versions stay
+    on disk for readers that resolved ``_CURRENT`` just before a swap;
+    ``prune_state_versions(state_dir, keep=1)`` reclaims the rest when
+    no reader is running.  Re-running a batch after failure converges
+    (LWW is idempotent); with a lakehouse table format the body becomes
+    a single MERGE INTO keyed on ``keys``.
     """
-    _run_tables(
-        stream, checkpoint_dir, {None: (payload_schema, keys, state_dir, dlq_dir)},
-        version_cols, apply_deletes, retain_versions, n_buckets,
+    merge = partial(
+        _merge_batch, stream.sparkSession, payload_schema=payload_schema,
+        state_dir=state_dir, keys=keys, version_cols=version_cols,
+        apply_deletes=apply_deletes, n_buckets=n_buckets, dlq_dir=dlq_dir,
     )
-
-
-def _run_tables(
-    stream: DataFrame,
-    checkpoint_dir: str,
-    tables: dict[str | None, tuple],
-    version_cols: Sequence[str],
-    apply_deletes: bool,
-    retain_versions: int,
-    n_buckets: int,
-    topic_re: str | None = None,
-    unrouted_dir: str | None = None,
-) -> None:
-    """The loop both CDC pipelines run: ``tables`` maps a table name to
-    its (payload schema, keys, state dir, DLQ dir).  With ``topic_re`` each
-    micro-batch is routed by topic into per-table slices, and records
-    whose topic names no table in ``tables`` go raw to
-    ``unrouted_dir/batch_id=N`` when it is set; the slices and that
-    write commit concurrently (``_run_concurrently``).  Without
-    ``topic_re`` the one table takes every record, on the stream
-    thread."""
-    spark = stream.sparkSession
-
-    def merge(table: str | None, batch: DataFrame, batch_id: int) -> None:
-        schema, keys, state_dir, dlq_dir = tables[table]
-        _merge_batch(
-            spark, batch, schema, state_dir, keys, version_cols, apply_deletes,
-            n_buckets, retain_versions, dlq_dir, batch_id,
-        )
-
-    def commit(batch: DataFrame, batch_id: int) -> None:
-        if topic_re is None:
-            (table,) = tables
-            merge(table, batch, batch_id)
-            return
-        # persisted because 1 + |tables| jobs consume the routed batch
-        # (the distinct-table collect plus one filtered slice per
-        # table, and the unrouted slice when there is one): without it
-        # every table's merge re-reads and re-routes the SOURCE
-        # micro-batch
-        routed = batch.withColumn(
-            "_table", F.regexp_extract("topic", topic_re, 1)
-        ).persist()
-        try:
-            names = [r._table for r in routed.select("_table").distinct().collect()]
-            work = [
-                partial(
-                    merge, name,
-                    routed.filter(F.col("_table") == name).drop("_table"), batch_id,
-                )
-                for name in names
-                if name in tables
-            ]
-            if unrouted_dir is not None and not set(names) <= tables.keys():
-                # same per-batch overwrite as the corrupt-record DLQ
-                lost = routed.filter(
-                    F.col("_table").isNull() | ~F.col("_table").isin(*tables)
-                ).select("_seq", "topic", "value")
-                work.append(
-                    partial(
-                        lost.write.mode("overwrite").parquet,
-                        os.path.join(unrouted_dir, f"batch_id={batch_id}"),
-                    )
-                )
-            # the tables of one batch are independent mirrors (ordering
-            # is per key), so their commits overlap instead of queueing
-            _run_concurrently(spark, work)
-        finally:
-            routed.unpersist()
-
-    _run_available_now(stream, checkpoint_dir, commit)
+    _run_available_now(stream, checkpoint_dir, lambda batch, i: merge(batch, batch_id=i))
 
 
 def _merge_batch(
@@ -424,7 +375,6 @@ def _merge_batch(
     version_cols: Sequence[str],
     apply_deletes: bool,
     n_buckets: int = 1,
-    retain_versions: int = 3,
     dlq_dir: str | None = None,
     batch_id: int = 0,
 ) -> None:
@@ -468,7 +418,6 @@ def _merge_batch(
             f"{state_dir} holds bucketed state with n_buckets={manifest['n_buckets']}, "
             f"commit asked n_buckets={n_buckets}; rebucketing requires an explicit rewrite"
         )
-    nxt = 0 if prev is None else prev + 1
     wire = batch.filter(F.col("value").isNotNull())
     parsed = parse_envelope(wire.withColumn("_raw", F.col("value")), payload_schema)
     survives = ~F.col("_corrupt")
@@ -510,17 +459,18 @@ def _merge_batch(
             return  # empty/corrupt-only batch: state and manifest stand
         existing = _read_buckets(spark, state_dir, manifest, want)
         rows = parsed.filter(survives).drop("_corrupt", "_raw")
-        if existing is not None:
-            rows = existing.drop("bkt").unionByName(rows, allowMissingColumns=True)
         # Deletes are KEPT in the persisted state as tombstone rows
         # (op='d' version winners).  Filtering them out here would let
         # a re-delivered older event in a later micro-batch win LWW
         # against an absent key and resurrect it; the tombstone must
         # stay to outrank re-deliveries.  read_state() hides them.
-        merged = lww_dedup(rows, keys, version_cols)
+        if existing is None:
+            merged = lww_dedup(rows, keys, version_cols)
+        else:
+            merged = upsert_batch(existing.drop("bkt"), rows, keys, version_cols)
         _write_version(
-            merged.withColumn("bkt", _bucket_col(keys, n_buckets)), state_dir, nxt,
-            n_buckets, manifest["buckets"], retain_versions,
+            merged.withColumn("bkt", _bucket_col(keys, n_buckets)), state_dir, prev,
+            n_buckets, manifest["buckets"],
         )
     finally:
         if cached:
@@ -564,20 +514,20 @@ def seed_state(
     # a snapshot re-read under load may carry per-key duplicates
     rows = lww_dedup(rows, keys, version_cols)
     _write_version(
-        rows.withColumn("bkt", _bucket_col(keys, n_buckets)), state_dir, 0, n_buckets, {}
+        rows.withColumn("bkt", _bucket_col(keys, n_buckets)), state_dir, None, n_buckets, {}
     )
 
 
-def compact_state(
-    spark: SparkSession, state_dir: str, retain_versions: int = 3
-) -> int | None:
+def compact_state(spark: SparkSession, state_dir: str) -> int | None:
     """Rewrite every live bucket into ONE fresh version — the
     ``OPTIMIZE TABLE ... FINAL`` analog.
 
-    ``retain_versions`` defaults to the merge paths' keep window (3) so
-    a reader that resolved ``_CURRENT`` just before the swap can still
-    finish its scan; pass 1 for immediate reclaim ONLY when no
-    concurrent readers exist (e.g. an offline maintenance window).
+    The publish keeps the merge paths' window of ``RETAIN_VERSIONS``
+    (3) committed versions, so a reader that resolved ``_CURRENT`` just
+    before the swap can still finish its scan.  For immediate reclaim
+    call ``prune_state_versions(state_dir, keep=1)`` afterwards, ONLY
+    when no concurrent readers exist (e.g. an offline maintenance
+    window).
 
     Copy-on-write leaves dead bucket copies behind: a version dir must
     survive while ANY of its buckets is still referenced, so the stale
@@ -597,11 +547,8 @@ def compact_state(
     manifest = _read_manifest(state_dir, prev) or {"buckets": {}}
     if all(v == prev for v in manifest["buckets"].values()):
         return None
-    df = _read_buckets(
-        spark, state_dir, manifest, [int(b) for b in manifest["buckets"]]
-    )
-    _write_version(df, state_dir, prev + 1, manifest["n_buckets"], {}, retain_versions)
-    return prev + 1
+    df = _read_buckets(spark, state_dir, manifest, [int(b) for b in manifest["buckets"]])
+    return _write_version(df, state_dir, prev, manifest["n_buckets"], {})
 
 
 TOPIC_TABLE_RE = r"^postgres_cdc\.iman\.(.*)$"  # RegexRouter, setup.sh:119-126
@@ -617,7 +564,6 @@ def run_multi_table_pipeline(
     version_cols: Sequence[str],
     apply_deletes: bool = False,
     topic_re: str = TOPIC_TABLE_RE,
-    retain_versions: int = 3,
     n_buckets: int = 1,
     dlq_dir: str | None = None,
 ) -> None:
@@ -626,10 +572,12 @@ def run_multi_table_pipeline(
     connector pair; RegexRouter maps topic -> table, setup.sh:119-126;
     dynamic discovery from the catalog, setup.sh:29-32).
 
-    Each micro-batch is routed by topic into per-table slices, each
-    committed exactly as ``run_cdc_pipeline`` commits its one table,
-    into its own versioned state directory under ``state_root/<table>``
-    with corrupt records in ``dlq_dir/<table>/batch_id=N``.  Records
+    Each table's settings are bound to ``_merge_batch`` once, here, as
+    ``run_cdc_pipeline`` binds its one table's; routing is the only
+    thing this call adds.  Each micro-batch is routed by topic into
+    per-table slices, each committed by its table's merge into its own
+    versioned state directory under ``state_root/<table>`` with corrupt
+    records in ``dlq_dir/<table>/batch_id=N``.  Records
     whose topic does not match ``topic_re`` or names a table outside
     ``schemas`` land raw in ``dlq_dir/_unrouted/batch_id=N``, so a table
     may not be named ``_unrouted``.
@@ -648,18 +596,54 @@ def run_multi_table_pipeline(
     """
     if UNROUTED in schemas:
         raise ValueError(f"table name {UNROUTED!r} is reserved for unrouted records")
-    tables = {
-        t: (
-            schema, keys[t], os.path.join(state_root, t),
-            None if dlq_dir is None else os.path.join(dlq_dir, t),
+    spark = stream.sparkSession
+    merges = {
+        t: partial(
+            _merge_batch, spark, payload_schema=schema,
+            state_dir=os.path.join(state_root, t), keys=keys[t],
+            version_cols=version_cols, apply_deletes=apply_deletes, n_buckets=n_buckets,
+            dlq_dir=None if dlq_dir is None else os.path.join(dlq_dir, t),
         )
         for t, schema in schemas.items()
     }
-    _run_tables(
-        stream, checkpoint_dir, tables, version_cols, apply_deletes,
-        retain_versions, n_buckets, topic_re,
-        None if dlq_dir is None else os.path.join(dlq_dir, UNROUTED),
-    )
+
+    def commit(batch: DataFrame, batch_id: int) -> None:
+        # persisted because 1 + |tables| jobs consume the routed batch
+        # (the distinct-table collect plus one filtered slice per
+        # table, and the unrouted slice when there is one): without it
+        # every table's merge re-reads and re-routes the SOURCE
+        # micro-batch
+        routed = batch.withColumn(
+            "_table", F.regexp_extract("topic", topic_re, 1)
+        ).persist()
+        try:
+            names = [r._table for r in routed.select("_table").distinct().collect()]
+            work = [
+                partial(
+                    merges[name], routed.filter(F.col("_table") == name).drop("_table"),
+                    batch_id=batch_id,
+                )
+                for name in names
+                if name in merges
+            ]
+            if dlq_dir is not None and not set(names) <= merges.keys():
+                # same per-batch overwrite as the corrupt-record DLQ
+                lost = routed.filter(
+                    F.col("_table").isNull() | ~F.col("_table").isin(*merges)
+                ).select("_seq", "topic", "value")
+                work.append(
+                    partial(
+                        lost.write.mode("overwrite").parquet,
+                        os.path.join(dlq_dir, UNROUTED, f"batch_id={batch_id}"),
+                    )
+                )
+            # the tables of one batch are independent mirrors (ordering
+            # is per key), so their commits overlap instead of queueing
+            _run_concurrently(spark, work)
+        finally:
+            routed.unpersist()
+
+    _run_available_now(stream, checkpoint_dir, commit)
 
 
 def kafka_reader_options(bootstrap: str, topics: str) -> dict[str, str]:
@@ -713,8 +697,9 @@ def bootstrap_pipeline(
     3. primary key per the reference heuristic — a ``*_id`` column if
        present, else the first column (setup.sh:54-64's
        ``COALESCE(pk, first_column)``);
-    4. ``run_multi_table_pipeline`` with one state dir per table, and
-       with ``dlq_dir`` one dead-letter directory per table (plus
+    4. ``run_multi_table_pipeline`` routing the topics of that schema,
+       ``postgres_cdc.<schema>.<table>``, with one state dir per table,
+       and with ``dlq_dir`` one dead-letter directory per table (plus
        ``_unrouted``), so a tolerated corrupt envelope is kept, not lost.
 
     Returns the discovered ``{table: StructType}`` so callers can
@@ -743,8 +728,9 @@ def bootstrap_pipeline(
         id_cols = [r.column_name for r in tcols if r.column_name.endswith("_id")]
         keys[t] = [id_cols[0] if id_cols else tcols[0].column_name]
     run_multi_table_pipeline(
-        stream, schemas, keys, state_root, checkpoint_dir, version_cols,
-        apply_deletes, n_buckets=n_buckets, dlq_dir=dlq_dir,
+        stream, schemas, keys, state_root, checkpoint_dir, version_cols, apply_deletes,
+        topic_re=rf"^postgres_cdc\.{re.escape(schema)}\.(.*)$", n_buckets=n_buckets,
+        dlq_dir=dlq_dir,
     )
     return schemas
 
@@ -816,8 +802,7 @@ def run_slot_lag_monitor(
             )
         # topic-cardinality state: one bucket, rewritten whole
         _write_version(
-            agg.withColumn("bkt", F.lit(0)), state_dir, 0 if prev is None else prev + 1,
-            1, {}, marker=marker,
+            agg.withColumn("bkt", F.lit(0)), state_dir, prev, 1, {}, marker=marker
         )
 
     _run_available_now(stream, checkpoint_dir, update)

@@ -1,14 +1,21 @@
 """tools/code_lines.py: code lines without blanks, comments and
-docstrings, per file and per named function (no Spark)."""
+docstrings, per file and per named function; and where the CDC state
+format may appear in ``streaming/pipeline.py`` (no Spark)."""
 
 from __future__ import annotations
 
 import ast
 import textwrap
+from pathlib import Path
 
 import pytest
 
 from tools.code_lines import code_lines, count, docstring_lines, main
+
+PIPELINE = (
+    Path(__file__).resolve().parents[1]
+    / "kafka_connect_postgres_to_clickhouse_spark" / "streaming" / "pipeline.py"
+)
 
 SOURCE = textwrap.dedent(
     '''\
@@ -80,3 +87,39 @@ def test_main_prints_counts(tmp_path, capsys):
     ]
     assert main([str(path), "nope"]) == 2
     assert main([]) == 2
+
+
+def _holders(tree: ast.Module, match) -> set[str]:
+    """Names of the top-level definitions (``<module>`` for module-level
+    statements) holding a node for which ``match`` is true, docstrings
+    left out."""
+    docs = docstring_lines(tree)
+    return {
+        getattr(top, "name", "<module>")
+        for top in tree.body
+        for node in ast.walk(top)
+        if getattr(node, "lineno", None) not in docs and match(node)
+    }
+
+
+def _literal(text: str):
+    def match(node):
+        return isinstance(node, ast.Constant) and text in str(node.value)
+
+    return match
+
+
+def test_state_format_stays_in_its_functions():
+    """The on-disk state format lives in ``_write_version`` (the one
+    writer) and ``_read_manifest`` (the one reader of manifests and of
+    older formats); ``_CURRENT`` is named by ``_current_marker`` alone.
+    A format change then edits those functions and no other."""
+    tree = ast.parse(PIPELINE.read_text())
+
+    def partition_by(n):
+        return isinstance(n, ast.Call) and getattr(n.func, "attr", None) == "partitionBy"
+
+    assert _holders(tree, partition_by) == {"_write_version"}
+    assert _holders(tree, _literal("_MANIFEST.json")) == {"_write_version", "_read_manifest"}
+    assert _holders(tree, _literal("_BATCH_ID")) == {"_read_manifest"}
+    assert _holders(tree, _literal("_CURRENT")) == {"_current_marker"}

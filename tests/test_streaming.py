@@ -186,8 +186,8 @@ def test_streaming_schema_evolution_restart(spark, tmp_path, users_schema):
 def test_state_version_retention_bounded(spark, tmp_path, users_schema):
     """State disk must be bounded by the retention window, not by
     micro-batch count: six single-event micro-batches advance the
-    versioned state v0..v5, and with retain_versions=2 only the two
-    newest snapshots survive on disk — while the final state still
+    versioned state v0..v5, and only the three newest snapshots
+    (``RETAIN_VERSIONS``) survive on disk — while the final state still
     equals the golden fold (pruning is invisible to correctness, the
     ClickHouse old-part cleanup analog)."""
     import os
@@ -215,13 +215,13 @@ def test_state_version_retention_bounded(spark, tmp_path, users_schema):
         )
         run_cdc_pipeline(
             changelog_file_stream(spark, str(src)), users_schema, state_dir, ckpt,
-            KEYS, VERSION, retain_versions=2,
+            KEYS, VERSION,
         )
 
     on_disk = sorted(
         int(d[1:]) for d in os.listdir(state_dir) if re.fullmatch(r"v\d+", d)
     )
-    assert on_disk == [4, 5], f"retention window violated: {on_disk}"
+    assert on_disk == [3, 4, 5], f"retention window violated: {on_disk}"
     assert _state_map(read_state(spark, state_dir)) == {
         1: ("user1", "Bronze"),
         2: ("user2", "Silver"),
@@ -229,7 +229,7 @@ def test_state_version_retention_bounded(spark, tmp_path, users_schema):
         999: ("updated_user", "Test"),
     }
     # keep=1 may drop everything but the current version — never it
-    assert prune_state_versions(state_dir, keep=1) == [4]
+    assert prune_state_versions(state_dir, keep=1) == [3, 4]
     assert read_state(spark, state_dir).count() == 4
 
 
@@ -326,7 +326,7 @@ def test_bucketed_state_copy_on_write(spark, tmp_path, users_schema):
     _write_batch_file(src, "batch_a.json", [r for r in wire if r._seq <= 3])
     run_cdc_pipeline(
         changelog_file_stream(spark, str(src)), users_schema, state_dir, ckpt,
-        KEYS, VERSION, retain_versions=1, n_buckets=8,
+        KEYS, VERSION, n_buckets=8,
     )
     v0_buckets = {d for d in os.listdir(state_dir + "/v0") if d.startswith("bkt=")}
     assert v0_buckets, "first batch wrote no buckets"
@@ -335,12 +335,17 @@ def test_bucketed_state_copy_on_write(spark, tmp_path, users_schema):
     _write_batch_file(src, "batch_b.json", [r for r in wire if r._seq >= 4])
     run_cdc_pipeline(
         changelog_file_stream(spark, str(src)), users_schema, state_dir, ckpt,
-        KEYS, VERSION, retain_versions=1, n_buckets=8,
+        KEYS, VERSION, n_buckets=8,
     )
     v1_buckets = {d for d in os.listdir(state_dir + "/v1") if d.startswith("bkt=")}
     assert len(v1_buckets) == 1, f"expected 1 rewritten bucket, got {v1_buckets}"
     # keep=1 would normally remove v0 — its buckets are live in the
     # manifest, so it must survive
+    from kafka_connect_postgres_to_clickhouse_spark.streaming.pipeline import (
+        prune_state_versions,
+    )
+
+    assert prune_state_versions(state_dir, keep=1) == []
     versions = {d for d in os.listdir(state_dir) if re.fullmatch(r"v\d+", d)}
     assert "v0" in versions and "v1" in versions
 
@@ -380,7 +385,8 @@ def test_bucketed_state_copy_on_write(spark, tmp_path, users_schema):
         compact_state,
     )
 
-    assert compact_state(spark, state_dir, retain_versions=1) == 2
+    assert compact_state(spark, state_dir) == 2
+    assert prune_state_versions(state_dir, keep=1) == [0, 1]
     versions = {d for d in os.listdir(state_dir) if re.fullmatch(r"v\d+", d)}
     assert versions == {"v2"}, f"compaction left {versions}"
     assert _state_map(read_state(spark, state_dir)) == golden
@@ -1333,6 +1339,53 @@ def test_bootstrap_pipeline_from_catalog(spark, tmp_path):
     # the truncated envelope is kept raw in the table's DLQ, not lost
     dead = spark.read.parquet(str(tmp_path / "dlq" / "users" / "batch_id=0")).collect()
     assert [(r._seq, r.value) for r in dead] == [(bad["_seq"], bad["value"])]
+
+
+def test_bootstrap_pipeline_routes_the_discovered_schema(spark, tmp_path):
+    """``bootstrap_pipeline(schema=...)`` routes the topics of the schema
+    it discovered, ``postgres_cdc.<schema>.<table>``, not those of the
+    default ``iman``: with the catalog and the topics renamed to schema
+    ``shop`` the mirror is the golden state and nothing is unrouted."""
+    from pyspark.sql import Row
+
+    from kafka_connect_postgres_to_clickhouse_spark.sources.catalog import (
+        catalog_columns_df,
+        catalog_tables_df,
+    )
+    from kafka_connect_postgres_to_clickhouse_spark.streaming.pipeline import (
+        bootstrap_pipeline,
+    )
+
+    def shop(df):
+        schema = F.col("table_schema")
+        return df.withColumn(
+            "table_schema", F.when(schema == "iman", "shop").otherwise(schema)
+        )
+
+    src = tmp_path / "wire"
+    src.mkdir()
+    rows = [
+        Row(**{**r.asDict(), "topic": "postgres_cdc.shop.users"}) for r in _wire_rows(spark)
+    ]
+    _write_batch_file(src, "batch_0.json", rows)
+    schemas = bootstrap_pipeline(
+        shop(catalog_tables_df(spark)),
+        shop(catalog_columns_df(spark)),
+        changelog_file_stream(spark, str(src)),
+        str(tmp_path / "state"),
+        str(tmp_path / "ckpt"),
+        VERSION,
+        schema="shop",
+        dlq_dir=str(tmp_path / "dlq"),
+    )
+    assert list(schemas) == ["users"]
+    assert _state_map(read_state(spark, str(tmp_path / "state" / "users"))) == {
+        1: ("user1", "Bronze"),
+        2: ("user2", "Silver"),
+        3: ("user3", "Gold"),
+        999: ("updated_user", "Test"),
+    }
+    assert not (tmp_path / "dlq" / "_unrouted").exists()
 
 
 def test_dedup_within_watermark_bounded_state(spark, tmp_path):
@@ -2363,6 +2416,75 @@ def test_bucketed_state_without_manifest_fails_loudly(spark, tmp_path, users_sch
         assert not dlq.exists()
 
 
+def test_unparseable_current_fails_loudly(spark, tmp_path, users_schema):
+    """Only a missing ``_CURRENT`` means "no state".  One that does not
+    parse must not: read as no state, a commit takes version 0 and
+    overwrites ``v0`` with its own batch, and ``seed_state`` does the
+    same with its snapshot.  ``read_state``, commits at 1 and 8 buckets,
+    ``seed_state`` and ``compact_state`` all raise, naming the file,
+    and every file under the state dir and the DLQ stays
+    byte-identical."""
+    import re
+    from pathlib import Path
+
+    from kafka_connect_postgres_to_clickhouse_spark.streaming.pipeline import (
+        _merge_batch,
+        compact_state,
+        seed_state,
+    )
+
+    snap = spark.range(1, 101).select(
+        F.col("id").cast("int").alias("user_id"),
+        F.concat(F.lit("user"), F.col("id")).alias("username"),
+        F.lit("Bronze").alias("account_type"),
+        F.timestamp_micros(F.lit(1_700_000_000_000_000)).alias("updated_at"),
+    )
+    batch = (
+        snap.filter(F.col("user_id") <= 3)
+        .withColumn("account_type", F.lit("Gold"))
+        .withColumn("updated_at", F.timestamp_micros(F.lit(1_800_000_000_000_000)))
+        .select(
+            F.col("user_id").cast("long").alias("_seq"),
+            F.lit("postgres_cdc.iman.users").alias("topic"),
+            F.lit("u").alias("op"),
+            build_envelope_json(users_schema, "postgres_cdc.iman.users.Value").alias(
+                "value"
+            ),
+        )
+    )
+
+    def contents(root):
+        files = (p for p in Path(root).rglob("*") if p.is_file())
+        return {p.relative_to(root): p.read_bytes() for p in files}
+
+    state_dir, dlq = str(tmp_path / "state"), str(tmp_path / "dlq")
+    seed_state(spark, snap, state_dir, KEYS, VERSION, n_buckets=8)
+    _merge_batch(
+        spark, batch, users_schema, state_dir, KEYS, VERSION, False, 8, dlq_dir=dlq
+    )
+    assert read_state(spark, state_dir).count() == 100
+    current = os.path.join(state_dir, "_CURRENT")
+    with open(current, "w") as f:
+        f.write("0x")
+    before, dlq_before = contents(state_dir), contents(dlq)
+    assert dlq_before  # batch 0's DLQ partition, which a commit would overwrite
+    named = re.escape(current)
+    with pytest.raises(ValueError, match=named):
+        read_state(spark, state_dir)
+    for n in (1, 8):
+        with pytest.raises(ValueError, match=named):
+            _merge_batch(
+                spark, batch, users_schema, state_dir, KEYS, VERSION, False, n,
+                dlq_dir=dlq,
+            )
+    with pytest.raises(ValueError, match=named):
+        seed_state(spark, snap.limit(3), state_dir, KEYS, VERSION, n_buckets=8)
+    with pytest.raises(ValueError, match=named):
+        compact_state(spark, state_dir)
+    assert contents(state_dir) == before
+    assert contents(dlq) == dlq_before
+
+
 def test_multimodal_real_png_decode_and_resize(spark):
     """REAL compressed image decode end-to-end through Spark: PNG
     payloads (cycle-filtered, so every un-filter arm runs inside the
@@ -2491,12 +2613,12 @@ def test_bucketed_hot_key_storm_bounded_and_correct(spark, tmp_path, users_schem
     _write_batch_file(src, "batch_a.json", [r for r in wire if r._seq <= 400])
     run_cdc_pipeline(
         changelog_file_stream(spark, str(src)), users_schema, state_dir, ckpt,
-        KEYS, VERSION, retain_versions=1, n_buckets=8,
+        KEYS, VERSION, n_buckets=8,
     )
     _write_batch_file(src, "batch_b.json", [r for r in wire if r._seq > 400])
     run_cdc_pipeline(
         changelog_file_stream(spark, str(src)), users_schema, state_dir, ckpt,
-        KEYS, VERSION, retain_versions=1, n_buckets=8,
+        KEYS, VERSION, n_buckets=8,
     )
 
     # bounded rewrite: the pure-storm batch touched one key -> one bucket
