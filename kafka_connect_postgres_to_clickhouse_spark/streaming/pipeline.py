@@ -182,8 +182,8 @@ def _write_version(
     return the new version.  This is the one write step every state
     writer shares, the only code that numbers versions, and with
     ``_read_manifest`` the only code that knows the on-disk format.
-    Rows land as ``v{version}/bkt=i/`` parquet.  The
-    manifest then maps each bucket to the version holding it: ``held``
+    Rows land as ``v{version}/bkt=i/`` parquet.  The manifest then maps
+    each bucket to the version holding it: ``held``
     (buckets kept from older versions) updated with the ``bkt=``
     directories just written, a local listing instead of a Spark
     collect.  It records the schema of ``rows`` without ``bkt``, so
