@@ -40,6 +40,14 @@ def lww_dedup(
     return agg.select(*[F.col(f"_winner.{c}").alias(c) for c in df.columns])
 
 
+def not_deleted(op_col: str = "op") -> F.Column:
+    """True for every row whose ``op`` is not ``'d'``, NULL included: a
+    source that carries no op (the Kafka source emits ``op = NULL``)
+    passes everything through.  The one delete rule of the batch folds,
+    the streaming merge and ``read_state``."""
+    return (F.col(op_col) != F.lit("d")) | F.col(op_col).isNull()
+
+
 def apply_changelog(
     changelog: DataFrame,
     keys: Sequence[str],
@@ -56,13 +64,14 @@ def apply_changelog(
     and the row persists — SURVEY.md section 0).
 
     ``apply_deletes=True`` is the documented stricter extension: the
-    *final* event per key decides survival (op != 'd').
+    *final* event per key decides survival (op != 'd').  A NULL op is
+    never a delete, in either mode (``not_deleted``).
     """
     if not apply_deletes:
-        survivors = changelog.filter(F.col(op_col) != F.lit("d"))
+        survivors = changelog.filter(not_deleted(op_col))
         return lww_dedup(survivors, keys, version_cols)
     latest = lww_dedup(changelog, keys, version_cols)
-    return latest.filter(F.col(op_col) != F.lit("d"))
+    return latest.filter(not_deleted(op_col))
 
 
 def upsert_batch(

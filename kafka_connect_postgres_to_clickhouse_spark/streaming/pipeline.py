@@ -31,7 +31,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..operators.envelope import parse_envelope
-from ..operators.upsert import lww_dedup, upsert_batch
+from ..operators.upsert import lww_dedup, not_deleted, upsert_batch
 
 WIRE_SCHEMA = T.StructType(
     [
@@ -79,41 +79,21 @@ def _read_manifest(state_dir: str, version: int | None) -> dict | None:
     holding it>}, "schema": <StructType JSON of the rows this version
     wrote>}``, plus ``"marker"`` when the writer recorded one (the
     slot-lag monitor's replay marker).  This and ``_write_version`` are
-    the only code that knows the on-disk format; older formats come back
-    in this shape:
-
-    - a manifest without ``"schema"`` (written before schemas were
-      recorded) is returned as is, and readers infer the schema;
-    - a manifest-less ``v{N}`` with no ``bkt=`` directory (the
-      monolithic layout, parquet straight in the version directory) is
-      one flat bucket, ``{"n_buckets": 1, "buckets": {"0": N}, "flat":
-      True}``;
-    - a ``_BATCH_ID`` sidecar (where the monitor kept its marker) becomes
-      ``"marker"``.
-
-    A version that holds ``bkt=`` directories but no manifest, a
-    manifest that does not parse, and a missing version directory raise:
-    read as a flat snapshot, such a version would silently lose every
-    bucket it does not hold itself."""
+    the only code that knows the on-disk format, and state is read in
+    that one format: ``v{N}/_MANIFEST.json`` is the only file read
+    here.  A manifest that is missing or does not parse raises
+    ``ValueError`` naming the version; this includes state written
+    before manifests existed (parquet straight in ``v{N}``), which must
+    be re-seeded.  ``_read_buckets`` refuses a manifest without
+    ``"schema"``; prune needs only ``"buckets"``."""
     if version is None:
         return None
-    vdir = os.path.join(state_dir, f"v{version}")
-    path = os.path.join(vdir, "_MANIFEST.json")
+    path = os.path.join(state_dir, f"v{version}", "_MANIFEST.json")
     try:
         with open(path) as f:
-            manifest = json.load(f)
-    except FileNotFoundError:
-        if any(d.startswith("bkt=") for d in os.listdir(vdir)):
-            raise ValueError(f"{vdir} holds bucketed state but has no manifest") from None
-        manifest = {"n_buckets": 1, "buckets": {"0": version}, "flat": True}
-    except ValueError as e:
-        raise ValueError(f"{path} does not parse: {e}") from e
-    try:
-        with open(os.path.join(vdir, "_BATCH_ID")) as f:
-            manifest.setdefault("marker", f.read().strip())
-    except FileNotFoundError:
-        pass
-    return manifest
+            return json.load(f)
+    except (OSError, ValueError) as e:
+        raise ValueError(f"{path} cannot be read: {e}") from e
 
 
 RETAIN_VERSIONS = 3  # committed versions every commit keeps on disk
@@ -217,10 +197,11 @@ def _write_version(
 
 def read_state(spark: SparkSession, state_dir: str) -> DataFrame | None:
     """Read the current state snapshot (versioned-directory scheme)
-    through its manifest, in whatever format ``_read_manifest`` found it;
-    None when there is no state or no bucket holds rows yet.  The
-    manifest's bookkeeping (bucket map, schema, the slot-lag monitor's
-    replay marker) never shows up as rows.
+    through its manifest; None when there is no state or no bucket holds
+    rows yet.  State in any other format raises ``ValueError`` naming
+    the version (``_read_manifest``, ``_read_buckets``).  The manifest's
+    bookkeeping (bucket map, schema, the slot-lag monitor's replay
+    marker) never shows up as rows.
 
     Delete tombstones (op='d' LWW winners, kept so re-delivered older
     events cannot resurrect a deleted key) are hidden: the merge reads
@@ -232,7 +213,7 @@ def read_state(spark: SparkSession, state_dir: str) -> DataFrame | None:
         return None
     df = df.drop("bkt")
     if "op" in df.columns:
-        df = df.filter((F.col("op") != "d") | F.col("op").isNull())
+        df = df.filter(not_deleted())
     return df
 
 
@@ -242,13 +223,13 @@ def _read_buckets(
     """Read the requested buckets of a state through its manifest — the
     only parquet reader of state.  Each bucket comes from the VERSION
     that currently holds it (copy-on-write: untouched buckets still
-    live in older version dirs).  Reads are per-bucket directory paths,
-    so a merge that wants 3 of 64 buckets lists and scans exactly those
-    3 — the partition-pruning this layout exists for; a flat version
-    (``_read_manifest``'s monolithic case) is read whole as bucket 0.
-    Each version reads with the schema its own manifest records, so
-    planning the read runs no Spark job; a manifest without one falls
-    back to parquet schema inference.  Schema differences across
+    live in older version dirs).  Reads are per-bucket ``bkt=``
+    directory paths, so a merge that wants 3 of 64 buckets lists and
+    scans exactly those 3 — the partition-pruning this layout exists
+    for.  Each version reads with the schema its own manifest records,
+    so planning the read runs no Spark job; a manifest without
+    ``"schema"`` (written before schemas were recorded) raises
+    ``ValueError`` naming the version.  Schema differences across
     versions (evolution rewrote touched buckets only) merge via
     unionByName(allowMissingColumns=True).  Returns None when no
     requested bucket has any state yet."""
@@ -262,11 +243,11 @@ def _read_buckets(
     for ver, buckets in sorted(by_version.items()):
         vdir = os.path.join(state_dir, f"v{ver}")
         own = _read_manifest(state_dir, ver)
-        reader = spark.read.option("basePath", vdir)
-        if "schema" in own:
-            reader = reader.schema(T.StructType.fromJson(own["schema"]))
+        if "schema" not in own:
+            raise ValueError(f"{vdir} records no schema; re-seed it")
+        reader = spark.read.schema(T.StructType.fromJson(own["schema"]))
         paths = [os.path.join(vdir, f"bkt={b}") for b in sorted(buckets)]
-        parts.append(reader.parquet(*([vdir] if own.get("flat") else paths)))
+        parts.append(reader.option("basePath", vdir).parquet(*paths))
     if not parts:
         return None
     df = parts[0]
@@ -392,9 +373,10 @@ def _merge_batch(
     the batch, and writes only them into the new version, which
     ``_write_version`` commits with its manifest and the ``_CURRENT``
     swap — per-batch work is O(|batch| + |touched buckets|).  The merge
-    itself holds no format logic: state from older layouts reaches it
-    through ``_read_manifest`` in today's shape.  This is the
-    parts-plus-manifest scheme of
+    reads state in the one format ``_write_version`` writes: a version
+    without a readable manifest, or whose manifest records no schema,
+    raises ``ValueError`` naming it before anything (the DLQ included)
+    is written.  This is the parts-plus-manifest scheme of
     ReplacingMergeTree / lakehouse MERGE re-expressed on plain parquet.
     Schema evolution rides free: only touched buckets rewrite with the
     widened schema and the manifest read unionByName-fills the rest.
@@ -413,6 +395,10 @@ def _merge_batch(
     LWW is idempotent, so a re-delivered batch converges."""
     prev = _current_version(state_dir)
     manifest = _read_manifest(state_dir, prev) or {"n_buckets": n_buckets, "buckets": {}}
+    # checked here too, before anything is written: _read_buckets
+    # raises only after the DLQ pass
+    if prev is not None and "schema" not in manifest:
+        raise ValueError(f"{os.path.join(state_dir, f'v{prev}')} records no schema; re-seed it")
     if manifest["n_buckets"] != n_buckets:
         raise ValueError(
             f"{state_dir} holds bucketed state with n_buckets={manifest['n_buckets']}, "
@@ -422,9 +408,7 @@ def _merge_batch(
     parsed = parse_envelope(wire.withColumn("_raw", F.col("value")), payload_schema)
     survives = ~F.col("_corrupt")
     if not apply_deletes:
-        # NULL-safe on op: a source without an op column (e.g. the
-        # Kafka wrapper emits op=NULL) must pass everything through
-        survives = survives & ((F.col("op") != "d") | F.col("op").isNull())
+        survives = survives & not_deleted()
     touched = None
     if n_buckets > 1:
         touched = Observation()
@@ -541,8 +525,7 @@ def compact_state(spark: SparkSession, state_dir: str) -> int | None:
     point, a crash before it changes nothing.  No-op (returns None)
     when every bucket already lives in the current version — nothing
     to gather (empty state, one bucket, a commit that touched every
-    bucket, a legacy manifest-less snapshot); otherwise returns the new
-    version."""
+    bucket); otherwise returns the new version."""
     prev = _current_version(state_dir)
     manifest = _read_manifest(state_dir, prev) or {"buckets": {}}
     if all(v == prev for v in manifest["buckets"].values()):
@@ -753,9 +736,13 @@ def run_slot_lag_monitor(
     write-new-version-then-swap-_CURRENT scheme as the CDC state
     (``_write_version``) — atomic visibility, never overwrites its
     input — and each version's manifest records the query and batch_id
-    it merged as its ``"marker"``, so an at-least-once REPLAY of the
-    trailing micro-batch (crash between swap and checkpoint commit) is
-    detected and skipped instead of SUM-merging n_records twice.
+    it merged as its ``"marker"``, ``"<queryId>:<batch_id>"``, so an
+    at-least-once REPLAY of the trailing micro-batch (crash between swap
+    and checkpoint commit) is detected and skipped instead of
+    SUM-merging n_records twice.  Only the manifest's marker is
+    compared: monitor state whose marker sits in a sidecar file (written
+    before manifests carried it) is not guarded for its last batch and
+    should be re-seeded.
 
     100 TB plan: per-batch work is one topic-grain partial agg of the
     batch plus a merge against topic-cardinality state — independent
@@ -777,12 +764,9 @@ def run_slot_lag_monitor(
         # the query too ("<queryId>:<batch_id>", the id a checkpoint
         # keeps across restarts): a fresh checkpoint over existing state
         # counts from batch 0 again, and its batch 0 is new data.
-        # Markers written before the query id was recorded hold only
-        # the batch id and compare on it alone.
         query_id = spark.sparkContext.getLocalProperty("sql.streaming.queryId")
         marker = f"{query_id}:{batch_id}"
-        seen = (_read_manifest(state_dir, prev) or {}).get("marker")
-        if seen in (marker, str(batch_id)):
+        if (_read_manifest(state_dir, prev) or {}).get("marker") == marker:
             return
         agg = batch.groupBy("event_type").agg(
             F.max("event_id").cast("long").alias("confirmed_lsn"),

@@ -36,25 +36,36 @@ def test_golden_state_after_three_inserts(spark):
     }
 
 
+def _null_op(log):
+    """The same log from a source that carries no op (the Kafka source
+    emits op = NULL on every record)."""
+    return log.withColumn("op", F.lit(None).cast("string"))
+
+
 def test_delete_is_dropped_like_reference(spark):
     """The reference pipeline drops DELETEs (setup.sh:94,105-107);
-    key 1 must still be present after the delete event."""
+    key 1 must still be present after the delete event.  A NULL op is
+    not a delete: the same log with op NULL keeps every key."""
     log = reference_scenario_changelog(spark)
-    state = _state(apply_changelog(log, KEYS, VERSION))
-    assert state == {
+    golden = {
         1: ("user1", "Bronze"),
         2: ("user2", "Silver"),
         3: ("user3", "Gold"),
         999: ("updated_user", "Test"),
     }
+    assert _state(apply_changelog(log, KEYS, VERSION)) == golden
+    assert _state(apply_changelog(_null_op(log), KEYS, VERSION)) == golden
 
 
 def test_apply_deletes_extension(spark):
-    """Stricter extension mode: op='d' removes the key."""
+    """Stricter extension mode: op='d' removes the key, and a NULL op
+    (no delete) removes none."""
     log = reference_scenario_changelog(spark)
     state = _state(apply_changelog(log, KEYS, VERSION, apply_deletes=True))
     assert 1 not in state
     assert state[999] == ("updated_user", "Test")
+    null_op = apply_changelog(_null_op(log), KEYS, VERSION, apply_deletes=True)
+    assert set(_state(null_op)) == {1, 2, 3, 999}
 
 
 def test_lww_update_wins(spark):
@@ -129,6 +140,10 @@ def test_current_view_collapses_unmerged_appendlog(spark):
     # re-delivered duplicates are also absorbed on read
     dup = log.unionByName(log)
     assert _state(current_view(dup, KEYS, VERSION)) == eager
+    # a NULL op is not a delete, in either mode
+    for apply_deletes in (False, True):
+        view = current_view(_null_op(log), KEYS, VERSION, apply_deletes=apply_deletes)
+        assert set(_state(view)) == {1, 2, 3, 999}
 
 
 def test_lww_version_edge_cases(spark):

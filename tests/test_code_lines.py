@@ -111,9 +111,9 @@ def _literal(text: str):
 
 def test_state_format_stays_in_its_functions():
     """The on-disk state format lives in ``_write_version`` (the one
-    writer) and ``_read_manifest`` (the one reader of manifests and of
-    older formats); ``_CURRENT`` is named by ``_current_marker`` alone.
-    A format change then edits those functions and no other."""
+    writer) and ``_read_manifest`` (the one reader of manifests, which
+    reads no older format); ``_CURRENT`` is named by ``_current_marker``
+    alone.  A format change then edits those functions and no other."""
     tree = ast.parse(PIPELINE.read_text())
 
     def partition_by(n):
@@ -121,5 +121,6 @@ def test_state_format_stays_in_its_functions():
 
     assert _holders(tree, partition_by) == {"_write_version"}
     assert _holders(tree, _literal("_MANIFEST.json")) == {"_write_version", "_read_manifest"}
-    assert _holders(tree, _literal("_BATCH_ID")) == {"_read_manifest"}
+    assert _holders(tree, _literal("_BATCH_ID")) == set()
+    assert _holders(tree, _literal("flat")) == set()
     assert _holders(tree, _literal("_CURRENT")) == {"_current_marker"}

@@ -1786,12 +1786,10 @@ def test_slot_lag_monitor_fresh_checkpoint_not_skipped(spark, tmp_path):
     """A monitor restarted on a NEW checkpoint over existing state counts
     from batch 0 again; that batch is new data, not a replay of the
     published batch 0 of the old checkpoint, so the replay guard must
-    not skip it.  State whose marker sits in a ``_BATCH_ID`` sidecar
-    instead of the manifest, whether the batch id alone (written before
-    the query id was recorded) or ``"<queryId>:<batch_id>"``, still
-    stops a replay of that batch."""
+    not skip it."""
     from kafka_connect_postgres_to_clickhouse_spark.streaming.pipeline import (
         _current_version,
+        _read_manifest,
         run_slot_lag_monitor,
     )
 
@@ -1814,27 +1812,9 @@ def test_slot_lag_monitor_fresh_checkpoint_not_skipped(spark, tmp_path):
     run_slot_lag_monitor(s2, state, str(tmp_path / "ck2"))
     (row,) = read_state(spark, state).collect()
     assert (row.event_type, row.n_records, row.confirmed_lsn) == ("page_view", 25, 24)
-
-    # state in the older format, with the marker in a _BATCH_ID sidecar
-    # and none in the manifest: either legacy marker form stops a replay
-    # of ck2's batch 0, so nothing is double-counted or published
+    # the replay marker is "<queryId>:<batch_id>", kept in the manifest
     query_id = json.loads((tmp_path / "ck2" / "metadata").read_text())["id"]
-    v = _current_version(state)
-    vdir = os.path.join(state, f"v{v}")
-    with open(os.path.join(vdir, "_MANIFEST.json")) as f:
-        manifest = json.load(f)
-    assert manifest.pop("marker") == f"{query_id}:0"
-    with open(os.path.join(vdir, "_MANIFEST.json"), "w") as f:
-        json.dump(manifest, f)
-    for legacy in ("0", f"{query_id}:0"):
-        with open(os.path.join(vdir, "_BATCH_ID"), "w") as f:
-            f.write(legacy)
-        (tmp_path / "ck2" / "commits" / "0").unlink()
-        (tmp_path / "ck2" / "commits" / ".0.crc").unlink(missing_ok=True)
-        run_slot_lag_monitor(s2, state, str(tmp_path / "ck2"))
-        (row,) = read_state(spark, state).collect()
-        assert (row.n_records, row.confirmed_lsn) == (25, 24)
-        assert _current_version(state) == v
+    assert _read_manifest(state, _current_version(state))["marker"] == f"{query_id}:0"
 
 
 def test_dlq_replay_overwrites_not_appends(spark, tmp_path, users_schema):
@@ -2070,68 +2050,6 @@ def test_monolithic_merge_refuses_bucketed_state(spark, tmp_path, users_schema):
     assert not (tmp_path / "dlq").exists()
 
 
-def test_legacy_monolithic_state_stays_readable(spark, tmp_path, users_schema):
-    """States written before the manifest existed (parquet straight in
-    v0/, ``_CURRENT`` = 0, no ``_MANIFEST.json``) read through
-    ``read_state``, refuse a commit at another bucket count, and take a
-    default one-bucket commit on top that lands the golden fold and
-    publishes a manifest with the schema it wrote."""
-    from pyspark.sql import types as T
-
-    from kafka_connect_postgres_to_clickhouse_spark.streaming.pipeline import (
-        _current_version,
-        _read_manifest,
-    )
-
-    state = tmp_path / "state"
-    inserts = (
-        reference_scenario_changelog(spark)
-        .filter(F.col("_seq") <= 3)
-        .select("_seq", "topic", "op", "user_id", "username", "account_type", "updated_at")
-    )
-    inserts.write.parquet(str(state / "v0"))
-    (state / "_CURRENT").write_text("0")
-    assert _state_map(read_state(spark, str(state))) == _state_map(inserts)
-
-    wire = _wire_rows(spark)
-    src = tmp_path / "wire"
-    src.mkdir()
-    _write_batch_file(src, "tail.json", [r for r in wire if r._seq >= 4])
-    with pytest.raises(Exception, match="n_buckets"):
-        run_cdc_pipeline(
-            changelog_file_stream(spark, str(src)), users_schema, str(state),
-            str(tmp_path / "ck8"), KEYS, VERSION, n_buckets=8,
-        )
-    assert _current_version(str(state)) == 0
-
-    run_cdc_pipeline(
-        changelog_file_stream(spark, str(src)), users_schema, str(state),
-        str(tmp_path / "ckpt"), KEYS, VERSION,
-    )
-    assert _state_map(read_state(spark, str(state))) == {
-        1: ("user1", "Bronze"),
-        2: ("user2", "Silver"),
-        3: ("user3", "Gold"),
-        999: ("updated_user", "Test"),
-    }
-    written = T.StructType(
-        [
-            T.StructField("_seq", T.LongType()),
-            T.StructField("topic", T.StringType()),
-            T.StructField("op", T.StringType()),
-            T.StructField("user_id", T.IntegerType()),
-            T.StructField("username", T.StringType()),
-            T.StructField("account_type", T.StringType()),
-            T.StructField("updated_at", T.TimestampType()),
-        ]
-    )
-    assert _read_manifest(str(state), _current_version(str(state))) == {
-        "n_buckets": 1,
-        "buckets": {"0": 1},
-        "schema": written.jsonValue(),
-    }
-
-
 def _jobs_in_group(spark, group: str, fn):
     """Run ``fn()`` under Spark job group ``group``; return its result
     and the number of Spark jobs it ran."""
@@ -2217,8 +2135,9 @@ def _inferred_schema(spark, state_dir):
 
 
 def test_manifest_schema_read_matches_inference(spark, tmp_path, users_schema):
-    """Every state writer records the schema it wrote in its manifest,
-    and ``read_state`` with that schema returns exactly what parquet
+    """Every state writer records the schema it wrote in its manifest
+    (a default one-bucket commit's manifest is pinned whole), and
+    ``read_state`` with that schema returns exactly what parquet
     schema inference over the same files returns: ``seed_state``, a
     one-bucket merge, an 8-bucket merge, ``compact_state`` and the
     slot-lag monitor.  A widened commit at n_buckets=8 records the wide
@@ -2255,6 +2174,24 @@ def test_manifest_schema_read_matches_inference(spark, tmp_path, users_schema):
             str(tmp_path / f"ck{n}"), KEYS, VERSION, n_buckets=n,
         )
         check(state_dir)
+    # a default one-bucket commit's whole manifest: its one bucket and
+    # the schema it wrote (the seeded columns, then the batch's topic)
+    written = T.StructType(
+        [
+            T.StructField("user_id", T.IntegerType()),
+            T.StructField("username", T.StringType()),
+            T.StructField("account_type", T.StringType()),
+            T.StructField("updated_at", T.TimestampType()),
+            T.StructField("op", T.StringType()),
+            T.StructField("_seq", T.LongType()),
+            T.StructField("topic", T.StringType()),
+        ]
+    )
+    assert _read_manifest(str(tmp_path / "state1"), 1) == {
+        "n_buckets": 1,
+        "buckets": {"0": 1},
+        "schema": written.jsonValue(),
+    }
 
     # widened commit at 8 buckets: touched buckets carry the new column,
     # the seeded version's manifest keeps the narrow schema
@@ -2299,61 +2236,16 @@ def test_manifest_schema_read_matches_inference(spark, tmp_path, users_schema):
     check(monitor)
 
 
-def test_manifest_without_schema_reads_through_inference(spark, tmp_path, users_schema):
-    """State whose manifest predates recorded schemas (no ``"schema"``
-    key) reads the same rows and schema through parquet inference, and
-    the next commit publishes a manifest that records its schema."""
-    import json
-
-    from kafka_connect_postgres_to_clickhouse_spark.streaming.pipeline import (
-        _current_version,
-        _read_manifest,
-    )
-
-    wire = _wire_rows(spark)
-    src = tmp_path / "wire"
-    src.mkdir()
-    state_dir, ckpt = str(tmp_path / "state"), str(tmp_path / "ckpt")
-    _write_batch_file(src, "batch_a.json", [r for r in wire if r._seq <= 3])
-    run_cdc_pipeline(
-        changelog_file_stream(spark, str(src)), users_schema, state_dir, ckpt,
-        KEYS, VERSION, n_buckets=8,
-    )
-    before = read_state(spark, state_dir)
-    schema, rows = before.schema, sorted(before.collect())
-    v = _current_version(state_dir)
-    path = os.path.join(state_dir, f"v{v}", "_MANIFEST.json")
-    manifest = _read_manifest(state_dir, v)
-    del manifest["schema"]
-    with open(path, "w") as f:
-        json.dump(manifest, f)
-
-    after = read_state(spark, state_dir)
-    assert after.schema == schema
-    assert sorted(after.collect()) == rows
-
-    _write_batch_file(src, "batch_b.json", [r for r in wire if r._seq >= 4])
-    run_cdc_pipeline(
-        changelog_file_stream(spark, str(src)), users_schema, state_dir, ckpt,
-        KEYS, VERSION, n_buckets=8,
-    )
-    assert _current_version(state_dir) == v + 1
-    assert "schema" in _read_manifest(state_dir, v + 1)
-    assert _state_map(read_state(spark, state_dir)) == {
-        1: ("user1", "Bronze"),
-        2: ("user2", "Silver"),
-        3: ("user3", "Gold"),
-        999: ("updated_user", "Test"),
-    }
-
-
 def test_bucketed_state_without_manifest_fails_loudly(spark, tmp_path, users_schema):
-    """A bucketed version whose manifest is missing or does not parse is
-    not a legacy flat snapshot: read as one it loses every bucket that
-    older versions hold, and a one-bucket commit would publish the loss.
-    ``read_state`` and commits at 1 and 8 buckets all raise, naming the
-    version, and leave ``_CURRENT``, every version directory and the
-    DLQ untouched."""
+    """State is read in one format: every version has a manifest that
+    records its schema.  A version whose manifest is missing or does
+    not parse, state written before manifests existed (parquet straight
+    in ``v0``) and a manifest without ``"schema"`` all raise: read as a
+    flat snapshot, a bucketed version would silently lose every bucket
+    that older versions hold, and a one-bucket commit would publish the
+    loss.  ``read_state`` and commits at 1 and 8 buckets all raise,
+    naming the version, and leave ``_CURRENT``, every version directory
+    and the DLQ untouched."""
     import re
 
     from kafka_connect_postgres_to_clickhouse_spark.streaming.pipeline import (
@@ -2388,20 +2280,40 @@ def test_bucketed_state_without_manifest_fails_loudly(spark, tmp_path, users_sch
             for n in names
         )
 
-    for damage in ("missing", "truncated"):
+    for damage in ("missing", "truncated", "schemaless", "flat"):
         state_dir = str(tmp_path / damage)
         dlq = tmp_path / f"dlq_{damage}"
-        seed_state(spark, snap, state_dir, KEYS, VERSION, n_buckets=8)
-        _merge_batch(spark, batch, users_schema, state_dir, KEYS, VERSION, False, 8)
-        assert read_state(spark, state_dir).count() == 100
-        manifest = os.path.join(state_dir, "v1", "_MANIFEST.json")
-        if damage == "missing":
-            os.remove(manifest)
+        version = 0 if damage == "flat" else 1
+        if damage == "flat":
+            inserts = (
+                reference_scenario_changelog(spark)
+                .filter(F.col("_seq") <= 3)
+                .select(
+                    "_seq", "topic", "op", "user_id", "username", "account_type",
+                    "updated_at",
+                )
+            )
+            inserts.write.parquet(os.path.join(state_dir, "v0"))
+            with open(os.path.join(state_dir, "_CURRENT"), "w") as f:
+                f.write("0")
         else:
-            with open(manifest, "r+") as f:
-                f.truncate(10)
+            seed_state(spark, snap, state_dir, KEYS, VERSION, n_buckets=8)
+            _merge_batch(spark, batch, users_schema, state_dir, KEYS, VERSION, False, 8)
+            assert read_state(spark, state_dir).count() == 100
+            manifest = os.path.join(state_dir, "v1", "_MANIFEST.json")
+            if damage == "missing":
+                os.remove(manifest)
+            elif damage == "truncated":
+                with open(manifest, "r+") as f:
+                    f.truncate(10)
+            else:
+                with open(manifest) as f:
+                    content = json.load(f)
+                del content["schema"]
+                with open(manifest, "w") as f:
+                    json.dump(content, f)
         before = listing(state_dir)
-        named = re.escape(os.path.join(state_dir, "v1"))
+        named = re.escape(os.path.join(state_dir, f"v{version}"))
         with pytest.raises(ValueError, match=named):
             read_state(spark, state_dir)
         for n in (1, 8):
@@ -2412,7 +2324,7 @@ def test_bucketed_state_without_manifest_fails_loudly(spark, tmp_path, users_sch
                 )
         assert listing(state_dir) == before
         with open(os.path.join(state_dir, "_CURRENT")) as f:
-            assert f.read() == "1"
+            assert f.read() == str(version)
         assert not dlq.exists()
 
 
