@@ -740,9 +740,9 @@ def run_slot_lag_monitor(
     at-least-once REPLAY of the trailing micro-batch (crash between swap
     and checkpoint commit) is detected and skipped instead of
     SUM-merging n_records twice.  Only the manifest's marker is
-    compared: monitor state whose marker sits in a sidecar file (written
-    before manifests carried it) is not guarded for its last batch and
-    should be re-seeded.
+    compared: monitor state whose manifest records none (its marker
+    sat in a sidecar file, written before manifests carried it) raises
+    and must be re-seeded.
 
     100 TB plan: per-batch work is one topic-grain partial agg of the
     batch plus a merge against topic-cardinality state — independent
@@ -766,7 +766,10 @@ def run_slot_lag_monitor(
         # counts from batch 0 again, and its batch 0 is new data.
         query_id = spark.sparkContext.getLocalProperty("sql.streaming.queryId")
         marker = f"{query_id}:{batch_id}"
-        if (_read_manifest(state_dir, prev) or {}).get("marker") == marker:
+        # every version this monitor writes records its marker, so one
+        # without it (state whose marker sat in a sidecar file) raises
+        # KeyError here instead of merging a replayed batch twice
+        if (_read_manifest(state_dir, prev) or {"marker": None})["marker"] == marker:
             return
         agg = batch.groupBy("event_type").agg(
             F.max("event_id").cast("long").alias("confirmed_lsn"),

@@ -1786,7 +1786,9 @@ def test_slot_lag_monitor_fresh_checkpoint_not_skipped(spark, tmp_path):
     """A monitor restarted on a NEW checkpoint over existing state counts
     from batch 0 again; that batch is new data, not a replay of the
     published batch 0 of the old checkpoint, so the replay guard must
-    not skip it."""
+    not skip it.  State whose manifest records no marker (the marker sat
+    in a sidecar file before manifests carried it) raises instead of
+    merging a replay of its last batch twice."""
     from kafka_connect_postgres_to_clickhouse_spark.streaming.pipeline import (
         _current_version,
         _read_manifest,
@@ -1814,7 +1816,21 @@ def test_slot_lag_monitor_fresh_checkpoint_not_skipped(spark, tmp_path):
     assert (row.event_type, row.n_records, row.confirmed_lsn) == ("page_view", 25, 24)
     # the replay marker is "<queryId>:<batch_id>", kept in the manifest
     query_id = json.loads((tmp_path / "ck2" / "metadata").read_text())["id"]
-    assert _read_manifest(state, _current_version(state))["marker"] == f"{query_id}:0"
+    v = _current_version(state)
+    manifest = _read_manifest(state, v)
+    assert manifest.pop("marker") == f"{query_id}:0"
+
+    # the same state without its marker: a replay of ck2's batch 0
+    # raises, and nothing is double-counted or published
+    with open(os.path.join(state, f"v{v}", "_MANIFEST.json"), "w") as f:
+        json.dump(manifest, f)
+    (tmp_path / "ck2" / "commits" / "0").unlink()
+    (tmp_path / "ck2" / "commits" / ".0.crc").unlink(missing_ok=True)
+    with pytest.raises(Exception, match="marker"):
+        run_slot_lag_monitor(s2, state, str(tmp_path / "ck2"))
+    assert _current_version(state) == v
+    (row,) = read_state(spark, state).collect()
+    assert (row.n_records, row.confirmed_lsn) == (25, 24)
 
 
 def test_dlq_replay_overwrites_not_appends(spark, tmp_path, users_schema):
