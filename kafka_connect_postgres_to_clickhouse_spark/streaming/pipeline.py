@@ -78,10 +78,10 @@ def _read_manifest(state_dir: str, version: int | None) -> dict | None:
     state.  Shape: ``{"n_buckets": N, "buckets": {"<bucket>": <version
     holding it>}, "schema": <StructType JSON of the rows this version
     wrote>}``, plus ``"marker"`` when the writer recorded one (the
-    slot-lag monitor's replay marker).  This and ``_write_version`` are
-    the only code that knows the on-disk format, and state is read in
-    that one format: ``v{N}/_MANIFEST.json`` is the only file read
-    here.  A manifest that is missing or does not parse raises
+    slot-lag monitor's replay marker).  This, ``_write_version`` and
+    ``_read_buckets`` are the only code that knows the on-disk format,
+    and state is read in that one format: ``v{N}/_MANIFEST.json`` is
+    the only file read here.  A manifest that is missing or does not parse raises
     ``ValueError`` naming the version; this includes state written
     before manifests existed (parquet straight in ``v{N}``), which must
     be re-seeded.  ``_read_buckets`` refuses a manifest without
@@ -161,26 +161,31 @@ def _write_version(
     version after ``prev`` (``v0`` when ``prev`` is None) and commit it;
     return the new version.  This is the one write step every state
     writer shares, the only code that numbers versions, and with
-    ``_read_manifest`` the only code that knows the on-disk format.
-    Rows land as ``v{version}/bkt=i/`` parquet.  The manifest then maps
-    each bucket to the version holding it: ``held``
-    (buckets kept from older versions) updated with the ``bkt=``
-    directories just written, a local listing instead of a Spark
-    collect.  It records the schema of ``rows`` without ``bkt``, so
-    reads of this version plan with no schema-inference job, the way a
-    part knows its own columns, and ``marker`` when one is given.  Then
-    the ``_CURRENT`` swap, the commit point (write-new-part-then-swap,
-    as ClickHouse merges do: a crash before it leaves readable state
-    untouched), then the retention prune, which runs only after the
-    swap and keeps the newest ``RETAIN_VERSIONS`` committed versions
-    (plus every version they still read buckets from)."""
+    ``_read_manifest`` and ``_read_buckets`` the only code that knows
+    the on-disk format.  Rows land as plain parquet in ``v{version}/``,
+    one file per write task, with ``bkt`` a column sorted within each
+    file: the sorted part of a ReplacingMergeTree insert, whose row
+    groups' min/max on ``bkt`` let a read of a few buckets skip the
+    rest.  The manifest then maps each bucket to the version holding
+    it: ``held`` (buckets kept from older versions) updated with the
+    buckets just written, which an ``Observation`` on the write collects
+    at no extra job.  It records the schema of ``rows`` without
+    ``bkt``, so reads of this version plan with no schema-inference
+    job, the way a part knows its own columns, and ``marker`` when one
+    is given.  Then the ``_CURRENT`` swap, the commit point
+    (write-new-part-then-swap, as ClickHouse merges do: a crash before
+    it leaves readable state untouched), then the retention prune,
+    which runs only after the swap and keeps the newest
+    ``RETAIN_VERSIONS`` committed versions (plus every version they
+    still read buckets from)."""
     version = 0 if prev is None else prev + 1
     vdir = os.path.join(state_dir, f"v{version}")
-    rows.write.mode("overwrite").partitionBy("bkt").parquet(vdir)
-    written = {d[4:]: version for d in os.listdir(vdir) if d.startswith("bkt=")}
+    written = Observation()
+    rows = rows.observe(written, F.collect_set("bkt").alias("bkt"))
+    rows.sortWithinPartitions("bkt").write.mode("overwrite").parquet(vdir)
     manifest = {
         "n_buckets": n_buckets,
-        "buckets": {**held, **written},
+        "buckets": {**held, **{str(b): version for b in written.get["bkt"]}},
         "schema": T.StructType([f for f in rows.schema if f.name != "bkt"]).jsonValue(),
     }
     if marker is not None:
@@ -198,10 +203,12 @@ def _write_version(
 def read_state(spark: SparkSession, state_dir: str) -> DataFrame | None:
     """Read the current state snapshot (versioned-directory scheme)
     through its manifest; None when there is no state or no bucket holds
-    rows yet.  State in any other format raises ``ValueError`` naming
-    the version (``_read_manifest``, ``_read_buckets``).  The manifest's
-    bookkeeping (bucket map, schema, the slot-lag monitor's replay
-    marker) never shows up as rows.
+    rows yet.  Every bucket is read from the version the manifest maps
+    it to, that version's files filtered to ``bkt IN`` its buckets
+    (``_read_buckets``), and ``bkt`` is dropped.  State in any other
+    format raises ``ValueError`` naming the version (``_read_manifest``,
+    ``_read_buckets``).  The manifest's bookkeeping (bucket map, schema,
+    the slot-lag monitor's replay marker) never shows up as rows.
 
     Delete tombstones (op='d' LWW winners, kept so re-delivered older
     events cannot resurrect a deleted key) are hidden: the merge reads
@@ -223,16 +230,22 @@ def _read_buckets(
     """Read the requested buckets of a state through its manifest — the
     only parquet reader of state.  Each bucket comes from the VERSION
     that currently holds it (copy-on-write: untouched buckets still
-    live in older version dirs).  Reads are per-bucket ``bkt=``
-    directory paths, so a merge that wants 3 of 64 buckets lists and
-    scans exactly those 3 — the partition-pruning this layout exists
-    for.  Each version reads with the schema its own manifest records,
-    so planning the read runs no Spark job; a manifest without
-    ``"schema"`` (written before schemas were recorded) raises
-    ``ValueError`` naming the version.  Schema differences across
-    versions (evolution rewrote touched buckets only) merge via
-    unionByName(allowMissingColumns=True).  Returns None when no
-    requested bucket has any state yet."""
+    live in older version dirs).  Each such version directory is read
+    once, filtered to ``bkt IN`` the buckets wanted from it.  The
+    filter is what makes the read correct, not a hint: a version's
+    files also hold the buckets later versions have superseded.  It is
+    also the pruning this layout exists for: pushed down to parquet, it
+    skips the row groups whose ``bkt`` min/max miss the wanted buckets,
+    so a merge that wants 3 of 64 buckets decodes little more than
+    those 3.  Versions written as ``bkt=i/`` directories read through
+    the same call, since partition discovery turns the directories into
+    the ``bkt`` column.  Each version reads with the schema its own
+    manifest records, plus ``bkt``, so planning the read runs no Spark
+    job; a manifest without ``"schema"`` (written before schemas were
+    recorded) raises ``ValueError`` naming the version.  Schema
+    differences across versions (evolution rewrote touched buckets
+    only) merge via unionByName(allowMissingColumns=True).  Returns
+    None when no requested bucket has any state yet."""
     held = manifest["buckets"]
     by_version: dict[int, list[int]] = {}
     for b in want:
@@ -245,9 +258,9 @@ def _read_buckets(
         own = _read_manifest(state_dir, ver)
         if "schema" not in own:
             raise ValueError(f"{vdir} records no schema; re-seed it")
-        reader = spark.read.schema(T.StructType.fromJson(own["schema"]))
-        paths = [os.path.join(vdir, f"bkt={b}") for b in sorted(buckets)]
-        parts.append(reader.option("basePath", vdir).parquet(*paths))
+        schema = T.StructType.fromJson(own["schema"]).add("bkt", T.IntegerType())
+        rows = spark.read.schema(schema).parquet(vdir)
+        parts.append(rows.filter(F.col("bkt").isin(sorted(buckets))))
     if not parts:
         return None
     df = parts[0]
@@ -364,22 +377,26 @@ def _merge_batch(
 
     Layout: state rows are hash-bucketed by key
     (``pmod(xxhash64(keys), n_buckets)``, engine-stable), each version
-    directory holds only the buckets ITS batch touched
-    (``vN/bkt=i/``), and an underscore-hidden ``_MANIFEST.json`` maps
-    every bucket to the version that currently holds it and records the
-    version's schema (and, for the slot-lag monitor, its replay marker).
-    A micro-batch reads exactly its touched buckets through the manifest
-    (``_read_buckets``; all of them at one bucket), LWW-merges them with
-    the batch, and writes only them into the new version, which
-    ``_write_version`` commits with its manifest and the ``_CURRENT``
-    swap — per-batch work is O(|batch| + |touched buckets|).  The merge
-    reads state in the one format ``_write_version`` writes: a version
-    without a readable manifest, or whose manifest records no schema,
-    raises ``ValueError`` naming it before anything (the DLQ included)
-    is written.  This is the parts-plus-manifest scheme of
-    ReplacingMergeTree / lakehouse MERGE re-expressed on plain parquet.
-    Schema evolution rides free: only touched buckets rewrite with the
-    widened schema and the manifest read unionByName-fills the rest.
+    directory holds only the buckets ITS batch touched, as parquet files
+    with ``bkt`` a column sorted within each file, and an
+    underscore-hidden ``_MANIFEST.json`` maps every bucket to the
+    version that currently holds it and records the version's schema
+    (and, for the slot-lag monitor, its replay marker).  A micro-batch
+    reads exactly its touched buckets through the manifest
+    (``_read_buckets``: each holding version's files filtered to
+    ``bkt IN`` its wanted buckets; all of them at one bucket),
+    LWW-merges them with the batch, and writes only them into the new
+    version, which ``_write_version`` commits with its manifest and the
+    ``_CURRENT`` swap — per-batch work is O(|batch| + |touched
+    buckets|).  The merge reads state in the one format
+    ``_write_version`` writes: if the current version or any version
+    its manifest maps a bucket to has no readable manifest, or one that
+    records no schema, the merge raises ``ValueError`` naming it before
+    anything (the DLQ included) is written.  This is the
+    parts-plus-manifest scheme of ReplacingMergeTree / lakehouse MERGE
+    re-expressed on plain parquet.  Schema evolution rides free: only
+    touched buckets rewrite with the widened schema and the manifest
+    read unionByName-fills the rest.
 
     Spark work is one pass over the parsed batch plus the merge write;
     the state read plans from the manifest with no job.  With more than
@@ -395,10 +412,12 @@ def _merge_batch(
     LWW is idempotent, so a re-delivered batch converges."""
     prev = _current_version(state_dir)
     manifest = _read_manifest(state_dir, prev) or {"n_buckets": n_buckets, "buckets": {}}
-    # checked here too, before anything is written: _read_buckets
-    # raises only after the DLQ pass
-    if prev is not None and "schema" not in manifest:
-        raise ValueError(f"{os.path.join(state_dir, f'v{prev}')} records no schema; re-seed it")
+    # checked here too, before anything is written, for every version
+    # the state reads from: _read_buckets raises only after the DLQ
+    # pass, and only for the versions holding the touched buckets
+    for ver in sorted({prev, *manifest["buckets"].values()} - {None}):
+        if "schema" not in _read_manifest(state_dir, ver):
+            raise ValueError(f"{os.path.join(state_dir, f'v{ver}')} records no schema; re-seed it")
     if manifest["n_buckets"] != n_buckets:
         raise ValueError(
             f"{state_dir} holds bucketed state with n_buckets={manifest['n_buckets']}, "

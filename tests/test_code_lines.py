@@ -111,15 +111,22 @@ def _literal(text: str):
 
 def test_state_format_stays_in_its_functions():
     """The on-disk state format lives in ``_write_version`` (the one
-    writer) and ``_read_manifest`` (the one reader of manifests, which
-    reads no older format); ``_CURRENT`` is named by ``_current_marker``
-    alone.  A format change then edits those functions and no other."""
+    writer, and the only sort of state rows by bucket), ``_read_manifest``
+    (the one reader of manifests, which reads no older format) and
+    ``_read_buckets`` (the one parquet reader of state); ``_CURRENT`` is
+    named by ``_current_marker`` alone.  No state is written as one
+    directory per bucket.  A format change then edits those functions
+    and no other."""
     tree = ast.parse(PIPELINE.read_text())
 
-    def partition_by(n):
-        return isinstance(n, ast.Call) and getattr(n.func, "attr", None) == "partitionBy"
+    def calls(attr):
+        def match(n):
+            return isinstance(n, ast.Call) and getattr(n.func, "attr", None) == attr
 
-    assert _holders(tree, partition_by) == {"_write_version"}
+        return match
+
+    assert _holders(tree, calls("partitionBy")) == set()
+    assert _holders(tree, calls("sortWithinPartitions")) == {"_write_version"}
     assert _holders(tree, _literal("_MANIFEST.json")) == {"_write_version", "_read_manifest"}
     assert _holders(tree, _literal("_BATCH_ID")) == set()
     assert _holders(tree, _literal("flat")) == set()

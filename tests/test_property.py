@@ -321,6 +321,83 @@ def test_bucketed_fold_matches_monolithic_and_reference(
     assert state_map(bucketed) == expected
 
 
+def test_bucket_directory_version_reads_commits_and_compacts(spark, tmp_path):
+    """State needs no format field: a version written the earlier way,
+    one ``bkt=i/`` directory per bucket plus its manifest, reads through
+    the same ``bkt IN`` read as a version of sorted files with a ``bkt``
+    column, because partition discovery turns the directories into that
+    column.  Such a version reads, takes an 8-bucket commit that leaves
+    some of its buckets in it, and compacts, equal to the pure-Python
+    reference at each step."""
+    import json
+
+    import pyspark.sql.functions as F
+    import pyspark.sql.types as T
+
+    from kafka_connect_postgres_to_clickhouse_spark.operators.envelope import (
+        build_envelope_json,
+    )
+    from kafka_connect_postgres_to_clickhouse_spark.streaming.pipeline import (
+        _merge_batch,
+        _read_buckets,
+        _read_manifest,
+        compact_state,
+        read_state,
+    )
+
+    # 40 keys inserted, then 4 of them updated and one key added
+    rows = [(k, "u", 0, k) for k in range(40)]
+    rows += [(k, "u", 1, 100 + k) for k in (0, 1, 2, 3, 40)]
+    payload_schema = T.StructType(
+        [
+            T.StructField("user_id", T.IntegerType()),
+            T.StructField("tag", T.IntegerType()),
+            T.StructField("updated_at", T.TimestampType()),
+        ]
+    )
+    wire = spark.createDataFrame(
+        [(seq, op, key, tag, ts) for seq, (key, op, ts, tag) in enumerate(rows)],
+        "_seq long, op string, user_id int, tag int, ts_i long",
+    ).select(
+        "_seq", "op", "user_id", "tag",
+        F.timestamp_seconds(F.col("ts_i")).alias("updated_at"),
+    ).select("_seq", "op", build_envelope_json(payload_schema, "t.Value").alias("value"))
+    keys, version = ["user_id"], ["updated_at", "_seq"]
+
+    def state_map(state_dir):
+        return {
+            r.user_id: (int(r.updated_at.timestamp()), r._seq, r.tag)
+            for r in read_state(spark, state_dir).collect()
+        }
+
+    # v0 written the earlier way: the rows of a seeded 8-bucket version,
+    # one bkt=i/ directory per bucket, and a manifest mapping each to v0
+    fresh, state_dir = str(tmp_path / "fresh"), str(tmp_path / "state")
+    _merge_batch(spark, wire.filter("_seq < 40"), payload_schema, fresh, keys, version, False, 8)
+    manifest = _read_manifest(fresh, 0)
+    v0 = os.path.join(state_dir, "v0")
+    _read_buckets(spark, fresh, manifest, range(8)).write.partitionBy("bkt").parquet(v0)
+    assert not [n for n in os.listdir(v0) if n.endswith(".parquet")]
+    dirs = [n for n in os.listdir(v0) if n.startswith("bkt=")]
+    assert len(dirs) == 8, dirs
+    with open(os.path.join(v0, "_MANIFEST.json"), "w") as f:
+        json.dump({**manifest, "buckets": {n[4:]: 0 for n in dirs}}, f)
+    with open(os.path.join(state_dir, "_CURRENT"), "w") as f:
+        f.write("0")
+    assert state_map(state_dir) == _reference_lww(rows[:40])
+
+    _merge_batch(
+        spark, wire.filter("_seq >= 40"), payload_schema, state_dir, keys, version, False, 8,
+        batch_id=1,
+    )
+    assert set(_read_manifest(state_dir, 1)["buckets"].values()) == {0, 1}
+    assert state_map(state_dir) == _reference_lww(rows)
+
+    assert compact_state(spark, state_dir) == 2
+    assert set(_read_manifest(state_dir, 2)["buckets"].values()) == {2}
+    assert state_map(state_dir) == _reference_lww(rows)
+
+
 _payloads = st.lists(
     st.tuples(
         st.integers(min_value=-(2**31), max_value=2**31 - 1),  # user_id

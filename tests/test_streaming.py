@@ -306,6 +306,19 @@ def _write_batch_file(src, name, rows):
     )
 
 
+def _version_buckets(spark, state_dir, version):
+    """The buckets version ``version``'s manifest maps to itself, and
+    the distinct ``bkt`` values its parquet files hold."""
+    from kafka_connect_postgres_to_clickhouse_spark.streaming.pipeline import (
+        _read_manifest,
+    )
+
+    manifest = _read_manifest(state_dir, version)
+    own = {int(b) for b, v in manifest["buckets"].items() if v == version}
+    files = spark.read.parquet(os.path.join(state_dir, f"v{version}"))
+    return own, {r.bkt for r in files.select("bkt").distinct().collect()}
+
+
 def test_bucketed_state_copy_on_write(spark, tmp_path, users_schema):
     """Bucket-level copy-on-write merge (n_buckets): a micro-batch
     rewrites ONLY the buckets its keys touch — the second batch (one
@@ -322,14 +335,16 @@ def test_bucketed_state_copy_on_write(spark, tmp_path, users_schema):
     src.mkdir()
     state_dir, ckpt = str(tmp_path / "state"), str(tmp_path / "ckpt")
 
-    # batch A: the three inserts (keys 1,2,3) -> v0 with >=1 bucket dirs
+    # batch A: the three inserts (keys 1,2,3) -> v0 with >=1 bucket;
+    # its manifest maps exactly the buckets its files hold to it
     _write_batch_file(src, "batch_a.json", [r for r in wire if r._seq <= 3])
     run_cdc_pipeline(
         changelog_file_stream(spark, str(src)), users_schema, state_dir, ckpt,
         KEYS, VERSION, n_buckets=8,
     )
-    v0_buckets = {d for d in os.listdir(state_dir + "/v0") if d.startswith("bkt=")}
-    assert v0_buckets, "first batch wrote no buckets"
+    v0_own, v0_held = _version_buckets(spark, state_dir, 0)
+    assert v0_own, "first batch wrote no buckets"
+    assert v0_held == v0_own, (v0_own, v0_held)
 
     # batch B: delete(1) [dropped] + insert/update key 999 -> ONE bucket
     _write_batch_file(src, "batch_b.json", [r for r in wire if r._seq >= 4])
@@ -337,8 +352,9 @@ def test_bucketed_state_copy_on_write(spark, tmp_path, users_schema):
         changelog_file_stream(spark, str(src)), users_schema, state_dir, ckpt,
         KEYS, VERSION, n_buckets=8,
     )
-    v1_buckets = {d for d in os.listdir(state_dir + "/v1") if d.startswith("bkt=")}
-    assert len(v1_buckets) == 1, f"expected 1 rewritten bucket, got {v1_buckets}"
+    v1_own, v1_held = _version_buckets(spark, state_dir, 1)
+    assert len(v1_own) == 1, f"expected 1 rewritten bucket, got {v1_own}"
+    assert v1_held == v1_own, f"v1's files hold buckets {v1_held}, its manifest {v1_own}"
     # keep=1 would normally remove v0 — its buckets are live in the
     # manifest, so it must survive
     from kafka_connect_postgres_to_clickhouse_spark.streaming.pipeline import (
@@ -456,10 +472,33 @@ def test_snapshot_seed_then_stream_handoff(spark, tmp_path, users_schema):
     assert _state_map(read_state(spark, estate)) == {999: ("updated_user", "Test")}
 
 
+def _scans(df):
+    """``(pushed filters, rows output)`` of each file scan in ``df``'s
+    executed plan: after an action, the rows each scan decoded and
+    emitted."""
+    plan = df._jdf.queryExecution().executedPlan()
+    if plan.getClass().getSimpleName() == "AdaptiveSparkPlanExec":
+        plan = plan.executedPlan()
+    leaves = plan.collectLeaves()
+    nodes = [leaves.apply(i) for i in range(leaves.size())]
+    return [
+        (
+            n.metadata().get("PushedFilters").get(),
+            n.metrics().get("numOutputRows").get().value(),
+        )
+        for n in nodes
+        if n.getClass().getSimpleName() == "FileSourceScanExec"
+    ]
+
+
 def test_bucketed_read_prunes_to_requested_buckets(spark, tmp_path, users_schema):
-    """The manifest read is the partition pruning the layout exists
-    for: asking for ONE bucket must scan files under that bucket's
-    directories only — across versions — never the rest of the state."""
+    """The manifest read is the pruning the layout exists for: asking
+    for ONE bucket scans only the one version that holds it, with the
+    bucket pushed into that scan, and returns exactly the rows of that
+    bucket that a read of the whole state returns — never a row of
+    another bucket, nor a superseded copy of it from an older version."""
+    from collections import Counter
+
     from kafka_connect_postgres_to_clickhouse_spark.streaming.pipeline import (
         _current_version,
         _read_buckets,
@@ -481,13 +520,72 @@ def test_bucketed_read_prunes_to_requested_buckets(spark, tmp_path, users_schema
         KEYS, VERSION, n_buckets=8,
     )
     manifest = _read_manifest(state_dir, _current_version(state_dir))
-    for b in (int(x) for x in manifest["buckets"]):
+    assert len(set(manifest["buckets"].values())) == 2, manifest
+    buckets = [int(x) for x in manifest["buckets"]]
+    whole = _read_buckets(spark, state_dir, manifest, buckets).collect()
+    assert len({r.user_id for r in whole}) == len(whole), whole
+    for b in buckets:
         df = _read_buckets(spark, state_dir, manifest, [b])
-        files = df.inputFiles()
-        assert files, f"bucket {b} produced no input files"
-        assert all(f"bkt={b}" in f for f in files), (
-            f"bucket {b} read leaked outside its directories: {files}"
-        )
+        rows = df.collect()
+        assert rows, f"bucket {b} read no rows"
+        assert Counter(rows) == Counter(r for r in whole if r.bkt == b), b
+        [(pushed, _)] = _scans(df)
+        assert f"EqualTo(bkt,{b})" in pushed, pushed
+
+
+def test_bucket_read_skips_row_groups_of_other_buckets(spark, tmp_path):
+    """Buckets stay a pruned read at scale: a version's files are sorted
+    by ``bkt``, so parquet row-group min/max on it let the scan of one
+    bucket skip the row groups of the others.  A 64-bucket version is
+    written with many small row groups (a small ``parquet.block.size``
+    on the session's Hadoop conf, restored afterwards); reading one
+    bucket through ``_read_buckets`` makes the scan emit far fewer rows
+    than a full scan, and returns exactly that bucket's rows."""
+    import pyarrow.parquet as pq
+
+    from kafka_connect_postgres_to_clickhouse_spark.streaming.pipeline import (
+        _read_buckets,
+        _read_manifest,
+        seed_state,
+    )
+
+    state_dir = str(tmp_path / "state")
+    snap = spark.range(6400).select(
+        F.col("id").cast("int").alias("user_id"),
+        F.concat(F.lit("user"), F.col("id")).alias("username"),
+        F.timestamp_micros(F.lit(1_700_000_000_000_000)).alias("updated_at"),
+    )
+    conf = spark.sparkContext._jsc.hadoopConfiguration()
+    block = conf.get("parquet.block.size")
+    conf.set("parquet.block.size", "8192")
+    try:
+        seed_state(spark, snap, state_dir, KEYS, VERSION, n_buckets=64)
+    finally:
+        if block is None:
+            conf.unset("parquet.block.size")
+        else:
+            conf.set("parquet.block.size", block)
+    vdir = os.path.join(state_dir, "v0")
+    groups = sum(
+        pq.read_metadata(os.path.join(vdir, f)).num_row_groups
+        for f in os.listdir(vdir)
+        if f.endswith(".parquet")
+    )
+    assert groups >= 16, f"only {groups} row groups: nothing to prune"
+    manifest = _read_manifest(state_dir, 0)
+    assert len(manifest["buckets"]) == 64
+
+    full = _read_buckets(spark, state_dir, manifest, range(64))
+    everything = full.collect()
+    [(_, full_scanned)] = _scans(full)
+    assert full_scanned == len(everything) == 6400
+    for b in (0, 17, 63):
+        one = _read_buckets(spark, state_dir, manifest, [b])
+        rows = one.collect()
+        [(_, scanned)] = _scans(one)
+        assert rows and {r.bkt for r in rows} == {b}
+        assert sorted(rows) == sorted(r for r in everything if r.bkt == b)
+        assert len(rows) <= scanned <= full_scanned // 4, (b, len(rows), scanned)
 
 
 def test_bucketed_schema_evolution_touched_only(spark, tmp_path, users_schema):
@@ -2129,8 +2227,9 @@ def test_one_bucket_merge_runs_fewer_jobs(spark, tmp_path, users_schema):
 
 def _inferred_schema(spark, state_dir):
     """Schema of the current state as parquet schema inference sees the
-    same files: every version's buckets inferred from their footers,
-    unioned by name in version order, ``bkt`` dropped."""
+    same files: each version's files inferred from their footers and
+    filtered to the buckets the manifest maps to it, unioned by name in
+    version order, ``bkt`` dropped."""
     from kafka_connect_postgres_to_clickhouse_spark.streaming.pipeline import (
         _current_version,
         _read_manifest,
@@ -2139,13 +2238,11 @@ def _inferred_schema(spark, state_dir):
     manifest = _read_manifest(state_dir, _current_version(state_dir))
     by_version = {}
     for b, v in manifest["buckets"].items():
-        by_version.setdefault(v, []).append(b)
+        by_version.setdefault(v, []).append(int(b))
     df = None
     for v, buckets in sorted(by_version.items()):
-        vdir = os.path.join(state_dir, f"v{v}")
-        part = spark.read.option("basePath", vdir).parquet(
-            *[os.path.join(vdir, f"bkt={b}") for b in sorted(buckets, key=int)]
-        )
+        part = spark.read.parquet(os.path.join(state_dir, f"v{v}"))
+        part = part.filter(F.col("bkt").isin(buckets))
         df = part if df is None else df.unionByName(part, allowMissingColumns=True)
     return df.drop("bkt").schema
 
@@ -2259,13 +2356,18 @@ def test_bucketed_state_without_manifest_fails_loudly(spark, tmp_path, users_sch
     in ``v0``) and a manifest without ``"schema"`` all raise: read as a
     flat snapshot, a bucketed version would silently lose every bucket
     that older versions hold, and a one-bucket commit would publish the
-    loss.  ``read_state`` and commits at 1 and 8 buckets all raise,
-    naming the version, and leave ``_CURRENT``, every version directory
-    and the DLQ untouched."""
+    loss.  This holds for an older version the current one still reads
+    untouched buckets from, too: a commit whose touched buckets all
+    live in the current version must not publish a version that still
+    points at it.  ``read_state``, commits at 1 and 8 buckets and
+    ``compact_state`` all raise, naming the version, and leave every
+    file under the state dir byte-identical and the DLQ unwritten."""
     import re
+    from pathlib import Path
 
     from kafka_connect_postgres_to_clickhouse_spark.streaming.pipeline import (
         _merge_batch,
+        compact_state,
         seed_state,
     )
 
@@ -2289,17 +2391,15 @@ def test_bucketed_state_without_manifest_fails_loudly(spark, tmp_path, users_sch
         )
     )
 
-    def listing(root):
-        return sorted(
-            os.path.relpath(os.path.join(d, n), root)
-            for d, _, names in os.walk(root)
-            for n in names
-        )
+    def contents(root):
+        files = (p for p in Path(root).rglob("*") if p.is_file())
+        return {p.relative_to(root): p.read_bytes() for p in files}
 
-    for damage in ("missing", "truncated", "schemaless", "flat"):
+    for damage in ("missing", "truncated", "schemaless", "schemaless_old", "flat"):
         state_dir = str(tmp_path / damage)
         dlq = tmp_path / f"dlq_{damage}"
-        version = 0 if damage == "flat" else 1
+        current = 0 if damage == "flat" else 1
+        version = 0 if damage in ("flat", "schemaless_old") else 1
         if damage == "flat":
             inserts = (
                 reference_scenario_changelog(spark)
@@ -2316,7 +2416,7 @@ def test_bucketed_state_without_manifest_fails_loudly(spark, tmp_path, users_sch
             seed_state(spark, snap, state_dir, KEYS, VERSION, n_buckets=8)
             _merge_batch(spark, batch, users_schema, state_dir, KEYS, VERSION, False, 8)
             assert read_state(spark, state_dir).count() == 100
-            manifest = os.path.join(state_dir, "v1", "_MANIFEST.json")
+            manifest = os.path.join(state_dir, f"v{version}", "_MANIFEST.json")
             if damage == "missing":
                 os.remove(manifest)
             elif damage == "truncated":
@@ -2328,19 +2428,24 @@ def test_bucketed_state_without_manifest_fails_loudly(spark, tmp_path, users_sch
                 del content["schema"]
                 with open(manifest, "w") as f:
                     json.dump(content, f)
-        before = listing(state_dir)
+        if damage == "schemaless_old":  # v1 still reads untouched buckets from v0
+            v1 = json.loads(Path(state_dir, "v1", "_MANIFEST.json").read_text())
+            assert 0 in v1["buckets"].values() and 1 in v1["buckets"].values(), v1
+        before = contents(state_dir)
         named = re.escape(os.path.join(state_dir, f"v{version}"))
         with pytest.raises(ValueError, match=named):
             read_state(spark, state_dir)
-        for n in (1, 8):
+        for n in (8, 1):
             with pytest.raises(ValueError, match=named):
                 _merge_batch(
                     spark, batch, users_schema, state_dir, KEYS, VERSION, False, n,
                     dlq_dir=str(dlq),
                 )
-        assert listing(state_dir) == before
+        with pytest.raises(ValueError, match=named):
+            compact_state(spark, state_dir)
+        assert contents(state_dir) == before
         with open(os.path.join(state_dir, "_CURRENT")) as f:
-            assert f.read() == str(version)
+            assert f.read() == str(current)
         assert not dlq.exists()
 
 
@@ -2549,18 +2654,16 @@ def test_bucketed_hot_key_storm_bounded_and_correct(spark, tmp_path, users_schem
         KEYS, VERSION, n_buckets=8,
     )
 
-    # bounded rewrite: the pure-storm batch touched one key -> one bucket
-    versions = sorted(
-        (d for d in _os.listdir(state_dir) if _re.fullmatch(r"v\d+", d)),
-        key=lambda d: int(d[1:]),
+    # bounded rewrite: the pure-storm batch touched one key -> one
+    # bucket, the only one its version maps to itself and holds rows of
+    newest = max(
+        int(d[1:]) for d in _os.listdir(state_dir) if _re.fullmatch(r"v\d+", d)
     )
-    storm_buckets = {
-        d for d in _os.listdir(_os.path.join(state_dir, versions[-1]))
-        if d.startswith("bkt=")
-    }
-    assert len(storm_buckets) == 1, (
-        f"hot-key storm rewrote {len(storm_buckets)} buckets: {storm_buckets}"
+    storm_own, storm_held = _version_buckets(spark, state_dir, newest)
+    assert len(storm_own) == 1, (
+        f"hot-key storm rewrote {len(storm_own)} buckets: {storm_own}"
     )
+    assert storm_held == storm_own, (storm_own, storm_held)
 
     # correctness: the engine state equals a per-key highest-_seq fold
     expected = {}
