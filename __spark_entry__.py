@@ -41,12 +41,13 @@ def entry(spark: SparkSession) -> DataFrame:
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     """Registry callables, each pinning the session conf first.
 
-    The driver owns its SparkSession; ``tune`` re-asserts the three
-    runtime-settable confs correctness rides on (UTC session timezone,
-    AQE, parquet nanos handling) on EVERY call — ``load_table`` already
-    sets them whenever a fixture carries timestamp columns, this closes
-    the remaining gap for queries that derive timestamps from integers
-    without loading a timestamp-bearing table."""
+    The driver owns its SparkSession; ``tune`` re-asserts the nine
+    runtime SQL confs and the parquet row-group size on EVERY call.
+    Correctness rides on three of them (UTC session timezone, AQE,
+    parquet nanos handling) — ``load_table`` already sets the timezone
+    and nanos confs whenever a fixture carries timestamp columns, this
+    closes the remaining gap for queries that derive timestamps from
+    integers without loading a timestamp-bearing table."""
 
     def pinned(fn: Callable[[SparkSession, str], DataFrame]):
         def run(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -143,24 +143,21 @@ def build_envelope_json(
     )
 
 
-def parse_envelope(
-    df: DataFrame,
-    payload_schema: T.StructType,
-    value_col: str = "value",
-    mode: str = "PERMISSIVE",
-) -> DataFrame:
-    """bytes/str -> typed flat row (the JsonConverter + unwrap path).
+def parse_envelope(df: DataFrame, payload_schema: T.StructType) -> DataFrame:
+    """bytes/str ``value`` -> typed flat row (the JsonConverter + unwrap
+    path).
 
-    ``mode='PERMISSIVE'`` mirrors ``errors.tolerance=all``
-    (setup.sh:145-147): malformed JSON yields a null struct instead of
-    failing the query; callers route those rows to a DLQ.
+    ``from_json`` runs in ``PERMISSIVE`` mode, which mirrors
+    ``errors.tolerance=all`` (setup.sh:145-147): malformed JSON yields a
+    null struct instead of failing the query; callers route those rows
+    to a DLQ.
     Micro-timestamps are restored with ``timestamp_micros`` — the exact
     inverse of the Debezium MicroTimestamp encoding.
     """
     wire = debezium_value_schema(payload_schema)
     parsed = df.withColumn(
         "_envelope",
-        F.from_json(F.col(value_col).cast("string"), wire, {"mode": mode}),
+        F.from_json(F.col("value").cast("string"), wire, {"mode": "PERMISSIVE"}),
     )
     out_cols = []
     for f in payload_schema.fields:
@@ -175,7 +172,7 @@ def parse_envelope(
                 unscaled / F.lit(10 ** f.dataType.scale).cast(T.DecimalType(19, 0))
             ).cast(f.dataType)
         out_cols.append(c.alias(f.name))
-    keep = [c for c in df.columns if c != value_col]
+    keep = [c for c in df.columns if c != "value"]
     # PERMISSIVE from_json yields a struct of nulls (not a null struct)
     # on malformed input, so corruption == NEITHER field materialized.
     # A null payload under a non-null schema is a legitimate wire form
@@ -201,14 +198,9 @@ def build_key_json(key_schema: T.StructType, schema_name: str) -> Column:
     return build_envelope_json(key_schema, schema_name)
 
 
-def parse_key(
-    df: DataFrame,
-    key_schema: T.StructType,
-    key_col: str = "key",
-    prefix: str = "key_",
-    mode: str = "PERMISSIVE",
-) -> DataFrame:
-    """Parse the wire key envelope into ``{prefix}<pk-col>`` columns.
+def parse_key(df: DataFrame, key_schema: T.StructType) -> DataFrame:
+    """Parse the wire ``key`` envelope into ``key_<pk-col>`` columns
+    (``PERMISSIVE``, like ``parse_envelope``).
 
     The value-side columns are untouched, so callers can assert
     key/payload PK agreement (per-key ordering derives from the key in
@@ -217,13 +209,13 @@ def parse_key(
     wire = debezium_value_schema(key_schema)
     parsed = df.withColumn(
         "_key_envelope",
-        F.from_json(F.col(key_col).cast("string"), wire, {"mode": mode}),
+        F.from_json(F.col("key").cast("string"), wire, {"mode": "PERMISSIVE"}),
     )
     out = [
-        F.col(f"_key_envelope.payload.{f.name}").alias(f"{prefix}{f.name}")
+        F.col(f"_key_envelope.payload.{f.name}").alias(f"key_{f.name}")
         for f in key_schema.fields
     ]
-    keep = [c for c in df.columns if c != key_col]
+    keep = [c for c in df.columns if c != "key"]
     return parsed.select(*keep, *out)
 
 

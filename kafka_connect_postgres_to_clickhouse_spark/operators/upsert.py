@@ -40,19 +40,18 @@ def lww_dedup(
     return agg.select(*[F.col(f"_winner.{c}").alias(c) for c in df.columns])
 
 
-def not_deleted(op_col: str = "op") -> F.Column:
+def not_deleted() -> F.Column:
     """True for every row whose ``op`` is not ``'d'``, NULL included: a
     source that carries no op (the Kafka source emits ``op = NULL``)
     passes everything through.  The one delete rule of the batch folds,
     the streaming merge and ``read_state``."""
-    return (F.col(op_col) != F.lit("d")) | F.col(op_col).isNull()
+    return (F.col("op") != F.lit("d")) | F.col("op").isNull()
 
 
 def apply_changelog(
     changelog: DataFrame,
     keys: Sequence[str],
     version_cols: Sequence[str],
-    op_col: str = "op",
     apply_deletes: bool = False,
 ) -> DataFrame:
     """Fold a changelog into current state (the flagship path).
@@ -68,10 +67,10 @@ def apply_changelog(
     never a delete, in either mode (``not_deleted``).
     """
     if not apply_deletes:
-        survivors = changelog.filter(not_deleted(op_col))
+        survivors = changelog.filter(not_deleted())
         return lww_dedup(survivors, keys, version_cols)
     latest = lww_dedup(changelog, keys, version_cols)
-    return latest.filter(not_deleted(op_col))
+    return latest.filter(not_deleted())
 
 
 def upsert_batch(
@@ -97,7 +96,6 @@ def current_view(
     raw: DataFrame,
     keys: Sequence[str],
     version_cols: Sequence[str],
-    op_col: str = "op",
     apply_deletes: bool = False,
 ) -> DataFrame:
     """Dedup-on-read view of a raw append table — the ClickHouse
@@ -108,4 +106,4 @@ def current_view(
     semantics regardless of physical state.  Identical fold to
     ``apply_changelog``; named separately because it is the READ-path
     contract over any un-merged appendlog."""
-    return apply_changelog(raw, keys, version_cols, op_col, apply_deletes)
+    return apply_changelog(raw, keys, version_cols, apply_deletes)

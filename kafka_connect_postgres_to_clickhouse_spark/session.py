@@ -1,10 +1,13 @@
-"""SparkSession construction for tests / bench.
+"""SparkSession construction for tests / bench, and the runtime conf
+every session runs with.
 
-The driver passes its own session into ``__spark_entry__.entry``; this
-builder is for pytest and bench.py.  Config choices are scale-minded:
-AQE on (runtime re-planning, skew-join handling), UTC session timezone
-(matches the DuckDB oracle, which reads parquet timestamps naively),
-Arrow enabled for the few Pandas-UDF paths.
+The driver passes its own session into ``__spark_entry__.entry``;
+``get_spark`` builds one for pytest, perfbench, bench.py and the tools.
+Both end in ``tune``, the one table of runtime confs.  ``get_spark``
+itself fixes only what a session must have when it is built: the local
+master, shuffle partitions, partition coalescing, Arrow for the few
+Pandas-UDF paths, driver memory and no UI.  ``SPARK_GRAFT_CPUS`` sets
+the master's cores and ``SPARK_DRIVER_MEMORY`` the driver memory.
 """
 
 from __future__ import annotations
@@ -17,79 +20,28 @@ from pyspark.sql import SparkSession
 def get_spark(
     app_name: str = "kcptc-spark",
     cpus: str | int | None = None,
-    shuffle_partitions: int | None = None,
+    shuffle_partitions: int = 32,
 ) -> SparkSession:
     cpus = cpus or os.environ.get("SPARK_GRAFT_CPUS") or "*"
-    shuffle = shuffle_partitions or int(os.environ.get("SPARK_SHUFFLE_PARTITIONS", "32"))
-    # r13-opt (guide §6): floor on SCAN parallelism.  Single mid-sized
-    # parquet files (the wire-envelope spill, lineitem) otherwise read
-    # as 1-2 splits (55 MB / 128 MB maxPartitionBytes) and their
-    # map-side work — JSON serde, decode, explode — runs on 2 of the
-    # session's cores.  Scale-adaptive by construction: the floor is
-    # the session's own parallelism, and a 100 TB table already scans
-    # with far more splits than cores, making the floor a no-op there
-    # (openCostInBytes still prevents slicing tiny files).  Override:
-    # SPARK_FILES_MIN_PARTITIONS.
-    min_parts = os.environ.get("SPARK_FILES_MIN_PARTITIONS") or (
-        cpus if str(cpus).isdigit() else str(os.cpu_count() or 8)
-    )
-    # Split-size floor that pairs with the minPartitionNum floor: the
-    # default 4 MB open-cost floor keeps a compressed-text parquet
-    # (e.g. the ~6 MB-on-disk / ~55 MB-decompressed wire-envelope
-    # spill) at 1-2 splits because split math sees FILE bytes, not
-    # decompressed work.  512 KB keeps small-file packing sane while
-    # letting compressed columnar text fan out; at cluster scale files
-    # are 128 MB-1 GB and this floor is irrelevant (guide §6).
-    # Override: SPARK_FILES_OPEN_COST (bytes).
-    open_cost = os.environ.get("SPARK_FILES_OPEN_COST", str(512 * 1024))
-    # Write-side companion: parquet row groups are the unit a scan can
-    # actually parallelize over, and the default 128 MB target makes
-    # every session-spill file ONE row group — so the two floors above
-    # produce splits that are mostly empty.  4 MB row groups let the
-    # mid-sized spills fan out across the session's cores; production
-    # tables keep the default (large sequential groups amortize better
-    # at 100 TB — guide §6).  Override: SPARK_PARQUET_BLOCK_SIZE.
-    pq_block = os.environ.get("SPARK_PARQUET_BLOCK_SIZE", str(4 * 1024 * 1024))
-    # Join strategy (guide §3.1; the broadcast raise alone measured
-    # -20% on the jaccard candidate-join build and was neutral-to-
-    # positive on every probed line):
-    # - autoBroadcastJoinThreshold 64 MB: the 10 MB default is sized
-    #   for small drivers; with AQE the decision uses RUNTIME sizes,
-    #   so a side that outgrows 64 MB at scale simply never
-    #   broadcasts — the raise is self-gating.
-    # - preferSortMergeJoin stays at the Spark default (true): the
-    #   shuffled-hash preference won ~1 s on the ten most join-heavy
-    #   lines but cost MORE spread over many mid-tail lines in the
-    #   full 533-line A/B (q_fk_inference 0.72->1.34, q_lift_curve
-    #   0.26->0.44, q_window_funnel 0.45->0.67 with SHJ preferred) —
-    #   net negative, so only the broadcast raise is adopted.  Flip
-    #   with SPARK_PREFER_SORTMERGE=false to re-measure.
-    bc_mb = os.environ.get("SPARK_AUTOBROADCAST_MB", "64")
-    prefer_smj = os.environ.get("SPARK_PREFER_SORTMERGE", "true")
-    return (
+    spark = (
         SparkSession.builder.appName(app_name)
         .master(f"local[{cpus}]")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.shuffle.partitions", str(shuffle))
-        .config("spark.sql.files.minPartitionNum", str(min_parts))
-        .config("spark.sql.files.openCostInBytes", open_cost)
-        .config("spark.hadoop.parquet.block.size", pq_block)
-        .config("spark.sql.autoBroadcastJoinThreshold", str(int(bc_mb) * 1024 * 1024))
-        .config("spark.sql.join.preferSortMergeJoin", prefer_smj)
-        .config("spark.sql.adaptive.enabled", "true")
+        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
         .config("spark.ui.enabled", "false")
         .getOrCreate()
     )
+    return tune(spark)
 
 
 def tune(spark: SparkSession) -> SparkSession:
-    """Apply session-level conf we rely on to a driver-provided session."""
+    """Apply the runtime conf we rely on, to a ``get_spark`` session or
+    a driver-provided one alike.  Setting it again changes nothing."""
     for key, value in [
+        # UTC matches the DuckDB oracle, which reads parquet timestamps
+        # naively
         ("spark.sql.session.timeZone", "UTC"),
         ("spark.sql.adaptive.enabled", "true"),
         # runtime split of skewed shuffle partitions: the CDC hot path
@@ -101,43 +53,54 @@ def tune(spark: SparkSession) -> SparkSession:
         # Python DataSource pushFilters raises at plan time if this is
         # off; register_changelog_gen also sets it (belt and braces)
         ("spark.sql.python.filterPushdown.enabled", "true"),
-        # scan-parallelism floor (see get_spark) for driver-provided
-        # sessions; runtime-settable, no-op at cluster scale.  Mirror
-        # get_spark's isdigit() guard (r13 ADVICE): SPARK_GRAFT_CPUS
-        # may legitimately be '*' (unpinned local master), and setting
-        # a non-int on this conf throws — silently losing the floor in
-        # the blanket except below.
-        (
-            "spark.sql.files.minPartitionNum",
-            os.environ.get("SPARK_FILES_MIN_PARTITIONS")
-            or (
-                os.environ.get("SPARK_GRAFT_CPUS", "")
-                if os.environ.get("SPARK_GRAFT_CPUS", "").isdigit()
-                else str(os.cpu_count() or 8)
-            ),
-        ),
-        (
-            "spark.sql.files.openCostInBytes",
-            os.environ.get("SPARK_FILES_OPEN_COST", str(512 * 1024)),
-        ),
-        # join strategy, size-gated at runtime via AQE (see get_spark)
-        (
-            "spark.sql.autoBroadcastJoinThreshold",
-            str(int(os.environ.get("SPARK_AUTOBROADCAST_MB", "64")) * 1024 * 1024),
-        ),
-        (
-            "spark.sql.join.preferSortMergeJoin",
-            os.environ.get("SPARK_PREFER_SORTMERGE", "true"),
-        ),
+        # r13-opt (guide §6): floor on SCAN parallelism.  Single
+        # mid-sized parquet files (the wire-envelope spill, lineitem)
+        # otherwise read as 1-2 splits (55 MB / 128 MB
+        # maxPartitionBytes) and their map-side work — JSON serde,
+        # decode, explode — runs on 2 of the session's cores.
+        # Scale-adaptive by construction: the floor is the session's own
+        # parallelism, and a 100 TB table already scans with far more
+        # splits than cores, making the floor a no-op there
+        # (openCostInBytes still prevents slicing tiny files).
+        ("spark.sql.files.minPartitionNum", str(spark.sparkContext.defaultParallelism)),
+        # Split-size floor that pairs with the minPartitionNum floor:
+        # the default 4 MB open-cost floor keeps a compressed-text
+        # parquet (e.g. the ~6 MB-on-disk / ~55 MB-decompressed
+        # wire-envelope spill) at 1-2 splits because split math sees
+        # FILE bytes, not decompressed work.  512 KB keeps small-file
+        # packing sane while letting compressed columnar text fan out;
+        # at cluster scale files are 128 MB-1 GB and this floor is
+        # irrelevant (guide §6).
+        ("spark.sql.files.openCostInBytes", str(512 * 1024)),
+        # Join strategy (guide §3.1; the broadcast raise alone measured
+        # -20% on the jaccard candidate-join build and was neutral-to-
+        # positive on every probed line): the 10 MB default is sized
+        # for small drivers; with AQE the decision uses RUNTIME sizes,
+        # so a side that outgrows 64 MB at scale simply never
+        # broadcasts — the raise is self-gating.
+        ("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024)),
+        # Stays at the Spark default: the shuffled-hash preference won
+        # ~1 s on the ten most join-heavy lines but cost MORE spread
+        # over many mid-tail lines in the full 533-line A/B
+        # (q_fk_inference 0.72->1.34, q_lift_curve 0.26->0.44,
+        # q_window_funnel 0.45->0.67 with SHJ preferred) — net negative,
+        # so only the broadcast raise is adopted.
+        ("spark.sql.join.preferSortMergeJoin", "true"),
     ]:
         try:
             spark.conf.set(key, value)
         except Exception:  # pragma: no cover - conf may be static
             pass
-    try:  # write-side row-group floor for session spills (see get_spark)
+    # Write-side companion of the two scan floors: parquet row groups
+    # are the unit a scan can actually parallelize over, and the default
+    # 128 MB target makes every session-spill file ONE row group — so
+    # the floors produce splits that are mostly empty.  4 MB row groups
+    # let the mid-sized spills fan out across the session's cores;
+    # production tables keep the default (large sequential groups
+    # amortize better at 100 TB — guide §6).
+    try:
         spark.sparkContext._jsc.hadoopConfiguration().set(  # noqa: SLF001
-            "parquet.block.size",
-            os.environ.get("SPARK_PARQUET_BLOCK_SIZE", str(4 * 1024 * 1024)),
+            "parquet.block.size", str(4 * 1024 * 1024)
         )
     except Exception:  # pragma: no cover - non-JVM sessions
         pass

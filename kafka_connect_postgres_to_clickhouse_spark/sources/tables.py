@@ -97,9 +97,10 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     SESSION-WIDE SIDE EFFECT: when (and only when) the file contains a
     nanos or tz-naive timestamp column, the two confs above are set on
     the caller's session and stay set.  Both gate correctness here and
-    are already pinned by every repo entry point (``session.get_spark``
-    / ``session.tune``); callers who need a non-UTC session timezone
-    must convert at the edges rather than rely on session defaults.
+    are already pinned by every repo entry point (``session.tune``,
+    which ``session.get_spark`` ends in); callers who need a non-UTC
+    session timezone must convert at the edges rather than rely on
+    session defaults.
     """
     path = f"{sf_dir}/{name}.parquet"
     nanos_cols, naive_cols = _ts_columns(path)

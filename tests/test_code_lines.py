@@ -12,10 +12,9 @@ import pytest
 
 from tools.code_lines import code_lines, count, docstring_lines, main
 
-PIPELINE = (
-    Path(__file__).resolve().parents[1]
-    / "kafka_connect_postgres_to_clickhouse_spark" / "streaming" / "pipeline.py"
-)
+PACKAGE = Path(__file__).resolve().parents[1] / "kafka_connect_postgres_to_clickhouse_spark"
+PIPELINE = PACKAGE / "streaming" / "pipeline.py"
+SESSION = PACKAGE / "session.py"
 
 SOURCE = textwrap.dedent(
     '''\
@@ -131,3 +130,46 @@ def test_state_format_stays_in_its_functions():
     assert _holders(tree, _literal("_BATCH_ID")) == set()
     assert _holders(tree, _literal("flat")) == set()
     assert _holders(tree, _literal("_CURRENT")) == {"_current_marker"}
+
+
+def _is_environ(node) -> bool:
+    return (
+        isinstance(node, ast.Attribute)
+        and node.attr in ("environ", "getenv")
+        and getattr(node.value, "id", None) == "os"
+    )
+
+
+def test_session_conf_has_one_table():
+    """``session.py`` reads only the two deployment settings from the
+    environment, and every conf key ``tune`` sets is written once in the
+    file: ``get_spark`` fixes only build-time confs and leaves the
+    runtime ones to ``tune``."""
+    tree = ast.parse(SESSION.read_text())
+    reads = [
+        node.args[0].value  # os.environ.get("NAME", ...)
+        for node in ast.walk(tree)
+        if isinstance(node, ast.Call) and _is_environ(getattr(node.func, "value", None))
+    ]
+    assert sorted(reads) == ["SPARK_DRIVER_MEMORY", "SPARK_GRAFT_CPUS"]
+    # no other access: os.environ["NAME"] or os.getenv("NAME")
+    assert sum(1 for node in ast.walk(tree) if _is_environ(node)) == len(reads)
+
+    tune = next(n for n in tree.body if getattr(n, "name", None) == "tune")
+    keys = {
+        node.elts[0].value  # ("spark.sql...", value) rows of the table
+        for node in ast.walk(tune)
+        if isinstance(node, ast.Tuple) and len(node.elts) == 2
+        and isinstance(node.elts[0], ast.Constant)
+    } | {
+        node.args[0].value  # hadoopConfiguration().set("parquet...", value)
+        for node in ast.walk(tune)
+        if isinstance(node, ast.Call) and getattr(node.func, "attr", None) == "set"
+        and node.args and isinstance(node.args[0], ast.Constant)
+    }
+    assert {"spark.sql.files.minPartitionNum", "parquet.block.size"} <= keys
+    literals = [
+        node.value for node in ast.walk(tree)
+        if isinstance(node, ast.Constant) and isinstance(node.value, str)
+    ]
+    assert {key: literals.count(key) for key in keys} == dict.fromkeys(keys, 1)
