@@ -73,27 +73,48 @@ def _current_version(state_dir: str) -> int | None:
         raise ValueError(f"{path} does not parse: {text!r}") from None
 
 
-def _read_manifest(state_dir: str, version: int | None) -> dict | None:
-    """Manifest of state version ``version``, or None when there is no
-    state.  Shape: ``{"n_buckets": N, "buckets": {"<bucket>": <version
-    holding it>}, "schema": <StructType JSON of the rows this version
-    wrote>}``, plus ``"marker"`` when the writer recorded one (the
-    slot-lag monitor's replay marker).  This, ``_write_version`` and
-    ``_read_buckets`` are the only code that knows the on-disk format,
-    and state is read in that one format: ``v{N}/_MANIFEST.json`` is
-    the only file read here.  A manifest that is missing or does not parse raises
-    ``ValueError`` naming the version; this includes state written
-    before manifests existed (parquet straight in ``v{N}``), which must
-    be re-seeded.  ``_read_buckets`` refuses a manifest without
-    ``"schema"``; prune needs only ``"buckets"``."""
-    if version is None:
-        return None
+def _read_manifest(state_dir: str, version: int) -> dict:
+    """Manifest of state version ``version``.  Shape: ``{"n_buckets": N,
+    "buckets": {"<bucket>": <version holding it>}, "schema": <StructType
+    JSON of the rows this version wrote>}``, plus ``"marker"`` when the
+    writer recorded one (the slot-lag monitor's replay marker).  This,
+    ``_write_version``, ``_open_state`` and ``_read_buckets`` are the
+    only code that knows the on-disk format, and state is read in that
+    one format: ``v{N}/_MANIFEST.json`` is the only file read here.  A
+    manifest that is missing or does not parse raises ``ValueError``
+    naming the version; this includes state written before manifests
+    existed (parquet straight in ``v{N}``), which must be re-seeded.
+    Only ``_open_state`` (which refuses a manifest without ``"schema"``)
+    and the prune (which needs only ``"buckets"``) call it."""
     path = os.path.join(state_dir, f"v{version}", "_MANIFEST.json")
     try:
         with open(path) as f:
             return json.load(f)
     except (OSError, ValueError) as e:
         raise ValueError(f"{path} cannot be read: {e}") from e
+
+
+def _open_state(state_dir: str) -> tuple[int | None, dict, dict[int, T.StructType]]:
+    """One consistent snapshot of the state: the current version (None
+    when there is no state), its manifest as it is on disk (``{"buckets":
+    {}}`` when there is no state) and the read schema of the current
+    version and of every version the manifest maps a bucket to, keyed by
+    version: the schema that version's manifest records, plus ``bkt``.
+    Every reader and writer of state opens it here, once per call, and
+    passes the schemas on to ``_read_buckets``; they stay outside the
+    manifest, so an opened snapshot is never written back as one.  A
+    version whose manifest records no schema (written before schemas
+    were recorded) raises ``ValueError`` naming it, before any row is
+    read or anything is written; such state must be re-seeded."""
+    cur = _current_version(state_dir)
+    manifest = {"buckets": {}} if cur is None else _read_manifest(state_dir, cur)
+    schemas = {}
+    for ver in sorted({cur, *manifest["buckets"].values()} - {None}):
+        own = manifest if ver == cur else _read_manifest(state_dir, ver)
+        if "schema" not in own:
+            raise ValueError(f"{os.path.join(state_dir, f'v{ver}')} records no schema; re-seed it")
+        schemas[ver] = T.StructType.fromJson(own["schema"]).add("bkt", T.IntegerType())
+    return cur, manifest, schemas
 
 
 RETAIN_VERSIONS = 3  # committed versions every commit keeps on disk
@@ -161,23 +182,23 @@ def _write_version(
     version after ``prev`` (``v0`` when ``prev`` is None) and commit it;
     return the new version.  This is the one write step every state
     writer shares, the only code that numbers versions, and with
-    ``_read_manifest`` and ``_read_buckets`` the only code that knows
-    the on-disk format.  Rows land as plain parquet in ``v{version}/``,
-    one file per write task, with ``bkt`` a column sorted within each
-    file: the sorted part of a ReplacingMergeTree insert, whose row
-    groups' min/max on ``bkt`` let a read of a few buckets skip the
-    rest.  The manifest then maps each bucket to the version holding
+    ``_read_manifest``, ``_open_state`` and ``_read_buckets`` the only
+    code that knows the on-disk format.  Rows land as plain parquet in
+    ``v{version}/``, one file per write task, with ``bkt`` a column
+    sorted within each file: the sorted part of a ReplacingMergeTree
+    insert, whose row groups' min/max on ``bkt`` let a read of a few
+    buckets skip the rest.  The manifest then maps each bucket to the version holding
     it: ``held`` (buckets kept from older versions) updated with the
     buckets just written, which an ``Observation`` on the write collects
     at no extra job.  It records the schema of ``rows`` without
     ``bkt``, so reads of this version plan with no schema-inference
-    job, the way a part knows its own columns, and ``marker`` when one
-    is given.  Then the ``_CURRENT`` swap, the commit point
-    (write-new-part-then-swap, as ClickHouse merges do: a crash before
-    it leaves readable state untouched), then the retention prune,
-    which runs only after the swap and keeps the newest
-    ``RETAIN_VERSIONS`` committed versions (plus every version they
-    still read buckets from)."""
+    job, the way a part knows its own columns (``_open_state`` turns it
+    back into the read schema), and ``marker`` when one is given.  Then
+    the ``_CURRENT`` swap, the commit point (write-new-part-then-swap,
+    as ClickHouse merges do: a crash before it leaves readable state
+    untouched), then the retention prune, which runs only after the
+    swap and keeps the newest ``RETAIN_VERSIONS`` committed versions
+    (plus every version they still read buckets from)."""
     version = 0 if prev is None else prev + 1
     vdir = os.path.join(state_dir, f"v{version}")
     written = Observation()
@@ -203,19 +224,21 @@ def _write_version(
 def read_state(spark: SparkSession, state_dir: str) -> DataFrame | None:
     """Read the current state snapshot (versioned-directory scheme)
     through its manifest; None when there is no state or no bucket holds
-    rows yet.  Every bucket is read from the version the manifest maps
-    it to, that version's files filtered to ``bkt IN`` its buckets
-    (``_read_buckets``), and ``bkt`` is dropped.  State in any other
-    format raises ``ValueError`` naming the version (``_read_manifest``,
-    ``_read_buckets``).  The manifest's bookkeeping (bucket map, schema,
-    the slot-lag monitor's replay marker) never shows up as rows.
+    rows yet.  The state is opened once (``_open_state``); every bucket
+    is read from the version the manifest maps it to, that version's
+    files filtered to ``bkt IN`` its buckets (``_read_buckets``), and
+    ``bkt`` is dropped.  State in any other format raises
+    ``ValueError`` naming the version (``_read_manifest``,
+    ``_open_state``) before a row is read.  The manifest's bookkeeping
+    (bucket map, schema, the slot-lag monitor's replay marker) never
+    shows up as rows.
 
     Delete tombstones (op='d' LWW winners, kept so re-delivered older
     events cannot resurrect a deleted key) are hidden: the merge reads
     them back through ``_read_buckets``, consumers don't see them.
     """
-    manifest = _read_manifest(state_dir, _current_version(state_dir)) or {"buckets": {}}
-    df = _read_buckets(spark, state_dir, manifest, [int(b) for b in manifest["buckets"]])
+    _, manifest, schemas = _open_state(state_dir)
+    df = _read_buckets(spark, state_dir, manifest, schemas, [int(b) for b in manifest["buckets"]])
     if df is None:  # no state, or seeded from an empty snapshot
         return None
     df = df.drop("bkt")
@@ -225,12 +248,13 @@ def read_state(spark: SparkSession, state_dir: str) -> DataFrame | None:
 
 
 def _read_buckets(
-    spark: SparkSession, state_dir: str, manifest: dict, want: Sequence[int]
+    spark: SparkSession, state_dir: str, manifest: dict, schemas: dict, want: Sequence[int]
 ) -> DataFrame | None:
-    """Read the requested buckets of a state through its manifest — the
-    only parquet reader of state.  Each bucket comes from the VERSION
-    that currently holds it (copy-on-write: untouched buckets still
-    live in older version dirs).  Each such version directory is read
+    """Read the requested buckets of a state opened by ``_open_state``
+    (its ``manifest`` and read ``schemas``) — the only parquet reader
+    of state; it reads no manifest itself.  Each bucket comes from the
+    VERSION that currently holds it (copy-on-write: untouched buckets
+    still live in older version dirs).  Each such version directory is read
     once, filtered to ``bkt IN`` the buckets wanted from it.  The
     filter is what makes the read correct, not a hint: a version's
     files also hold the buckets later versions have superseded.  It is
@@ -239,13 +263,12 @@ def _read_buckets(
     so a merge that wants 3 of 64 buckets decodes little more than
     those 3.  Versions written as ``bkt=i/`` directories read through
     the same call, since partition discovery turns the directories into
-    the ``bkt`` column.  Each version reads with the schema its own
-    manifest records, plus ``bkt``, so planning the read runs no Spark
-    job; a manifest without ``"schema"`` (written before schemas were
-    recorded) raises ``ValueError`` naming the version.  Schema
-    differences across versions (evolution rewrote touched buckets
-    only) merge via unionByName(allowMissingColumns=True).  Returns
-    None when no requested bucket has any state yet."""
+    the ``bkt`` column.  Each version reads with its schema from
+    ``schemas`` (the one its own manifest records, plus ``bkt``), so
+    planning the read runs no Spark job.  Schema differences across
+    versions (evolution rewrote touched buckets only) merge via
+    unionByName(allowMissingColumns=True).  Returns None when no
+    requested bucket has any state yet."""
     held = manifest["buckets"]
     by_version: dict[int, list[int]] = {}
     for b in want:
@@ -254,12 +277,7 @@ def _read_buckets(
             by_version.setdefault(int(ver), []).append(b)
     parts = []
     for ver, buckets in sorted(by_version.items()):
-        vdir = os.path.join(state_dir, f"v{ver}")
-        own = _read_manifest(state_dir, ver)
-        if "schema" not in own:
-            raise ValueError(f"{vdir} records no schema; re-seed it")
-        schema = T.StructType.fromJson(own["schema"]).add("bkt", T.IntegerType())
-        rows = spark.read.schema(schema).parquet(vdir)
+        rows = spark.read.schema(schemas[ver]).parquet(os.path.join(state_dir, f"v{ver}"))
         parts.append(rows.filter(F.col("bkt").isin(sorted(buckets))))
     if not parts:
         return None
@@ -301,6 +319,21 @@ def _run_concurrently(spark: SparkSession, work: Sequence[Callable[[], None]]) -
     failures = [e for e in (fut.exception() for fut in futures) if e is not None]
     if failures:
         raise failures[0]
+
+
+def _write_dead_letters(rows: DataFrame, dlq_dir: str, batch_id: int) -> None:
+    """Write the dead letters ``rows`` of micro-batch ``batch_id`` to
+    ``dlq_dir/batch_id=N``, replacing what is there: the one writer of
+    every dead-letter directory (corrupt envelopes and unrouted
+    records)."""
+    # deterministic per-batch Hive-style subpath + overwrite, NOT a flat
+    # append: foreachBatch is at-least-once, so a micro-batch replayed
+    # after a crash re-runs this write — overwriting the same batch_id=N
+    # directory replaces its own previous output instead of appending
+    # duplicates, which keeps the DLQ directly replayable without
+    # consumer-side dedup.  Readers of dlq_dir recover the micro-batch
+    # id as the `batch_id` partition column.
+    rows.write.mode("overwrite").parquet(os.path.join(dlq_dir, f"batch_id={batch_id}"))
 
 
 def run_cdc_pipeline(
@@ -388,37 +421,34 @@ def _merge_batch(
     LWW-merges them with the batch, and writes only them into the new
     version, which ``_write_version`` commits with its manifest and the
     ``_CURRENT`` swap — per-batch work is O(|batch| + |touched
-    buckets|).  The merge reads state in the one format
-    ``_write_version`` writes: if the current version or any version
-    its manifest maps a bucket to has no readable manifest, or one that
-    records no schema, the merge raises ``ValueError`` naming it before
-    anything (the DLQ included) is written.  This is the
-    parts-plus-manifest scheme of ReplacingMergeTree / lakehouse MERGE
-    re-expressed on plain parquet.  Schema evolution rides free: only
-    touched buckets rewrite with the widened schema and the manifest
-    read unionByName-fills the rest.
+    buckets|).  The merge opens the state once (``_open_state``) and
+    reads it in the one format ``_write_version`` writes: if the
+    current version or any version its manifest maps a bucket to has no
+    readable manifest, or one that records no schema, the open raises
+    ``ValueError`` naming it before anything (the DLQ included) is
+    written.  This is the parts-plus-manifest scheme of
+    ReplacingMergeTree / lakehouse MERGE re-expressed on plain parquet.
+    Schema evolution rides free: only touched buckets rewrite with the
+    widened schema and the manifest read unionByName-fills the rest.
 
     Spark work is one pass over the parsed batch plus the merge write;
     the state read plans from the manifest with no job.  With more than
     one bucket the parsed batch is persisted and the pass — the DLQ
     write, or a ``noop`` write that fills the cache when there is no
     DLQ — also collects the touched buckets through an ``Observation``,
-    so finding them costs no job of its own.  With one bucket (the
-    default) the touched set is the whole state, so it is not computed.
+    so finding them costs no job of its own, and a batch in which no
+    row survives touches no bucket: nothing is published.  With one
+    bucket (the default) the touched set is the whole state, so it is
+    not computed, and every batch publishes a new version: one in which
+    no row survives (empty, corrupt-only, or only deletes that are
+    dropped) rewrites the state unchanged.
 
     ``n_buckets`` is fixed at state creation and checked against the
     manifest before anything is written — changing it requires a
     rebucketing rewrite, exactly like changing a table's bucket count.
     LWW is idempotent, so a re-delivered batch converges."""
-    prev = _current_version(state_dir)
-    manifest = _read_manifest(state_dir, prev) or {"n_buckets": n_buckets, "buckets": {}}
-    # checked here too, before anything is written, for every version
-    # the state reads from: _read_buckets raises only after the DLQ
-    # pass, and only for the versions holding the touched buckets
-    for ver in sorted({prev, *manifest["buckets"].values()} - {None}):
-        if "schema" not in _read_manifest(state_dir, ver):
-            raise ValueError(f"{os.path.join(state_dir, f'v{ver}')} records no schema; re-seed it")
-    if manifest["n_buckets"] != n_buckets:
+    prev, manifest, schemas = _open_state(state_dir)
+    if manifest.get("n_buckets", n_buckets) != n_buckets:
         raise ValueError(
             f"{state_dir} holds bucketed state with n_buckets={manifest['n_buckets']}, "
             f"commit asked n_buckets={n_buckets}; rebucketing requires an explicit rewrite"
@@ -442,25 +472,17 @@ def _merge_batch(
         parsed = parsed.persist()
     try:
         if dlq_dir is not None:
-            # deterministic per-batch Hive-style subpath + overwrite,
-            # NOT a flat append: foreachBatch is at-least-once, so a
-            # micro-batch replayed after a crash re-runs this write —
-            # overwriting the same batch_id=N directory replaces its own
-            # previous output instead of appending duplicates, which
-            # keeps the DLQ directly replayable without consumer-side
-            # dedup.  Readers of dlq_dir recover the micro-batch id as
-            # the `batch_id` partition column.
-            parsed.filter(F.col("_corrupt")).select(
-                "_seq", F.col("_raw").alias("value")
-            ).write.mode("overwrite").parquet(
-                os.path.join(dlq_dir, f"batch_id={batch_id}")
+            _write_dead_letters(
+                parsed.filter(F.col("_corrupt")).select("_seq", F.col("_raw").alias("value")),
+                dlq_dir, batch_id,
             )
         elif touched is not None:
             parsed.write.format("noop").mode("overwrite").save()
+        # at one bucket every batch publishes, even one with no surviving row
         want = [0] if touched is None else sorted(touched.get["bkt"])
         if not want:
-            return  # empty/corrupt-only batch: state and manifest stand
-        existing = _read_buckets(spark, state_dir, manifest, want)
+            return  # more buckets, no surviving row: state and manifest stand
+        existing = _read_buckets(spark, state_dir, manifest, schemas, want)
         rows = parsed.filter(survives).drop("_corrupt", "_raw")
         # Deletes are KEPT in the persisted state as tombstone rows
         # (op='d' version winners).  Filtering them out here would let
@@ -545,11 +567,10 @@ def compact_state(spark: SparkSession, state_dir: str) -> int | None:
     when every bucket already lives in the current version — nothing
     to gather (empty state, one bucket, a commit that touched every
     bucket); otherwise returns the new version."""
-    prev = _current_version(state_dir)
-    manifest = _read_manifest(state_dir, prev) or {"buckets": {}}
+    prev, manifest, schemas = _open_state(state_dir)
     if all(v == prev for v in manifest["buckets"].values()):
         return None
-    df = _read_buckets(spark, state_dir, manifest, [int(b) for b in manifest["buckets"]])
+    df = _read_buckets(spark, state_dir, manifest, schemas, [int(b) for b in manifest["buckets"]])
     return _write_version(df, state_dir, prev, manifest["n_buckets"], {})
 
 
@@ -629,15 +650,11 @@ def run_multi_table_pipeline(
                 if name in merges
             ]
             if dlq_dir is not None and not set(names) <= merges.keys():
-                # same per-batch overwrite as the corrupt-record DLQ
                 lost = routed.filter(
                     F.col("_table").isNull() | ~F.col("_table").isin(*merges)
                 ).select("_seq", "topic", "value")
                 work.append(
-                    partial(
-                        lost.write.mode("overwrite").parquet,
-                        os.path.join(dlq_dir, UNROUTED, f"batch_id={batch_id}"),
-                    )
+                    partial(_write_dead_letters, lost, os.path.join(dlq_dir, UNROUTED), batch_id)
                 )
             # the tables of one batch are independent mirrors (ordering
             # is per key), so their commits overlap instead of queueing
@@ -769,7 +786,8 @@ def run_slot_lag_monitor(
     spark = stream.sparkSession
 
     def update(batch: DataFrame, batch_id: int) -> None:
-        prev = _current_version(state_dir)
+        # one snapshot per batch: its marker and its rows
+        prev, manifest, schemas = _open_state(state_dir)
         # Replay guard: foreachBatch is at-least-once — a crash between
         # the _CURRENT swap below and Spark's checkpoint commit makes
         # the engine re-deliver the SAME batch_id on restart.  The MAX
@@ -788,17 +806,17 @@ def run_slot_lag_monitor(
         # every version this monitor writes records its marker, so one
         # without it (state whose marker sat in a sidecar file) raises
         # KeyError here instead of merging a replayed batch twice
-        if (_read_manifest(state_dir, prev) or {"marker": None})["marker"] == marker:
+        if prev is not None and manifest["marker"] == marker:
             return
         agg = batch.groupBy("event_type").agg(
             F.max("event_id").cast("long").alias("confirmed_lsn"),
             F.count("*").cast("long").alias("n_records"),
             F.max("ts").alias("last_ts"),
         )
-        existing = read_state(spark, state_dir)
+        existing = _read_buckets(spark, state_dir, manifest, schemas, [0])
         if existing is not None:
             agg = (
-                existing.unionByName(agg)
+                existing.drop("bkt").unionByName(agg)
                 .groupBy("event_type")
                 .agg(
                     F.max("confirmed_lsn").cast("long").alias("confirmed_lsn"),

@@ -111,16 +111,25 @@ def _literal(text: str):
 def test_state_format_stays_in_its_functions():
     """The on-disk state format lives in ``_write_version`` (the one
     writer, and the only sort of state rows by bucket), ``_read_manifest``
-    (the one reader of manifests, which reads no older format) and
-    ``_read_buckets`` (the one parquet reader of state); ``_CURRENT`` is
-    named by ``_current_marker`` alone.  No state is written as one
-    directory per bucket.  A format change then edits those functions
-    and no other."""
+    (the one reader of manifests, which reads no older format),
+    ``_open_state`` (the one open of a snapshot, and the one refusal of
+    a version that records no schema) and ``_read_buckets`` (the one
+    parquet reader of state); ``_CURRENT`` is named by
+    ``_current_marker`` alone.  Only ``_open_state`` and the prune read
+    manifests, and only ``_write_dead_letters`` names a ``batch_id=``
+    directory.  No state is written as one directory per bucket.  A
+    format change then edits those functions and no other."""
     tree = ast.parse(PIPELINE.read_text())
 
     def calls(attr):
         def match(n):
             return isinstance(n, ast.Call) and getattr(n.func, "attr", None) == attr
+
+        return match
+
+    def calls_function(name):
+        def match(n):
+            return isinstance(n, ast.Call) and getattr(n.func, "id", None) == name
 
         return match
 
@@ -130,6 +139,17 @@ def test_state_format_stays_in_its_functions():
     assert _holders(tree, _literal("_BATCH_ID")) == set()
     assert _holders(tree, _literal("flat")) == set()
     assert _holders(tree, _literal("_CURRENT")) == {"_current_marker"}
+    assert _holders(tree, calls_function("_read_manifest")) == {
+        "_open_state", "prune_state_versions",
+    }
+    docs = docstring_lines(tree)
+    refusals = [
+        n for n in ast.walk(tree)
+        if getattr(n, "lineno", None) not in docs and _literal("records no schema")(n)
+    ]
+    assert len(refusals) == 1
+    assert _holders(tree, _literal("records no schema")) == {"_open_state"}
+    assert _holders(tree, _literal("batch_id=")) == {"_write_dead_letters"}
 
 
 def _is_environ(node) -> bool:

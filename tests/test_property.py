@@ -339,6 +339,7 @@ def test_bucket_directory_version_reads_commits_and_compacts(spark, tmp_path):
     )
     from kafka_connect_postgres_to_clickhouse_spark.streaming.pipeline import (
         _merge_batch,
+        _open_state,
         _read_buckets,
         _read_manifest,
         compact_state,
@@ -374,9 +375,11 @@ def test_bucket_directory_version_reads_commits_and_compacts(spark, tmp_path):
     # one bkt=i/ directory per bucket, and a manifest mapping each to v0
     fresh, state_dir = str(tmp_path / "fresh"), str(tmp_path / "state")
     _merge_batch(spark, wire.filter("_seq < 40"), payload_schema, fresh, keys, version, False, 8)
+    # the manifest written back is the one on disk, not the opened snapshot's
     manifest = _read_manifest(fresh, 0)
     v0 = os.path.join(state_dir, "v0")
-    _read_buckets(spark, fresh, manifest, range(8)).write.partitionBy("bkt").parquet(v0)
+    _, opened, schemas = _open_state(fresh)
+    _read_buckets(spark, fresh, opened, schemas, range(8)).write.partitionBy("bkt").parquet(v0)
     assert not [n for n in os.listdir(v0) if n.endswith(".parquet")]
     dirs = [n for n in os.listdir(v0) if n.startswith("bkt=")]
     assert len(dirs) == 8, dirs

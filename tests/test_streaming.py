@@ -500,9 +500,8 @@ def test_bucketed_read_prunes_to_requested_buckets(spark, tmp_path, users_schema
     from collections import Counter
 
     from kafka_connect_postgres_to_clickhouse_spark.streaming.pipeline import (
-        _current_version,
+        _open_state,
         _read_buckets,
-        _read_manifest,
     )
 
     wire = _wire_rows(spark)
@@ -519,13 +518,13 @@ def test_bucketed_read_prunes_to_requested_buckets(spark, tmp_path, users_schema
         changelog_file_stream(spark, str(src)), users_schema, state_dir, ckpt,
         KEYS, VERSION, n_buckets=8,
     )
-    manifest = _read_manifest(state_dir, _current_version(state_dir))
+    _, manifest, schemas = _open_state(state_dir)
     assert len(set(manifest["buckets"].values())) == 2, manifest
     buckets = [int(x) for x in manifest["buckets"]]
-    whole = _read_buckets(spark, state_dir, manifest, buckets).collect()
+    whole = _read_buckets(spark, state_dir, manifest, schemas, buckets).collect()
     assert len({r.user_id for r in whole}) == len(whole), whole
     for b in buckets:
-        df = _read_buckets(spark, state_dir, manifest, [b])
+        df = _read_buckets(spark, state_dir, manifest, schemas, [b])
         rows = df.collect()
         assert rows, f"bucket {b} read no rows"
         assert Counter(rows) == Counter(r for r in whole if r.bkt == b), b
@@ -544,8 +543,8 @@ def test_bucket_read_skips_row_groups_of_other_buckets(spark, tmp_path):
     import pyarrow.parquet as pq
 
     from kafka_connect_postgres_to_clickhouse_spark.streaming.pipeline import (
+        _open_state,
         _read_buckets,
-        _read_manifest,
         seed_state,
     )
 
@@ -572,15 +571,15 @@ def test_bucket_read_skips_row_groups_of_other_buckets(spark, tmp_path):
         if f.endswith(".parquet")
     )
     assert groups >= 16, f"only {groups} row groups: nothing to prune"
-    manifest = _read_manifest(state_dir, 0)
-    assert len(manifest["buckets"]) == 64
+    version, manifest, schemas = _open_state(state_dir)
+    assert version == 0 and len(manifest["buckets"]) == 64
 
-    full = _read_buckets(spark, state_dir, manifest, range(64))
+    full = _read_buckets(spark, state_dir, manifest, schemas, range(64))
     everything = full.collect()
     [(_, full_scanned)] = _scans(full)
     assert full_scanned == len(everything) == 6400
     for b in (0, 17, 63):
-        one = _read_buckets(spark, state_dir, manifest, [b])
+        one = _read_buckets(spark, state_dir, manifest, schemas, [b])
         rows = one.collect()
         [(_, scanned)] = _scans(one)
         assert rows and {r.bkt for r in rows} == {b}
