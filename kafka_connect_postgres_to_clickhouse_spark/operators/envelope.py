@@ -6,6 +6,13 @@ where, after the ``ExtractNewRecordState`` SMT (setup.sh:105-107),
 ``payload`` is the flat after-image of the row and timestamps ride as
 ``io.debezium.time.MicroTimestamp`` = int64 epoch-microseconds
 (e.g. 1754155842030174 = 2025-08-02 17:30:42.030174, README.md:120).
+The record key travels in the same envelope with the PK columns as its
+payload (the reference's key and value converters are configured alike).
+
+How each Spark type travels on the wire is decided in one place,
+``_codec``; the schema entries, the ``from_json`` read schema, the
+encoder and the decoder all read it, and the value and key parsers share
+one decode step, ``_decode``.
 
 Spark-first design: serde is ``to_json``/``from_json`` — JVM-side,
 whole-stage-codegen, no Python in the loop.  At 100 TB the parse is a
@@ -14,6 +21,8 @@ with executors.
 """
 
 from __future__ import annotations
+
+from typing import Callable, NamedTuple
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -36,32 +45,62 @@ CONNECT_DECIMAL = "org.apache.kafka.connect.data.Decimal"
 DEBEZIUM_UUID = "io.debezium.data.Uuid"
 
 
+class _Wire(NamedTuple):
+    type: str  # ``schema.fields[].type``
+    logical: str | None  # Connect logical name, ``schema.fields[].name``
+    read: T.DataType  # the payload field's type in ``from_json``'s schema
+    encode: Callable[[Column], Column]  # Spark value -> wire value
+    decode: Callable[[Column], Column]  # wire value -> Spark value
+
+
+def _codec(dt: T.DataType) -> _Wire:
+    """How a value of Spark type ``dt`` travels on the wire: the one
+    type dispatch of the envelope.
+
+    A timestamp is an int64 ``MicroTimestamp`` (``unix_micros`` out,
+    ``timestamp_micros`` back, exact at microseconds).  A decimal is a
+    Connect ``Decimal``: base64 of the big-endian unscaled integer, over
+    a 64-bit unscaled value, so ``Decimal(18,*)`` columns; the way back
+    is an exact decimal division, never a double.  Every other type
+    travels as itself, named by ``_JSON_WIRE_TYPE`` (``"string"`` for
+    the types it does not list).
+    """
+    if isinstance(dt, T.TimestampType):
+        return _Wire("int64", MICRO_TS, T.LongType(), F.unix_micros, F.timestamp_micros)
+    if isinstance(dt, T.DecimalType):
+        scale = 10 ** dt.scale
+
+        def encode(c: Column) -> Column:
+            return F.base64(F.unhex(F.lpad(F.hex((c * scale).cast("long")), 16, "0")))
+
+        def decode(c: Column) -> Column:
+            unscaled = F.conv(F.hex(F.unbase64(c)), 16, 10).cast(T.DecimalType(38, 0))
+            return (unscaled / F.lit(scale).cast(T.DecimalType(19, 0))).cast(dt)
+
+        return _Wire("bytes", CONNECT_DECIMAL, T.StringType(), encode, decode)
+    return _Wire(_JSON_WIRE_TYPE.get(dt, "string"), None, dt, lambda c: c, lambda c: c)
+
+
 def _field_schema_struct(f: T.StructField, logical: dict[str, str] | None = None) -> Column:
-    """One entry of ``schema.fields`` (README.md:127 shape)."""
-    if isinstance(f.dataType, T.TimestampType):
-        wire, name, version = "int64", MICRO_TS, 1
-    elif isinstance(f.dataType, T.DecimalType):
-        wire, name, version = "bytes", CONNECT_DECIMAL, 1
-    elif logical and f.name in logical:
-        wire, name, version = _JSON_WIRE_TYPE.get(f.dataType, "string"), logical[f.name], 1
-    else:
-        wire = _JSON_WIRE_TYPE.get(f.dataType, "string")
-        name, version = None, None
+    """One entry of ``schema.fields`` (README.md:127 shape).  The codec's
+    logical name wins; ``logical`` names only fields the codec gives
+    none."""
+    wire = _codec(f.dataType)
+    name = wire.logical or (logical or {}).get(f.name)
     return F.struct(
-        F.lit(wire).alias("type"),
+        F.lit(wire.type).alias("type"),
         F.lit(f.nullable).alias("optional"),
         F.lit(name).cast("string").alias("name"),
-        F.lit(version).cast("int").alias("version"),
+        F.lit(1 if name else None).cast("int").alias("version"),
         F.lit(f.name).alias("field"),
     )
 
 
 def debezium_value_schema(payload_schema: T.StructType) -> T.StructType:
-    """Spark schema of the wire envelope for ``from_json``.
-
-    Timestamp fields travel as int64 micros (MicroTimestamp), so the
-    wire payload struct swaps TimestampType -> LongType; ``parse_envelope``
-    restores them with ``timestamp_micros``.
+    """Spark schema of the wire envelope for ``from_json``: the
+    ``schema`` half as written by ``build_envelope_json``, and the
+    payload with each field at the type the codec reads it as (a
+    timestamp as its int64 micros, a decimal as its base64 text).
     """
     field_meta = T.StructType(
         [
@@ -72,15 +111,8 @@ def debezium_value_schema(payload_schema: T.StructType) -> T.StructType:
             T.StructField("field", T.StringType()),
         ]
     )
-    def _wire_type(dt: T.DataType) -> T.DataType:
-        if isinstance(dt, T.TimestampType):
-            return T.LongType()  # MicroTimestamp int64
-        if isinstance(dt, T.DecimalType):
-            return T.StringType()  # Connect Decimal: base64 text
-        return dt
-
     wire_payload = T.StructType(
-        [T.StructField(f.name, _wire_type(f.dataType), f.nullable) for f in payload_schema.fields]
+        [T.StructField(f.name, _codec(f.dataType).read, f.nullable) for f in payload_schema.fields]
     )
     return T.StructType(
         [
@@ -105,30 +137,21 @@ def build_envelope_json(
     schema_name: str,
     logical: dict[str, str] | None = None,
 ) -> Column:
-    """Serialize rows into the reference's wire JSON (inverse of parse).
-    The column expression is built purely from ``payload_schema`` —
-    apply it with ``df.select(...)`` on any frame carrying those
-    columns.
+    """Serialize rows into the reference's wire JSON (inverse of
+    ``parse_envelope`` and ``parse_key``).  The column expression is
+    built purely from ``payload_schema`` — apply it with
+    ``df.select(...)`` on any frame carrying those columns.  A record
+    key is built the same way from the PK columns, e.g.
+    ``{"schema":{"type":"struct","fields":[{"type":"int32",...,
+    "field":"user_id"}],"name":"...users.Key"},"payload":{"user_id":1}}``.
 
-    Timestamps are emitted as epoch-microseconds via ``unix_micros``
-    (reference wire type MicroTimestamp, README.md:127).  Decimals are
-    emitted precise-mode: base64 of the big-endian unscaled integer
-    (Connect Decimal logical type) — implemented over a 64-bit
-    unscaled value via hex/unhex, which covers Decimal(18,*) columns
-    with non-negative values (the fixture/reference domain; a full
-    arbitrary-precision signed path would BigInteger-encode in a
-    pandas_udf).  ``logical`` optionally names fields with a logical
-    wire type (e.g. ``{"user_uuid": DEBEZIUM_UUID}``).
+    Each value is encoded by the codec (``_codec``).  ``logical``
+    optionally names fields with a logical wire type the codec does not
+    give (e.g. ``{"user_uuid": DEBEZIUM_UUID}``).
     """
-    payload_cols = []
-    for f in payload_schema.fields:
-        c = F.col(f.name)
-        if isinstance(f.dataType, T.TimestampType):
-            c = F.unix_micros(c)
-        elif isinstance(f.dataType, T.DecimalType):
-            unscaled = (c * (10 ** f.dataType.scale)).cast("long")
-            c = F.base64(F.unhex(F.lpad(F.hex(unscaled), 16, "0")))
-        payload_cols.append(c.alias(f.name))
+    payload_cols = [
+        _codec(f.dataType).encode(F.col(f.name)).alias(f.name) for f in payload_schema.fields
+    ]
     schema_col = F.struct(
         F.lit("struct").alias("type"),
         F.array(
@@ -143,36 +166,35 @@ def build_envelope_json(
     )
 
 
-def parse_envelope(df: DataFrame, payload_schema: T.StructType) -> DataFrame:
-    """bytes/str ``value`` -> typed flat row (the JsonConverter + unwrap
-    path).
+def _decode(df: DataFrame, col: str, schema: T.StructType, prefix: str = "") -> DataFrame:
+    """The decode step both parsers share: ``df`` without ``col``, then
+    each field of ``schema`` decoded by the codec from the envelope in
+    ``col`` (named ``prefix`` + field name), then the parsed
+    ``_envelope`` struct.
 
     ``from_json`` runs in ``PERMISSIVE`` mode, which mirrors
-    ``errors.tolerance=all`` (setup.sh:145-147): malformed JSON yields a
-    null struct instead of failing the query; callers route those rows
-    to a DLQ.
-    Micro-timestamps are restored with ``timestamp_micros`` — the exact
-    inverse of the Debezium MicroTimestamp encoding.
+    ``errors.tolerance=all`` (setup.sh:145-147): malformed JSON yields
+    nulls instead of failing the query.
     """
-    wire = debezium_value_schema(payload_schema)
     parsed = df.withColumn(
         "_envelope",
-        F.from_json(F.col("value").cast("string"), wire, {"mode": "PERMISSIVE"}),
+        F.from_json(F.col(col).cast("string"), debezium_value_schema(schema), {"mode": "PERMISSIVE"}),
     )
-    out_cols = []
-    for f in payload_schema.fields:
-        c = F.col(f"_envelope.payload.{f.name}")
-        if isinstance(f.dataType, T.TimestampType):
-            c = F.timestamp_micros(c)
-        elif isinstance(f.dataType, T.DecimalType):
-            # precise-mode inverse: base64 -> big-endian unscaled int ->
-            # exact decimal division (never a double in the path)
-            unscaled = F.conv(F.hex(F.unbase64(c)), 16, 10).cast(T.DecimalType(38, 0))
-            c = (
-                unscaled / F.lit(10 ** f.dataType.scale).cast(T.DecimalType(19, 0))
-            ).cast(f.dataType)
-        out_cols.append(c.alias(f.name))
-    keep = [c for c in df.columns if c != "value"]
+    fields = [
+        _codec(f.dataType).decode(F.col(f"_envelope.payload.{f.name}")).alias(prefix + f.name)
+        for f in schema.fields
+    ]
+    return parsed.select(*[c for c in df.columns if c != col], *fields, "_envelope")
+
+
+def parse_envelope(df: DataFrame, payload_schema: T.StructType) -> DataFrame:
+    """bytes/str ``value`` -> typed flat row (the JsonConverter + unwrap
+    path), plus ``_corrupt``; every other column of ``df`` is kept.
+
+    Malformed JSON is not fatal (``PERMISSIVE``, see ``_decode``): its
+    row is flagged ``_corrupt`` with null payload columns, and callers
+    route it to a DLQ.
+    """
     # PERMISSIVE from_json yields a struct of nulls (not a null struct)
     # on malformed input, so corruption == NEITHER field materialized.
     # A null payload under a non-null schema is a legitimate wire form
@@ -182,41 +204,19 @@ def parse_envelope(df: DataFrame, payload_schema: T.StructType) -> DataFrame:
     corrupt = F.col("_envelope").isNull() | (
         F.col("_envelope.payload").isNull() & F.col("_envelope.schema").isNull()
     )
-    return parsed.select(*keep, *out_cols, corrupt.alias("_corrupt"))
-
-
-def build_key_json(key_schema: T.StructType, schema_name: str) -> Column:
-    """Serialize the record KEY into its wire JSON envelope.
-
-    The reference configures the key converter identically to the value
-    converter (JsonConverter + schemas.enable, setup.sh:96-98,139-141),
-    so a key is the same self-describing ``{"schema","payload"}`` pair
-    with the table's PK columns as the payload — e.g.
-    ``{"schema":{"type":"struct","fields":[{"type":"int32",...,
-    "field":"user_id"}],"name":"...users.Key"},"payload":{"user_id":1}}``.
-    """
-    return build_envelope_json(key_schema, schema_name)
+    return _decode(df, "value", payload_schema).withColumn("_corrupt", corrupt).drop("_envelope")
 
 
 def parse_key(df: DataFrame, key_schema: T.StructType) -> DataFrame:
-    """Parse the wire ``key`` envelope into ``key_<pk-col>`` columns
-    (``PERMISSIVE``, like ``parse_envelope``).
+    """Parse the wire ``key`` envelope (built by ``build_envelope_json``
+    from the PK columns) into typed ``key_<pk-col>`` columns, through the
+    same decode step as ``parse_envelope``.
 
     The value-side columns are untouched, so callers can assert
     key/payload PK agreement (per-key ordering derives from the key in
     the reference; this engine also derives it from ``_seq`` — both are
     checked against each other in tests)."""
-    wire = debezium_value_schema(key_schema)
-    parsed = df.withColumn(
-        "_key_envelope",
-        F.from_json(F.col("key").cast("string"), wire, {"mode": "PERMISSIVE"}),
-    )
-    out = [
-        F.col(f"_key_envelope.payload.{f.name}").alias(f"key_{f.name}")
-        for f in key_schema.fields
-    ]
-    keep = [c for c in df.columns if c != "key"]
-    return parsed.select(*keep, *out)
+    return _decode(df, "key", key_schema, "key_").drop("_envelope")
 
 
 def unwrap(df: DataFrame) -> DataFrame:

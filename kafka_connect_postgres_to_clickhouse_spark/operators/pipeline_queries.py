@@ -27,7 +27,6 @@ from ..sources.tables import load_table
 from .envelope import (
     DEBEZIUM_UUID,
     build_envelope_json,
-    build_key_json,
     parse_envelope,
     parse_key,
 )
@@ -623,7 +622,7 @@ def q_key_envelope(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select(
         "_seq",
         "payload_user_id",
-        build_key_json(key_schema, "postgres_cdc.iman.users.Key").alias("key"),
+        build_envelope_json(key_schema, "postgres_cdc.iman.users.Key").alias("key"),
     )
     parsed = parse_key(keyed, key_schema)
     return parsed.select(

@@ -98,17 +98,14 @@ def test_corrupt_record_routed_not_fatal(spark):
 def test_key_envelope_matches_payload_pk(spark):
     """Reference key converter (setup.sh:96-98): the key is its own
     {"schema","payload"} JSON; its PK must equal the value payload's."""
-    from kafka_connect_postgres_to_clickhouse_spark.operators.envelope import (
-        build_key_json,
-        parse_key,
-    )
+    from kafka_connect_postgres_to_clickhouse_spark.operators.envelope import parse_key
 
     key_schema = T.StructType([T.StructField("user_id", T.IntegerType(), False)])
     log = reference_scenario_changelog(spark)
     keyed = log.select(
         "_seq",
         F.col("user_id").alias("payload_user_id"),
-        build_key_json(key_schema, "postgres_cdc.iman.users.Key").alias("key"),
+        build_envelope_json(key_schema, "postgres_cdc.iman.users.Key").alias("key"),
     )
     # wire shape: self-describing schema with the PK field
     sample = json.loads(keyed.select("key").first()[0])
