@@ -59,9 +59,11 @@ def _codec(dt: T.DataType) -> _Wire:
 
     A timestamp is an int64 ``MicroTimestamp`` (``unix_micros`` out,
     ``timestamp_micros`` back, exact at microseconds).  A decimal is a
-    Connect ``Decimal``: base64 of the big-endian unscaled integer, over
-    a 64-bit unscaled value, so ``Decimal(18,*)`` columns; the way back
-    is an exact decimal division, never a double.  Every other type
+    Connect ``Decimal``: base64 of the big-endian two's-complement
+    unscaled integer, signed and at most 64 bits, so ``Decimal(18,*)``
+    columns.  The encoder writes all 8 bytes; the decoder also reads the
+    shortest form Connect writes (``"/4U="`` is -1.23 at scale 2), and
+    its way back is an exact decimal division, never a double.  Every other type
     travels as itself, named by ``_JSON_WIRE_TYPE`` (``"string"`` for
     the types it does not list).
     """
@@ -74,7 +76,11 @@ def _codec(dt: T.DataType) -> _Wire:
             return F.base64(F.unhex(F.lpad(F.hex((c * scale).cast("long")), 16, "0")))
 
         def decode(c: Column) -> Column:
-            unscaled = F.conv(F.hex(F.unbase64(c)), 16, 10).cast(T.DecimalType(38, 0))
+            # Connect writes the shortest two's-complement bytes: sign-extend
+            # them to 64 bits, then read the hex as a signed long
+            hexed = F.hex(F.unbase64(c))
+            sign = F.when(F.substring(hexed, 1, 1) >= "8", "F").otherwise("0")
+            unscaled = F.conv(F.lpad(hexed, 16, sign), 16, -10).cast(T.DecimalType(38, 0))
             return (unscaled / F.lit(scale).cast(T.DecimalType(19, 0))).cast(dt)
 
         return _Wire("bytes", CONNECT_DECIMAL, T.StringType(), encode, decode)

@@ -120,7 +120,8 @@ def test_key_envelope_matches_payload_pk(spark):
 
 def test_decimal_uuid_bigint_envelope_roundtrip(spark):
     """The typemap arms r1 never pushed through the data path
-    (setup.sh:42-47): numeric (Connect Decimal base64), uuid, bigint."""
+    (setup.sh:42-47): numeric (Connect Decimal base64, signed, within
+    the 64-bit unscaled limit of Decimal(18,*)), uuid, bigint."""
     from decimal import Decimal
 
     from kafka_connect_postgres_to_clickhouse_spark.operators.envelope import (
@@ -139,6 +140,10 @@ def test_decimal_uuid_bigint_envelope_roundtrip(spark):
         (7_000_000_000, Decimal("1234.56"), "d41d8cd9-8f00-b204-e980-0998ecf8427e"),
         (1, Decimal("0.01"), "00000000-0000-0000-0000-000000000000"),
         (2, Decimal("0.00"), "ffffffff-ffff-ffff-ffff-ffffffffffff"),
+        (3, Decimal("-1.23"), None),
+        (4, Decimal("-0.01"), None),
+        (5, Decimal("-9999999999999999.99"), None),  # the 64-bit limit: Decimal(18,2)
+        (6, Decimal("9999999999999999.99"), None),
     ]
     df = spark.createDataFrame(rows, schema)
     wire = df.select(
@@ -162,3 +167,14 @@ def test_decimal_uuid_bigint_envelope_roundtrip(spark):
     assert out[1].balance == Decimal("0.01")
     assert out[2].balance == Decimal("0.00")
     assert out[2].user_uuid == "ffffffff-ffff-ffff-ffff-ffffffffffff"
+    assert {r[0]: r[1] for r in rows} == {k: r.balance for k, r in out.items()}
+
+    # Connect itself writes the shortest two's-complement bytes, which
+    # the decoder reads signed
+    hand_built = spark.createDataFrame(
+        [(json.dumps({"schema": None, "payload": {"big_id": i, "balance": b}}),)
+         for i, b in enumerate(["/4U=", "/w==", "AeJA"])],
+        "value string",
+    )
+    out = {r.big_id: r.balance for r in parse_envelope(hand_built, schema).collect()}
+    assert out == {0: Decimal("-1.23"), 1: Decimal("-0.01"), 2: Decimal("1234.56")}

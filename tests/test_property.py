@@ -407,6 +407,7 @@ _payloads = st.lists(
         st.one_of(st.none(), st.text(alphabet=st.characters(
             codec="utf-8", exclude_characters='"\\\x00'), max_size=40)),
         st.one_of(st.none(), st.integers(min_value=0, max_value=2**52)),  # epoch micros
+        st.one_of(st.none(), st.integers(min_value=-(10**18) + 1, max_value=10**18 - 1)),  # cents
     ),
     min_size=1,
     max_size=20,
@@ -422,15 +423,20 @@ _payloads = st.lists(
 def test_envelope_roundtrip_identity(spark_session, rows):
     """build_envelope_json then parse_envelope must be the identity on
     ARBITRARY payloads — including NULLs in optional fields, negative
-    keys, unicode text, and extreme-but-valid micro timestamps — the
-    serde contract the whole wire path stands on (reference envelope,
-    README.md:127-129)."""
+    keys, unicode text, extreme-but-valid micro timestamps and signed
+    Decimal(18,2) values — the serde contract the whole wire path stands
+    on (reference envelope, README.md:127-129).  The same rows' key
+    ``(user_id, updated_at, balance)`` must come back typed and equal
+    through parse_key."""
+    from decimal import Decimal
+
     import pyspark.sql.functions as F
     import pyspark.sql.types as T
 
     from kafka_connect_postgres_to_clickhouse_spark.operators.envelope import (
         build_envelope_json,
         parse_envelope,
+        parse_key,
     )
 
     spark = spark_session
@@ -439,29 +445,34 @@ def test_envelope_roundtrip_identity(spark_session, rows):
             T.StructField("user_id", T.IntegerType(), False),
             T.StructField("username", T.StringType(), True),
             T.StructField("updated_at", T.TimestampType(), True),
+            T.StructField("balance", T.DecimalType(18, 2), True),
         ]
     )
+    key_schema = T.StructType([schema["user_id"], schema["updated_at"], schema["balance"]])
     data = [
-        (i, uid, name, micros)
-        for i, (uid, name, micros) in enumerate(rows)
+        (i, uid, name, micros, None if cents is None else Decimal(cents).scaleb(-2))
+        for i, (uid, name, micros, cents) in enumerate(rows)
     ]
     df = spark.createDataFrame(
-        data, "_seq long, user_id int, username string, micros long"
+        data, "_seq long, user_id int, username string, micros long, balance decimal(18,2)"
     ).select(
-        "_seq", "user_id", "username", F.timestamp_micros(F.col("micros")).alias("updated_at")
+        "_seq", "user_id", "username",
+        F.timestamp_micros(F.col("micros")).alias("updated_at"), "balance",
     )
     wire = df.select(
-        "_seq", build_envelope_json(schema, "postgres_cdc.iman.users.Value").alias("value")
+        "_seq",
+        build_envelope_json(schema, "postgres_cdc.iman.users.Value").alias("value"),
+        build_envelope_json(key_schema, "postgres_cdc.iman.users.Key").alias("key"),
     )
-    back = parse_envelope(wire, schema)
+    back = parse_key(parse_envelope(wire, schema), key_schema)
     orig = {
-        r._seq: (r.user_id, r.username, r.updated_at) for r in df.collect()
+        r._seq: (r.user_id, r.username, r.updated_at, r.balance) for r in df.collect()
     }
-    got = {
-        r._seq: (r.user_id, r.username, r.updated_at)
-        for r in back.filter(~F.col("_corrupt")).collect()
-    }
-    assert got == orig
+    parsed = back.filter(~F.col("_corrupt")).collect()
+    assert {r._seq: (r.user_id, r.username, r.updated_at, r.balance) for r in parsed} == orig
+    assert {
+        r._seq: (r.key_user_id, r.key_updated_at, r.key_balance) for r in parsed
+    } == {seq: (uid, ts, bal) for seq, (uid, _, ts, bal) in orig.items()}
 
 
 @settings(max_examples=25, deadline=None)
