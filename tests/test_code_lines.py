@@ -1,6 +1,7 @@
 """tools/code_lines.py: code lines without blanks, comments and
-docstrings, per file and per named function; and where the CDC state
-format may appear in ``streaming/pipeline.py`` (no Spark)."""
+docstrings, per file and per named function; where the CDC state
+format may appear in ``streaming/pipeline.py``, and where the wire
+form of a type is decided in ``operators/envelope.py`` (no Spark)."""
 
 from __future__ import annotations
 
@@ -14,6 +15,7 @@ from tools.code_lines import code_lines, count, docstring_lines, main
 
 PACKAGE = Path(__file__).resolve().parents[1] / "kafka_connect_postgres_to_clickhouse_spark"
 PIPELINE = PACKAGE / "streaming" / "pipeline.py"
+ENVELOPE = PACKAGE / "operators" / "envelope.py"
 SESSION = PACKAGE / "session.py"
 
 SOURCE = textwrap.dedent(
@@ -150,6 +152,33 @@ def test_state_format_stays_in_its_functions():
     assert len(refusals) == 1
     assert _holders(tree, _literal("records no schema")) == {"_open_state"}
     assert _holders(tree, _literal("batch_id=")) == {"_write_dead_letters"}
+
+
+def test_wire_codec_stays_in_one_function():
+    """How a Spark type travels on the Debezium wire is decided in
+    ``_codec`` alone: no other code of ``envelope.py`` names a
+    timestamp or decimal type or their wire conversions.  The envelope
+    is parsed by one ``from_json`` (the decode step the value and key
+    parsers share), and the key has no builder of its own."""
+    tree = ast.parse(ENVELOPE.read_text())
+
+    def names(name):
+        def match(n):
+            return getattr(n, "attr", None) == name or getattr(n, "id", None) == name
+
+        return match
+
+    for name in ("TimestampType", "DecimalType", "unix_micros", "timestamp_micros", "unbase64"):
+        assert _holders(tree, names(name)) == {"_codec"}, name
+    docs = docstring_lines(tree)
+    parses = [
+        n for n in ast.walk(tree)
+        if getattr(n, "lineno", None) not in docs and names("from_json")(n)
+    ]
+    assert len(parses) == 1
+    assert "build_key_json" not in {
+        n.name for n in ast.walk(tree) if isinstance(n, ast.FunctionDef)
+    }
 
 
 def _is_environ(node) -> bool:
