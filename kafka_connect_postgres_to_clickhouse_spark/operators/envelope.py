@@ -62,10 +62,10 @@ def _codec(dt: T.DataType) -> _Wire:
     Connect ``Decimal``: base64 of the big-endian two's-complement
     unscaled integer, signed and at most 64 bits, so ``Decimal(18,*)``
     columns.  The encoder writes all 8 bytes; the decoder also reads the
-    shortest form Connect writes (``"/4U="`` is -1.23 at scale 2), and
-    its way back is an exact decimal division, never a double.  Every other type
-    travels as itself, named by ``_JSON_WIRE_TYPE`` (``"string"`` for
-    the types it does not list).
+    shorter forms Connect writes (``"/4U="`` is -1.23 at scale 2), raises
+    on a wider value and divides exactly, never through a double.  Every other type travels
+    as itself, named by ``_JSON_WIRE_TYPE`` (``"string"`` for the types
+    it does not list).
     """
     if isinstance(dt, T.TimestampType):
         return _Wire("int64", MICRO_TS, T.LongType(), F.unix_micros, F.timestamp_micros)
@@ -77,10 +77,15 @@ def _codec(dt: T.DataType) -> _Wire:
 
         def decode(c: Column) -> Column:
             # Connect writes the shortest two's-complement bytes: sign-extend
-            # them to 64 bits, then read the hex as a signed long
+            # them to 64 bits, then read the hex as a signed long.  A wider
+            # value fails the batch, as lpad would cut it short.
             hexed = F.hex(F.unbase64(c))
             sign = F.when(F.substring(hexed, 1, 1) >= "8", "F").otherwise("0")
-            unscaled = F.conv(F.lpad(hexed, 16, sign), 16, -10).cast(T.DecimalType(38, 0))
+            signed = F.when(
+                F.length(hexed) > 16,
+                F.raise_error(F.concat(F.lit("Connect Decimal wider than 64 bits: "), c)),
+            ).otherwise(F.lpad(hexed, 16, sign))
+            unscaled = F.conv(signed, 16, -10).cast(T.DecimalType(38, 0))
             return (unscaled / F.lit(scale).cast(T.DecimalType(19, 0))).cast(dt)
 
         return _Wire("bytes", CONNECT_DECIMAL, T.StringType(), encode, decode)
@@ -182,10 +187,10 @@ def _decode(df: DataFrame, col: str, schema: T.StructType, prefix: str = "") -> 
     ``errors.tolerance=all`` (setup.sh:145-147): malformed JSON yields
     nulls instead of failing the query.
     """
-    parsed = df.withColumn(
-        "_envelope",
-        F.from_json(F.col(col).cast("string"), debezium_value_schema(schema), {"mode": "PERMISSIVE"}),
+    envelope = F.from_json(
+        F.col(col).cast("string"), debezium_value_schema(schema), {"mode": "PERMISSIVE"}
     )
+    parsed = df.withColumn("_envelope", envelope)
     fields = [
         _codec(f.dataType).decode(F.col(f"_envelope.payload.{f.name}")).alias(prefix + f.name)
         for f in schema.fields

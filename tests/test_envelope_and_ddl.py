@@ -4,6 +4,8 @@ from __future__ import annotations
 
 import json
 
+import pytest
+from pyspark.errors import PySparkException
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -178,3 +180,9 @@ def test_decimal_uuid_bigint_envelope_roundtrip(spark):
     )
     out = {r.big_id: r.balance for r in parse_envelope(hand_built, schema).collect()}
     assert out == {0: Decimal("-1.23"), 1: Decimal("-0.01"), 2: Decimal("1234.56")}
+    # nine bytes (2**64 + 5) do not fit the 64-bit decoder: it fails, not truncates
+    too_wide = spark.createDataFrame(
+        [(json.dumps({"schema": None, "payload": {"balance": "AQAAAAAAAAAF"}}),)], "value string"
+    )
+    with pytest.raises(PySparkException, match="wider than 64 bits"):
+        parse_envelope(too_wide, schema).collect()
