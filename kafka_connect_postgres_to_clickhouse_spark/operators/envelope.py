@@ -63,9 +63,9 @@ def _codec(dt: T.DataType) -> _Wire:
     unscaled integer, signed and at most 64 bits, so ``Decimal(18,*)``
     columns.  The encoder writes all 8 bytes; the decoder also reads the
     shorter forms Connect writes (``"/4U="`` is -1.23 at scale 2), raises
-    on a wider value and divides exactly, never through a double.  Every other type travels
-    as itself, named by ``_JSON_WIRE_TYPE`` (``"string"`` for the types
-    it does not list).
+    on a wider value and divides exactly, never through a double.  Every
+    other type travels as itself, named by ``_JSON_WIRE_TYPE``
+    (``"string"`` for the types it does not list).
     """
     if isinstance(dt, T.TimestampType):
         return _Wire("int64", MICRO_TS, T.LongType(), F.unix_micros, F.timestamp_micros)
